@@ -59,7 +59,7 @@ STOPWORDS = ("the", "a", "and", "of", "to", "in")
 
 
 def _doc_words(spark, sf_dir):
-    from srag_spark.operators.dedup import spread_input
+    from srag_spark.functions.planning import spread_input
 
     # guide §2.5: the split + downstream explode/chunk work on this
     # shared relation otherwise serializes on the scan's 1-2 file
@@ -297,14 +297,14 @@ def q_q3_bm25_topk(spark, sf_dir):
     form — the oracle still computes the exploded form) and the light
     (doc, dl, hits) relation is persisted for its two consumers; the
     corpus-tokens-sized explode and its groupBy shuffle are gone."""
-    from srag_spark.operators.dedup import _persist
     from srag_spark.operators.retrieval import tokenize_lex
 
     k1, b = 1.2, 0.75
     terms = sorted(set(tokenize_lex(BM25_QUERY)))
     alt = "|".join(terms)
     hit_pat = f"(?<![a-z0-9])({alt})(?![a-z0-9])"
-    docs = _persist(
+    # bench.py's clearCache() between queries releases this persist
+    docs = (
         _t(spark, sf_dir, "documents").select(
             "doc_id",
             F.expr(
@@ -313,8 +313,8 @@ def q_q3_bm25_topk(spark, sf_dir):
             F.expr(
                 f"regexp_extract_all(lower(text), '{hit_pat}', 1)"
             ).alias("_hits"),
-        ),
-        None,
+        )
+        .persist()
     )
     stats = docs.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"), F.avg("dl").alias("avgdl")
@@ -430,13 +430,12 @@ def q_dedup_exact(spark, sf_dir):
     and the join's isnotnull(k) otherwise pushes the whole text split
     into BOTH scans' filters AND projections (4 evaluations, serialized
     on the scan splits)."""
-    from srag_spark.operators.dedup import _persist
-
-    docs = _persist(
+    # bench.py's clearCache() between queries releases this persist
+    docs = (
         _doc_words(spark, sf_dir).select(
             "doc_id", F.array_join(F.slice("words", 1, 5), " ").alias("k")
-        ),
-        None,
+        )
+        .persist()
     )
     canon = docs.groupBy("k").agg(F.min("doc_id").alias("canonical_id"))
     return (
@@ -870,13 +869,13 @@ def _interleaved_src(spark, sf_dir):
     `corpus_pack_interleaved` (which packs it for multimodal training).
     Per doc: half-1 text span, a media anchor, six single-word audio
     spans, half-2 text span; doc_id%97==0 → 4n single-word mega docs."""
-    from srag_spark.operators.dedup import spread_input
+    from srag_spark.functions.planning import spread_input
 
     # r6 (guide §2.5): the span construction + downstream parse/pack
     # explode expands the small doc scan many-fold; spread the scan
     # BEFORE the construction so it does not serialize on 1-2 file
     # splits (no-op at corpus scale)
-    from srag_spark.operators.dedup import no_pushdown
+    from srag_spark.functions.planning import no_pushdown
 
     docs = (
         spread_input(_t(spark, sf_dir, "documents"))
@@ -942,7 +941,7 @@ def _lex_docs(spark, sf_dir):
     array (the _LEX_SQL twin) — every token is [a-z0-9]+ so the words
     can be embedded verbatim inside constructed HTML markup and
     tab-separated PDF run lines without any escaping concern."""
-    from srag_spark.operators.dedup import no_pushdown, spread_input
+    from srag_spark.functions.planning import no_pushdown, spread_input
 
     return (
         spread_input(_t(spark, sf_dir, "documents"))
@@ -4636,21 +4635,17 @@ def q_bloom_probe(spark, sf_dir):
     )
     from srag_spark.operators.dedup import norm_text_col
 
-    from srag_spark.operators.dedup import spread_input
+    from srag_spark.functions.planning import spread_input
 
     # r6 (guide §2.5): the md5(norm_text) key projection feeds three
     # consumers (bloom build, bucket census, probe batch) — spread the
     # scan AND persist the skinny key relation so the regex
     # normalization runs once instead of once per consumer
-    from srag_spark.operators.dedup import _persist
-
     docs = spread_input(_t(spark, sf_dir, "documents")).select("doc_id", "text")
-    keys = _persist(
-        docs.select(
-            "doc_id", F.md5(norm_text_col(F.col("text"))).alias("text_hash")
-        ),
-        None,
-    )
+    # bench.py's clearCache() between queries releases this persist
+    keys = docs.select(
+        "doc_id", F.md5(norm_text_col(F.col("text"))).alias("text_hash")
+    ).persist()
     base = keys.filter(F.col("doc_id") % 3 != 0)
     blooms = bloom_from_index(base, n_buckets=8, n_hash=3, hex_digits=4)
     batch = keys.withColumn("bucket", md5_bucket_col(F.col("text_hash"), 8))

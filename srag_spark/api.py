@@ -46,9 +46,11 @@ from __future__ import annotations
 import json
 import uuid
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from srag_spark.functions.planning import held, persist
 from srag_spark.operators.parse import extract_documents
 from srag_spark.operators.retrieval import listing, retrieve_context
 from srag_spark.operators.transcripts import (
@@ -248,50 +250,48 @@ class SragEngine:
         the table commits land but the engine snapshot is NOT published,
         so readers stay on the previous quadruple.
         """
-        from pyspark import StorageLevel
-
-        # the input batch feeds several subplans (both extraction
-        # branches, the metadata/language joins, audio timing, the
-        # doc-id deletes) — persist it so an expensive source (a JSONL
-        # parse, a remote scan) is read once per ingest
-        docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
-        extracted = extract_documents(
-            docs.select("doc_id", "spans"), doc_counter=doc_counter
-        )
-        # the Python parse kernel is the most expensive stage and its
-        # output feeds transcripts AND chunks AND embeddings — persist it
-        # for the duration of the call so it executes exactly once
-        # (upsert_by_key persists each table's own incoming plan for its
-        # three actions; this covers the stage they all share)
-        extracted = extracted.persist(StorageLevel.MEMORY_AND_DISK)
-        doc_meta = self._doc_meta(docs, metadata)
-        transcripts = build_transcripts(extracted, source_docs=docs)
-        if doc_meta is not None:
-            transcripts = (
-                transcripts.drop("metadata")
-                .join(doc_meta, "doc_id", "left")
-                .withColumn(
-                    "metadata",
-                    F.coalesce(
-                        "metadata", F.create_map().cast("map<string,string>")
-                    ),
+        with held() as ledger:
+            # the input batch feeds several subplans (both extraction
+            # branches, the metadata/language joins, audio timing, the
+            # doc-id deletes) — persist it so an expensive source (a JSONL
+            # parse, a remote scan) is read once per ingest
+            docs = persist(docs, ledger, StorageLevel.MEMORY_AND_DISK)
+            extracted = extract_documents(
+                docs.select("doc_id", "spans"), doc_counter=doc_counter
+            )
+            # the Python parse kernel is the most expensive stage and its
+            # output feeds transcripts AND chunks AND embeddings — persist it
+            # for the duration of the call so it executes exactly once
+            # (upsert_by_key persists each table's own incoming plan for its
+            # three actions; this covers the stage they all share)
+            extracted = persist(extracted, ledger, StorageLevel.MEMORY_AND_DISK)
+            doc_meta = self._doc_meta(docs, metadata)
+            transcripts = build_transcripts(extracted, source_docs=docs)
+            if doc_meta is not None:
+                transcripts = (
+                    transcripts.drop("metadata")
+                    .join(doc_meta, "doc_id", "left")
+                    .withColumn(
+                        "metadata",
+                        F.coalesce(
+                            "metadata", F.create_map().cast("map<string,string>")
+                        ),
+                    )
                 )
+            if "language" in docs.columns:
+                transcripts = (
+                    transcripts.drop("language")
+                    .join(docs.select("doc_id", "language"), "doc_id", "left")
+                )
+            transcripts = validate_language(transcripts).select(
+                *[f.name for f in TRANSCRIPTS_SCHEMA.fields]
             )
-        if "language" in docs.columns:
-            transcripts = (
-                transcripts.drop("language")
-                .join(docs.select("doc_id", "language"), "doc_id", "left")
-            )
-        transcripts = validate_language(transcripts).select(
-            *[f.name for f in TRANSCRIPTS_SCHEMA.fields]
-        )
-        chunks = build_chunks(extracted, doc_meta=doc_meta)
-        # chunks feed their own upsert, the embeddings build, and the
-        # returned count — persist so the chunk UDF runs once
-        chunks = chunks.persist(StorageLevel.MEMORY_AND_DISK)
-        embeddings = build_embeddings(chunks, embed_fn=self.embed_fn)
+            chunks = build_chunks(extracted, doc_meta=doc_meta)
+            # chunks feed their own upsert, the embeddings build, and the
+            # returned count — persist so the chunk UDF runs once
+            chunks = persist(chunks, ledger, StorageLevel.MEMORY_AND_DISK)
+            embeddings = build_embeddings(chunks, embed_fn=self.embed_fn)
 
-        try:
             doc_ids = docs.select("doc_id").distinct()
             # replace-entity: a re-ingested doc drops ALL its previous rows
             # first (delete-then-index), so shrunk docs leave nothing stale
@@ -339,10 +339,6 @@ class SragEngine:
                 "chunks": n_chunks,
                 "embeddings": n_chunks,
             }
-        finally:
-            chunks.unpersist(blocking=False)
-            docs.unpersist(blocking=False)
-            extracted.unpersist(blocking=False)
 
     # -- write–audit–publish ingest (Iceberg WAP at engine scope) ----------
     # The engine manifest is already the atomic visibility point, so a
@@ -658,14 +654,14 @@ class SragEngine:
         cond = F.expr(condition) if isinstance(condition, str) else condition
         if not table_exists(self.spark, self.transcripts_path):
             return 0
-        keys = (
-            read_table(self.spark, self.transcripts_path)
-            .filter(F.coalesce(cond, F.lit(False)))
-            .select("doc_id")
-            .distinct()
-            .persist()
-        )
-        try:
+        with held() as ledger:
+            keys = persist(
+                read_table(self.spark, self.transcripts_path)
+                .filter(F.coalesce(cond, F.lit(False)))
+                .select("doc_id")
+                .distinct(),
+                ledger,
+            )
             n = keys.count()
             if n == 0:
                 return 0
@@ -674,8 +670,6 @@ class SragEngine:
                     delete_by_key(self.spark, path, keys, ["doc_id"])
             self._publish_engine_snapshot()
             return n
-        finally:
-            keys.unpersist(blocking=False)
 
     # -- maintenance -------------------------------------------------------
     def describe(self, version: int | None = None) -> DataFrame:

@@ -62,6 +62,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from srag_spark.functions.planning import spread_input
+
 END_OF_WORD = "</w>"
 
 
@@ -216,8 +218,6 @@ def apply_bpe(
             return out
 
         return words.map(enc)
-
-    from srag_spark.operators.dedup import spread_input
 
     # guide §2.5: the Python encoder's parallelism is the scan's
     # partition count; spread an under-partitioned input (no-op at scale)

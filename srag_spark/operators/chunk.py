@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
+from srag_spark.functions.planning import spread_input
 from srag_spark.golden import recursive_chunk, word_group_chunks
 
 
@@ -89,8 +90,6 @@ def chunk_documents(
     The input is spread first (guide §2.5): the Python chunker's
     parallelism is the scan's partition count, and a small single-file
     doc table would otherwise run it on 1-2 workers (no-op at scale)."""
-    from srag_spark.operators.dedup import spread_input
-
     udf = _make_chunk_udf(max_chars, overlap)
     return _explode_chunks(spread_input(docs_text), udf(F.col("text")))
 
@@ -98,7 +97,5 @@ def chunk_documents(
 def word_group_chunk_documents(docs_text: DataFrame, chunk_size: int = 1000) -> DataFrame:
     """P8 fallback chunker: 1000-word groups (QueryService.scala:28-33,272).
     Input spread like :func:`chunk_documents`."""
-    from srag_spark.operators.dedup import spread_input
-
     udf = _make_word_group_udf(chunk_size)
     return _explode_chunks(spread_input(docs_text), udf(F.col("text")))

@@ -33,6 +33,8 @@ import json
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from srag_spark.functions.planning import bind_col, owns_ledger, persist, spread_input
+
 _HEX_SPACE = 16 ** 8
 
 
@@ -56,6 +58,7 @@ def token_count_col(text_col) -> "F.Column":
     return F.size(F.array_remove(F.split(text_col, r"\s+"), ""))
 
 
+@owns_ledger
 def pack_sequences(
     docs: DataFrame,
     budget: int,
@@ -86,14 +89,14 @@ def pack_sequences(
     of the partition boundaries (the cumsum is defined by the global
     order alone), so any partition count gives identical output.
 
-    Persist lifecycle (same contract as operators/dedup.py): the
+    Persist lifecycle (the functions.planning ``persisted=`` contract): the
     range-partitioned token table feeds both the totals collect and the
     output plan, so it is persisted.  With ``persisted=None`` (the
     interactive default) the result is materialized eagerly and the
     parent released before returning — do NOT use that at corpus scale
     (it pins every output row executor-side).  At scale pass
     ``persisted=[]``, consume the returned LAZY frame, then
-    ``dedup.release(persisted)``.
+    ``planning.release(persisted)``.
     """
     spark = docs.sparkSession
     P = n_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -103,7 +106,6 @@ def pack_sequences(
     cnt = (
         F.col(count_col) if count_col else token_count_col(F.col(text_col))
     )
-    from srag_spark.operators.dedup import spread_input
 
     # guide §2.5: the token counting below runs twice over the input
     # (range-boundary sampling + the shuffle's map pass) — spread an
@@ -118,74 +120,64 @@ def pack_sequences(
     # global cumsum.  Persist: the partition totals AND the main plan
     # both consume this frame, and the sampled range boundaries must be
     # the same in both executions.
-    ordered = (
+    ordered = persist(
         toks.repartitionByRange(P, "doc_id")
         .sortWithinPartitions("doc_id")
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
+        .withColumn("_pid", F.spark_partition_id()),
+        persisted,
     )
-    if persisted is not None:
-        persisted.append(ordered)
-    try:
-        totals = {
-            r["_pid"]: r["t"]
-            for r in ordered.groupBy("_pid").agg(F.sum("n_tokens").alias("t")).collect()
-        }
-        offsets: dict[int, int] = {}
-        acc = 0
-        for pid in sorted(totals):
-            offsets[pid] = acc
-            acc += totals[pid]
-        if offsets:
-            off_map = F.create_map(
-                *[F.lit(x) for pid in sorted(offsets) for x in (pid, offsets[pid])]
+    totals = {
+        r["_pid"]: r["t"]
+        for r in ordered.groupBy("_pid").agg(F.sum("n_tokens").alias("t")).collect()
+    }
+    offsets: dict[int, int] = {}
+    acc = 0
+    for pid in sorted(totals):
+        offsets[pid] = acc
+        acc += totals[pid]
+    if offsets:
+        off_map = F.create_map(
+            *[F.lit(x) for pid in sorted(offsets) for x in (pid, offsets[pid])]
+        )
+    else:
+        # empty input: an argless create_map() is map<void,void> and
+        # cannot be indexed by the int partition id — give it the
+        # real type (no rows will look anything up)
+        off_map = F.create_map().cast("map<int,bigint>")
+    w = (
+        Window.partitionBy("_pid")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    cum = ordered.select(
+        "doc_id",
+        "n_tokens",
+        (off_map[F.col("_pid")] + F.sum("n_tokens").over(w)).alias("cum_end"),
+    ).withColumn("cum_start", F.col("cum_end") - F.col("n_tokens"))
+    b = F.lit(int(budget)).cast("long")
+    return cum.select(
+        "doc_id",
+        "n_tokens",
+        "cum_start",
+        "cum_end",
+        F.explode(
+            F.sequence(
+                F.expr(f"cum_start div {int(budget)}"),
+                F.expr(f"(cum_end - 1) div {int(budget)}"),
             )
-        else:
-            # empty input: an argless create_map() is map<void,void> and
-            # cannot be indexed by the int partition id — give it the
-            # real type (no rows will look anything up)
-            off_map = F.create_map().cast("map<int,bigint>")
-        w = (
-            Window.partitionBy("_pid")
-            .orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        cum = ordered.select(
-            "doc_id",
-            "n_tokens",
-            (off_map[F.col("_pid")] + F.sum("n_tokens").over(w)).alias("cum_end"),
-        ).withColumn("cum_start", F.col("cum_end") - F.col("n_tokens"))
-        b = F.lit(int(budget)).cast("long")
-        packed = cum.select(
-            "doc_id",
-            "n_tokens",
-            "cum_start",
-            "cum_end",
-            F.explode(
-                F.sequence(
-                    F.expr(f"cum_start div {int(budget)}"),
-                    F.expr(f"(cum_end - 1) div {int(budget)}"),
-                )
-            ).alias("pack_id"),
-        ).select(
-            "doc_id",
-            "n_tokens",
-            "pack_id",
-            (F.greatest("cum_start", F.col("pack_id") * b) - F.col("pack_id") * b)
-            .alias("pack_start"),
-            (F.least("cum_end", (F.col("pack_id") + 1) * b) - F.col("pack_id") * b)
-            .alias("pack_end"),
-        )
-        if persisted is not None:
-            return packed  # lazy; caller releases via dedup.release()
-        # interactive mode: materialize before releasing the parent —
-        # the rows are tiny (5 numbers/doc-window) at test/driver scale
-        return packed.localCheckpoint(eager=True)
-    finally:
-        if persisted is None:
-            ordered.unpersist(blocking=False)
+        ).alias("pack_id"),
+    ).select(
+        "doc_id",
+        "n_tokens",
+        "pack_id",
+        (F.greatest("cum_start", F.col("pack_id") * b) - F.col("pack_id") * b)
+        .alias("pack_start"),
+        (F.least("cum_end", (F.col("pack_id") + 1) * b) - F.col("pack_id") * b)
+        .alias("pack_end"),
+    )
 
 
+@owns_ledger
 def materialize_packs(
     docs: DataFrame,
     budget: int,
@@ -235,86 +227,76 @@ def materialize_packs(
     tokens).  The per-doc window start offsets are a cumsum over that
     doc's OWN window rows (a handful per doc), never over the corpus.
 
-    Persist lifecycle (the :mod:`operators.dedup` contract): the token
+    Persist lifecycle (the :mod:`functions.planning` contract): the token
     frame feeds both the count pass and the join-back, so it is
     persisted (re-running an upstream tokenizer UDF twice would double
     the dominant cost).  ``persisted=None`` materializes the result
     eagerly and releases parents before returning — test/driver scale
     only; at corpus scale pass ``persisted=[]``, consume the lazy
-    frame, then ``dedup.release(persisted)``.
+    frame, then ``planning.release(persisted)``.
     """
     toks = docs.select(
         F.col(id_col).alias("doc_id"), F.col(tokens_col).alias("_toks")
     ).withColumn("_n", F.size("_toks").cast("long"))
-    toks = toks.persist()
-    if persisted is not None:
-        persisted.append(toks)
-    try:
-        packed = pack_sequences(
-            toks,
-            budget,
-            id_col="doc_id",
-            count_col="_n",
-            n_partitions=n_partitions,
-            persisted=persisted,
+    toks = persist(toks, persisted)
+    packed = pack_sequences(
+        toks,
+        budget,
+        id_col="doc_id",
+        count_col="_n",
+        n_partitions=n_partitions,
+        persisted=persisted,
+    )
+    w = (
+        Window.partitionBy("doc_id")
+        .orderBy("pack_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    spans = packed.withColumn(
+        "_len", F.col("pack_end") - F.col("pack_start")
+    ).withColumn(
+        "_ds",
+        F.coalesce(F.sum("_len").over(w), F.lit(0).cast("long")),
+    )
+    sliced = spans.join(toks.select("doc_id", "_toks"), "doc_id").select(
+        "doc_id",
+        "pack_id",
+        "pack_start",
+        F.slice(
+            "_toks",
+            (F.col("_ds") + 1).cast("int"),
+            F.col("_len").cast("int"),
+        ).alias("_slice"),
+    )
+    cols = ["pack_id", F.flatten(
+        F.transform("_p", lambda s: s["_slice"])
+    ).alias("tokens")]
+    if with_spans:
+        cols.append(
+            F.transform(
+                "_p",
+                lambda s: F.struct(
+                    s["doc_id"].alias("doc_id"),
+                    s["pack_start"].alias("start"),
+                    (s["pack_start"] + F.size(s["_slice"]))
+                    .cast("long")
+                    .alias("end"),
+                ),
+            ).alias("doc_spans")
         )
-        w = (
-            Window.partitionBy("doc_id")
-            .orderBy("pack_id")
-            .rowsBetween(Window.unboundedPreceding, -1)
+    return (
+        sliced.groupBy("pack_id")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct("pack_start", "doc_id", "_slice"))
+            ).alias("_p")
         )
-        spans = packed.withColumn(
-            "_len", F.col("pack_end") - F.col("pack_start")
-        ).withColumn(
-            "_ds",
-            F.coalesce(F.sum("_len").over(w), F.lit(0).cast("long")),
-        )
-        sliced = spans.join(toks.select("doc_id", "_toks"), "doc_id").select(
-            "doc_id",
-            "pack_id",
-            "pack_start",
-            F.slice(
-                "_toks",
-                (F.col("_ds") + 1).cast("int"),
-                F.col("_len").cast("int"),
-            ).alias("_slice"),
-        )
-        cols = ["pack_id", F.flatten(
-            F.transform("_p", lambda s: s["_slice"])
-        ).alias("tokens")]
-        if with_spans:
-            cols.append(
-                F.transform(
-                    "_p",
-                    lambda s: F.struct(
-                        s["doc_id"].alias("doc_id"),
-                        s["pack_start"].alias("start"),
-                        (s["pack_start"] + F.size(s["_slice"]))
-                        .cast("long")
-                        .alias("end"),
-                    ),
-                ).alias("doc_spans")
-            )
-        out = (
-            sliced.groupBy("pack_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("pack_start", "doc_id", "_slice"))
-                ).alias("_p")
-            )
-            .select(*cols)
-            .withColumn("n_tokens", F.size("tokens").cast("long"))
-        )
-        if persisted is not None:
-            return out  # lazy; caller releases via dedup.release()
-        out = out.persist()
-        out.count()
-        return out
-    finally:
-        if persisted is None:
-            toks.unpersist(blocking=False)
+        .select(*cols)
+        .withColumn("n_tokens", F.size("tokens").cast("long"))
+    )
 
 
+@owns_ledger
 def pack_interleaved(
     docs: DataFrame,
     budget: int,
@@ -370,7 +352,6 @@ def pack_interleaved(
         )
     else:
         media_cost = F.lit(int(default_media_cost))
-    from srag_spark.operators.dedup import spread_input
 
     # guide §2.5: same double-pass consideration as pack_sequences
     flat = spread_input(docs).select(
@@ -393,78 +374,69 @@ def pack_interleaved(
         .cast("long")
         .alias("n_tokens"),
     ).filter(F.col("n_tokens") > 0)
-    ordered = (
+    ordered = persist(
         costed.repartitionByRange(P, "doc_id", "span_index")
         .sortWithinPartitions("doc_id", "span_index")
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
+        .withColumn("_pid", F.spark_partition_id()),
+        persisted,
     )
-    if persisted is not None:
-        persisted.append(ordered)
-    try:
-        totals = {
-            r["_pid"]: r["t"]
-            for r in ordered.groupBy("_pid")
-            .agg(F.sum("n_tokens").alias("t"))
-            .collect()
-        }
-        offsets: dict[int, int] = {}
-        acc = 0
-        for pid in sorted(totals):
-            offsets[pid] = acc
-            acc += totals[pid]
-        if offsets:
-            off_map = F.create_map(
-                *[F.lit(x) for pid in sorted(offsets) for x in (pid, offsets[pid])]
+    totals = {
+        r["_pid"]: r["t"]
+        for r in ordered.groupBy("_pid")
+        .agg(F.sum("n_tokens").alias("t"))
+        .collect()
+    }
+    offsets: dict[int, int] = {}
+    acc = 0
+    for pid in sorted(totals):
+        offsets[pid] = acc
+        acc += totals[pid]
+    if offsets:
+        off_map = F.create_map(
+            *[F.lit(x) for pid in sorted(offsets) for x in (pid, offsets[pid])]
+        )
+    else:
+        off_map = F.create_map().cast("map<int,bigint>")
+    w = (
+        Window.partitionBy("_pid")
+        .orderBy("doc_id", "span_index")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    cum = ordered.select(
+        "doc_id",
+        "span_index",
+        "kind",
+        "media_ref",
+        "n_tokens",
+        (off_map[F.col("_pid")] + F.sum("n_tokens").over(w)).alias("cum_end"),
+    ).withColumn("cum_start", F.col("cum_end") - F.col("n_tokens"))
+    b = F.lit(int(budget)).cast("long")
+    return cum.select(
+        "doc_id",
+        "span_index",
+        "kind",
+        "media_ref",
+        "n_tokens",
+        F.explode(
+            F.sequence(
+                F.expr(f"cum_start div {int(budget)}"),
+                F.expr(f"(cum_end - 1) div {int(budget)}"),
             )
-        else:
-            off_map = F.create_map().cast("map<int,bigint>")
-        w = (
-            Window.partitionBy("_pid")
-            .orderBy("doc_id", "span_index")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        cum = ordered.select(
-            "doc_id",
-            "span_index",
-            "kind",
-            "media_ref",
-            "n_tokens",
-            (off_map[F.col("_pid")] + F.sum("n_tokens").over(w)).alias("cum_end"),
-        ).withColumn("cum_start", F.col("cum_end") - F.col("n_tokens"))
-        b = F.lit(int(budget)).cast("long")
-        packed = cum.select(
-            "doc_id",
-            "span_index",
-            "kind",
-            "media_ref",
-            "n_tokens",
-            F.explode(
-                F.sequence(
-                    F.expr(f"cum_start div {int(budget)}"),
-                    F.expr(f"(cum_end - 1) div {int(budget)}"),
-                )
-            ).alias("pack_id"),
-            "cum_start",
-            "cum_end",
-        ).select(
-            "doc_id",
-            "span_index",
-            "kind",
-            "media_ref",
-            "n_tokens",
-            "pack_id",
-            (F.greatest("cum_start", F.col("pack_id") * b) - F.col("pack_id") * b)
-            .alias("pack_start"),
-            (F.least("cum_end", (F.col("pack_id") + 1) * b) - F.col("pack_id") * b)
-            .alias("pack_end"),
-        )
-        if persisted is not None:
-            return packed  # lazy; caller releases via dedup.release()
-        return packed.localCheckpoint(eager=True)
-    finally:
-        if persisted is None:
-            ordered.unpersist(blocking=False)
+        ).alias("pack_id"),
+        "cum_start",
+        "cum_end",
+    ).select(
+        "doc_id",
+        "span_index",
+        "kind",
+        "media_ref",
+        "n_tokens",
+        "pack_id",
+        (F.greatest("cum_start", F.col("pack_id") * b) - F.col("pack_id") * b)
+        .alias("pack_start"),
+        (F.least("cum_end", (F.col("pack_id") + 1) * b) - F.col("pack_id") * b)
+        .alias("pack_end"),
+    )
 
 
 def pack_media_manifest(packed: DataFrame) -> DataFrame:
@@ -496,8 +468,6 @@ def ngram_hash_col(text_col, n: int) -> "F.Column":
     The token array is let-bound (``dedup.bind_col``) so the split runs
     once per row, not once per window (r6 — the un-bound form
     re-tokenized the whole document per window)."""
-    from srag_spark.operators.dedup import bind_col
-
     def _build(toks):
         return F.when(
             F.size(toks) >= n,
@@ -550,8 +520,6 @@ def find_contamination(
     contaminated corpus makes it large).  Nothing quadratic, nothing
     driver-side.
     """
-    from srag_spark.operators.dedup import spread_input
-
     eval_hashes = (
         eval_docs.select(
             F.explode(ngram_hash_col(F.col(text_col), n)).alias("_h")
@@ -709,6 +677,7 @@ def sample_weighted(
     )
 
 
+@owns_ledger
 def sample_stratified(
     docs: DataFrame,
     k: int,
@@ -785,14 +754,16 @@ def sample_stratified(
             .drop("_hk")
         )
 
-    ranked = _rank(
-        docs.withColumn("_hk", h_full).filter(
-            F.substring(F.col("_hk"), 1, 8) < thr
-        )
-    ).persist()  # bounded: ≤ k rows per group; read by the deficiency
-    # check and again by the caller's action — register for release
-    if persisted is not None:
-        persisted.append(ranked)
+    # bounded: ≤ k rows per group; read by the deficiency check and
+    # again by the caller's action
+    ranked = persist(
+        _rank(
+            docs.withColumn("_hk", h_full).filter(
+                F.substring(F.col("_hk"), 1, 8) < thr
+            )
+        ),
+        persisted,
+    )
     got = {
         r["_g"]: r["_n"]
         for r in ranked.groupBy(F.col(group_col).alias("_g"))

@@ -26,28 +26,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from srag_spark.functions.planning import (
+    bind_col,
+    held,
+    owns_ledger,
+    persist,
+    release,  # noqa: F401 — re-exported: perfbench/workloads.py imports it from here
+    spread_input,
+)
 
-# ---------------------------------------------------------------------------
-# persist lifecycle: operators that materialize multi-consumer
-# intermediates register them in the caller-supplied ``persisted`` list so
-# the cache can be RELEASED after the consuming action — without a handle,
-# repeated operator calls would accumulate cached relations for the
-# SparkSession lifetime (ADVICE r2).  Spark's LRU still evicts under
-# memory pressure, so an un-released handle degrades, never breaks.
-# ---------------------------------------------------------------------------
-def _persist(df: DataFrame, persisted: list | None) -> DataFrame:
-    out = df.persist()
-    if persisted is not None:
-        persisted.append(out)
-    return out
-
-
-def release(persisted: list) -> None:
-    """Unpersist every DataFrame an operator registered via its
-    ``persisted=`` parameter; call after the consuming action."""
-    for df in persisted:
-        df.unpersist()
-    persisted.clear()
 
 # ---------------------------------------------------------------------------
 # shared text normalization (frozen; mirrors oracle SQL in __spark_entry__)
@@ -61,24 +48,6 @@ def norm_text_col(c) -> "F.Column":
 
 def words_col(c) -> "F.Column":
     return F.array_remove(F.split(norm_text_col(c), " "), "")
-
-
-def bind_col(bound, build) -> "F.Column":
-    """Let-binding for column expressions: evaluate ``bound`` ONCE per
-    row and pass it to ``build`` as a lambda variable.
-
-    The r6 profiling surprise behind this helper (guide §1/§7.2): a
-    higher-order lambda that references a NON-attribute expression —
-    e.g. n-gram builders slicing ``words_col(text)`` per position —
-    re-evaluates that expression for EVERY element, because lambda
-    bodies are evaluated per element and only lambda variables are
-    bound.  ``ngram_topk``'s gram build dropped 33.7 s → 2.1 s at sf1
-    from this one change (each 3-gram was re-running the regex
-    normalization + split of the whole document).  Wrapping the value
-    in a 1-element array and transforming it makes it a bona fide
-    lambda variable, evaluated once; ``element_at`` unwraps the result.
-    Values are unchanged — this is pure evaluation-count hygiene."""
-    return F.element_at(F.transform(F.array(bound), build), 1)
 
 
 def shingles_col(c, n: int = 3) -> "F.Column":
@@ -103,88 +72,6 @@ def shingles_col(c, n: int = 3) -> "F.Column":
         )
 
     return bind_col(words_col(c), _build)
-
-
-def no_pushdown(cond) -> "F.Column":
-    """Block filter pushdown for an EXPENSIVE predicate by wrapping it
-    in a single non-deterministic CASE — the native-expression analogue
-    of guide §4.4's ``asNondeterministic`` device.
-
-    Why: Catalyst pushes deterministic filters through exchanges
-    (including an explicit :func:`spread_input` repartition) down to the
-    scan, so a predicate built from heavy text expressions re-serializes
-    onto the scan's 1-2 tasks no matter how the plan above is spread.
-
-    The shape matters (r6, measured): the earlier ``cond & nondet``
-    conjunction did NOT work — PushDownPredicates splits a conjunction
-    and pushes the deterministic conjuncts anyway, leaving only the
-    guard above the exchange (the sfx10 plan showed the full gate
-    predicate duplicated into every union branch's serialized scan
-    filter AND re-evaluated in the project above: 5.3 s vs 0.6 s for
-    the same columns unfiltered).  ``CASE WHEN nondet THEN cond END``
-    is one non-splittable, non-deterministic predicate: it cannot be
-    split into conjuncts, cannot be pushed through the exchange, and —
-    equally important — cannot be substituted through the projection
-    that computes ``cond``'s input columns, so the expensive
-    expressions evaluate ONCE, in the projection.
-
-    The guard is ``spark_partition_id() >= 0`` — always true, free to
-    evaluate, formally non-deterministic (partition-dependent), and
-    crucially SEEDLESS: a ``rand()`` guard draws a fresh seed per plan
-    construction, so two invocations of the same query build different
-    plans and Spark's CacheManager plan-matching no longer recognizes
-    persisted intermediates (measured: it turned the bench's warmed
-    curation cache into a per-run recompute).  Results are unchanged
-    (the CASE yields ``cond`` exactly; a NULL ``cond`` filters out
-    either way)."""
-    return F.when(F.spark_partition_id() >= F.lit(0), cond)
-
-
-def nondet_col(col) -> "F.Column":
-    """Pin an EXPENSIVE projected expression so it evaluates exactly
-    once: wrap it in the same vacuously-true non-deterministic CASE as
-    :func:`no_pushdown`.  A filter that references the wrapped alias
-    can then not be substituted through the projection (Catalyst pushes
-    even non-deterministic predicates through deterministic projects by
-    alias substitution — measured on the curation gate: the full marker
-    scan evaluated once in the pushed filter and AGAIN in the project),
-    and CollapseProject will not merge an outer field-unpacking project
-    into it (that would duplicate a non-deterministic expression).
-    Values are unchanged — the guard is always true and seedless, so
-    plan equality (CacheManager matching) is preserved."""
-    return F.when(F.spark_partition_id() >= F.lit(0), col)
-
-
-_SPREAD_COMPLEX_NODES = ("Join", "Aggregate", "Window", "Sort", "Repartition")
-
-
-def spread_input(df: DataFrame, min_parts: int | None = None) -> DataFrame:
-    """Round-robin repartition an under-partitioned input up to the
-    session's shuffle parallelism — the guide §2.5 "input skew: fix at
-    the source or repartition immediately after the read" device for
-    token-explode-heavy operators whose input is a small, few-split
-    file (a compressed document table expands 10-50× into token work,
-    so a 1-split scan serializes the whole operator).  A NO-OP whenever
-    the scan already has ≥ the target partitions — at corpus scale the
-    input has thousands of splits and nothing is shuffled.
-
-    Applies ONLY to scan-shaped inputs (projections/filters/unions over
-    sources): the partition-count probe goes through ``df.rdd``, and
-    under AQE that materializes the final plan by EXECUTING every
-    upstream shuffle stage — on a composed input (joins, aggregations)
-    the probe itself would run the pipeline once before the real job
-    (measured: it re-ran an entire curation subtree).  Composed inputs
-    have shuffle-sized partitioning already and are returned as-is."""
-    spark = df.sparkSession
-    P = min_parts or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    try:
-        tree = df._jdf.queryExecution().analyzed().treeString()
-        if any(node in tree for node in _SPREAD_COMPLEX_NODES):
-            return df
-        n = df.rdd.getNumPartitions()
-    except Exception:  # noqa: BLE001 — planning-only probe; never fatal
-        return df
-    return df.repartition(P) if n < P else df
 
 
 # ---------------------------------------------------------------------------
@@ -279,6 +166,7 @@ def lsh_candidate_pairs(
     )
 
 
+@owns_ledger
 def minhash_dedup_pairs(
     docs: DataFrame,
     n_hashes: int = 16,
@@ -297,10 +185,10 @@ def minhash_dedup_pairs(
     explode and both join-back sides), and without persistence Spark
     re-executes the full shingle→md5 aggregation per consumer — the
     dominant cost ×3.  Pass False to keep the plan fully lazy; pass a
-    ``persisted`` list to :func:`release` the cache after consumption."""
+    ``persisted`` list to ``planning.release`` the cache after consumption."""
     sigs = minhash_signatures(docs, n_hashes, shingle_n, text_col, id_col)
     if materialize:
-        sigs = _persist(sigs, persisted)
+        sigs = persist(sigs, persisted)
     pairs = lsh_candidate_pairs(sigs, bands, n_hashes // bands)
     sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
@@ -361,6 +249,7 @@ def simhash_hamming(col_a, col_b) -> "F.Column":
     )
 
 
+@owns_ledger
 def simhash_near_pairs(
     sigs: DataFrame, max_hamming: int = 3, bands: int = 4,
     materialize: bool = True,
@@ -373,7 +262,7 @@ def simhash_near_pairs(
     ``materialize`` persists the signature input once — both the band
     groups and any caller re-reads otherwise re-execute whatever plan
     produced it (for simhash_signatures: the token explode + 32-sum
-    aggregation); pass a ``persisted`` list to :func:`release` the
+    aggregation); pass a ``persisted`` list to ``planning.release`` the
     cache after consumption.
 
     r6 restructure (guide §4.2/§8, same device as
@@ -392,7 +281,7 @@ def simhash_near_pairs(
     import pandas as pd  # noqa: PLC0415
 
     if materialize:
-        sigs = _persist(sigs, persisted)
+        sigs = persist(sigs, persisted)
     width = 32 // bands
     banded = sigs.select(
         "doc_id",
@@ -435,6 +324,7 @@ def simhash_near_pairs(
             h = pop16[x & np.uint32(0xFFFF)] + pop16[x >> np.uint32(16)]
             rows, cols = np.nonzero(h <= mh)
             keep = rows + lo < cols  # strict upper triangle: doc_a < doc_b
+            keep &= ids[rows + lo] != ids[cols]  # a repeated doc_id is no pair
             rows, cols = rows[keep], cols[keep]
             out_a.append(ids[rows + lo])
             out_b.append(ids[cols])
@@ -458,6 +348,7 @@ def simhash_near_pairs(
 # ---------------------------------------------------------------------------
 # n-gram Jaccard (inverted-index self-join)
 # ---------------------------------------------------------------------------
+@owns_ledger
 def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 3,
@@ -476,7 +367,7 @@ def ngram_jaccard_pairs(
     ``materialize`` persists the (capped) inverted index once: four
     consumers reference it (the df-cap aggregate, per-doc sizes, and
     both self-join sides), each otherwise re-running the shingle explode
-    (+ cap join); pass a ``persisted`` list to :func:`release` the caches
+    (+ cap join); pass a ``persisted`` list to ``planning.release`` the caches
     after consumption.  At extreme corpus sizes prefer writing the index
     to a table between stages instead of caching it (MEMORY_AND_DISK
     spill)."""
@@ -486,7 +377,7 @@ def ngram_jaccard_pairs(
     )
     if max_shingle_df:
         if materialize:
-            sh = _persist(sh, persisted)
+            sh = persist(sh, persisted)
         rare = (
             sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("df"))
@@ -495,7 +386,7 @@ def ngram_jaccard_pairs(
         )
         sh = sh.join(rare, "shingle")
     if materialize:
-        sh = _persist(sh, persisted)
+        sh = persist(sh, persisted)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -646,55 +537,55 @@ def cluster_canonical(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     def _lbl_t(lbls):
         return lbls.schema["label"].dataType.simpleString()
 
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+    with held() as ledger:
+        edges = persist(
+            pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+            .unionByName(
+                pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+            )
+            .distinct(),
+            ledger,
         )
-        .distinct()
-        .persist()
-    )
-    labels = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .localCheckpoint(eager=True)
-    )
-    for it in range(max_iters):
-        nbr = edges.join(
-            labels.withColumnRenamed("doc_id", "src"), "src"
-        ).select(F.col("dst").alias("doc_id"), "label")
-        if it == 0:
-            # pointer jumping is an identity in the first round (every
-            # label IS its own doc_id, so label-of-label = label) — skip
-            # the self-join, one less shuffle on round 1 (r6)
-            hop = labels.limit(0)
-        else:
-            hop = labels.join(
-                labels.select(
-                    F.col("doc_id").alias("label"), F.col("label").alias("jumped")
-                ),
-                "label",
-            ).select("doc_id", F.col("jumped").alias("label"))
-        # the node's previous label rides the union as ``_old`` (non-null
-        # only on the labels branch; every doc_id appears there exactly
-        # once, so max() recovers it), which folds the convergence check
-        # into the SAME groupBy shuffle + checkpoint — the former
-        # separate new⋈labels changed-count join cost one extra shuffle
-        # and one extra join job per round (guide §2.4)
-        new = (
-            labels.withColumn("_old", F.col("label"))
-            .unionByName(nbr.withColumn("_old", F.lit(None).cast(_lbl_t(labels))))
-            .unionByName(hop.withColumn("_old", F.lit(None).cast(_lbl_t(labels))))
-            .groupBy("doc_id")
-            .agg(F.min("label").alias("label"), F.max("_old").alias("_old"))
+        labels = (
+            edges.select(F.col("src").alias("doc_id"))
+            .distinct()
+            .withColumn("label", F.col("doc_id"))
             .localCheckpoint(eager=True)
         )
-        changed = new.filter(~F.col("label").eqNullSafe(F.col("_old"))).count()
-        labels = new.select("doc_id", "label")
-        if changed == 0:
-            break
-    edges.unpersist()
+        for it in range(max_iters):
+            nbr = edges.join(
+                labels.withColumnRenamed("doc_id", "src"), "src"
+            ).select(F.col("dst").alias("doc_id"), "label")
+            if it == 0:
+                # pointer jumping is an identity in the first round (every
+                # label IS its own doc_id, so label-of-label = label) — skip
+                # the self-join, one less shuffle on round 1 (r6)
+                hop = labels.limit(0)
+            else:
+                hop = labels.join(
+                    labels.select(
+                        F.col("doc_id").alias("label"), F.col("label").alias("jumped")
+                    ),
+                    "label",
+                ).select("doc_id", F.col("jumped").alias("label"))
+            # the node's previous label rides the union as ``_old`` (non-null
+            # only on the labels branch; every doc_id appears there exactly
+            # once, so max() recovers it), which folds the convergence check
+            # into the SAME groupBy shuffle + checkpoint — the former
+            # separate new⋈labels changed-count join cost one extra shuffle
+            # and one extra join job per round (guide §2.4)
+            new = (
+                labels.withColumn("_old", F.col("label"))
+                .unionByName(nbr.withColumn("_old", F.lit(None).cast(_lbl_t(labels))))
+                .unionByName(hop.withColumn("_old", F.lit(None).cast(_lbl_t(labels))))
+                .groupBy("doc_id")
+                .agg(F.min("label").alias("label"), F.max("_old").alias("_old"))
+                .localCheckpoint(eager=True)
+            )
+            changed = new.filter(~F.col("label").eqNullSafe(F.col("_old"))).count()
+            labels = new.select("doc_id", "label")
+            if changed == 0:
+                break
     return labels.withColumnRenamed("label", "canonical_id")
 
 
@@ -946,6 +837,7 @@ def _bands_from_sig(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFram
     )
 
 
+@owns_ledger
 def incremental_dedup(
     new_docs: DataFrame,
     index: DataFrame,
@@ -1009,9 +901,9 @@ def incremental_dedup(
     only the hit buckets — zero base I/O for an all-new batch.  The
     band (near-dup) path still scans ``index``."""
     new_idx = build_dedup_index(new_docs, n_hashes, shingle_n, text_col, id_col)
-    new_idx = _persist(new_idx, persisted)
+    new_idx = persist(new_idx, persisted)
     if persist_index:
-        index = _persist(index, persisted)
+        index = persist(index, persisted)
     if max_band_df is not None:
         # skew guard (the ngram_jaccard df-cap, at band granularity): a
         # degenerate band value carried by millions of base docs (short
@@ -1116,6 +1008,7 @@ def incremental_dedup(
 # ---------------------------------------------------------------------------
 # SemDeDup — semantic dedup over embedding clusters (Abbas et al. 2023)
 # ---------------------------------------------------------------------------
+@owns_ledger
 def semdedup_flags(
     emb: DataFrame,
     threshold: float = 0.9,
@@ -1161,7 +1054,7 @@ def semdedup_flags(
     clusters for LAION) to keep cells small and bounded; hot cells are
     AQE-skew-splittable since the join key is the cell id.  The ranked
     relation feeds both join sides plus the output, so it is persisted
-    (register a ``persisted=[]`` list and ``release()`` after the
+    (register a ``persisted=[]`` list and ``planning.release`` it after the
     action)."""
     from srag_spark.operators.similarity import ivf_assign_struct, make_centroids
 
@@ -1186,7 +1079,7 @@ def semdedup_flags(
         F.round(F.col("_a.csim"), 6).alias("csim_r"),
     )
     rank_w = Window.partitionBy("cell").orderBy(F.desc("csim_r"), F.asc("id"))
-    ranked = _persist(
+    ranked = persist(
         assigned.select("id", "v", "cell", "csim_r", F.row_number().over(rank_w).alias("rk")),
         persisted,
     )

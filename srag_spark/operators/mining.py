@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from srag_spark.functions.planning import spread_input
 from srag_spark.operators.dedup import (
     dot_col,
     minhash_dedup_pairs,
@@ -74,7 +75,6 @@ def ict_pairs(
         raise ValueError("query_words must be >= 1")
     if min_words < 2 * query_words:
         raise ValueError("min_words must be >= 2 * query_words")
-    from srag_spark.operators.dedup import spread_input
 
     docs = spread_input(docs)  # guide §2.5; no-op at scale
     base = (

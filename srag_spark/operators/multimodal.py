@@ -38,6 +38,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from srag_spark.functions.planning import spread_input
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_ref", StringType(), False),
@@ -117,8 +119,6 @@ def decode_media(media: DataFrame) -> DataFrame:
     the reference's per-job failure isolation, J6).  The input is spread
     first (guide §2.5): the Python decode's parallelism is the scan's
     partition count (no-op at scale)."""
-    from srag_spark.operators.dedup import spread_input
-
     media = spread_input(media)
 
     def run(batches: Iterator) -> Iterator:
@@ -199,8 +199,6 @@ def extract_features(media: DataFrame) -> DataFrame:
     §2.5, same as :func:`decode_media`): the per-row Python encoder's
     parallelism is otherwise the scan's 1-2 partitions (measured 3.0 s
     → 1.3 s at sfx10; no-op at scale)."""
-    from srag_spark.operators.dedup import spread_input
-
     media = spread_input(media)
 
     def run(batches: Iterator) -> Iterator:

@@ -28,9 +28,11 @@ machinery* around it, which is what must be engineered explicitly for
 
 Note on the two-branch plan: the small/mega split scans the input twice.
 The mega branch's scan prunes to a tiny row subset but still reads the
-span bytes; callers running this over cold 100 TB inputs should persist
-the scan or pre-split the corpus (ExtractionPipeline waves keep each
-re-scan bounded to one wave's buckets).
+span bytes.  The operator caches nothing itself (pinning a small scan
+measured no gain at local[4]); a caller whose input is expensive to
+re-read persists it in its own ledger, as ``SragEngine.ingest`` does,
+and ExtractionPipeline waves keep each re-scan bounded to one wave's
+buckets.
 """
 
 from __future__ import annotations
@@ -419,9 +421,6 @@ def extract_documents(
     shuffle moves a tiny fraction of rows while removing the straggler
     tasks that would otherwise dominate the stage.
     """
-    spark = docs.sparkSession
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
     parse_kernel = _parse_whole_arrow
     slicer_kernel = _make_slicer_arrow(slice_target)
     if doc_counter is not None:
@@ -430,51 +429,35 @@ def extract_documents(
         # parsed — once per plan execution
         parse_kernel = _counting(parse_kernel, doc_counter)
         slicer_kernel = _counting(slicer_kernel, doc_counter)
+    small, big = _route_by_size(docs, salt_threshold, slicer_kernel, num_partitions)
+    return small.mapInArrow(parse_kernel, schema=EXTRACTED_SCHEMA).unionByName(big)
 
-    docs = _maybe_pin_small_scan(docs.select("doc_id", "spans"))
+
+def _route_by_size(
+    docs: DataFrame, salt_threshold: int, slicer_kernel, num_partitions: int | None
+) -> tuple[DataFrame, DataFrame]:
+    """Split the input by per-doc span count: ``(small, big)`` — the
+    normal docs as ``(doc_id, spans)`` on the scan's own partitioning
+    (or a doc_id-hash repartition with ``num_partitions``), ready for a
+    whole-doc kernel, and the mega docs already parsed through the
+    salted path (``slicer_kernel`` → ``repartition(doc_id, slice_id)``
+    → per-slice parse → ``groupBy(doc_id).applyInPandas`` reassembly)
+    as EXTRACTED_SCHEMA rows."""
+    shuffle_parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    docs = docs.select("doc_id", "spans")
     n = F.size("spans")
-    small_src = docs.filter(n <= salt_threshold).select("doc_id", "spans")
+    small = docs.filter(n <= salt_threshold)
     if num_partitions:
-        small_src = small_src.repartition(num_partitions, "doc_id")
-    small = small_src.mapInArrow(parse_kernel, schema=EXTRACTED_SCHEMA)
-
+        small = small.repartition(num_partitions, "doc_id")
     big = (
         docs.filter(n > salt_threshold)
-        .select("doc_id", "spans")
         .mapInArrow(slicer_kernel, schema=_SLICE_SCHEMA)
         .repartition(num_partitions or shuffle_parts, "doc_id", "slice_id")
         .mapInArrow(_parse_slice_arrow, schema=_PARSED_SLICE_SCHEMA)
         .groupBy("doc_id")
         .applyInPandas(_reassemble, schema=EXTRACTED_SCHEMA)
     )
-    return small.unionByName(big)
-
-
-_PIN_SCAN_BYTES_ENV = "SPARK_GRAFT_PIN_SCAN_BYTES"
-_PIN_SCAN_BYTES_DEFAULT = 2 * 1024**3  # fits comfortably in a local heap
-
-
-def _maybe_pin_small_scan(docs: DataFrame) -> DataFrame:
-    """Scale-adaptive fix for the two-branch double scan (module note):
-    the small/mega split reads the input twice, which is the right
-    trade at corpus scale (persisting a 100 TB span table is worse)
-    but pure waste on a SMALL input — there, persist the (already
-    pruned) frame so the mega branch reads the cache instead of
-    re-scanning.  "Small" = the optimizer's size estimate is under
-    ``$SPARK_GRAFT_PIN_SCAN_BYTES`` (default 2 GiB); big inputs are
-    returned untouched, so nothing corpus-sized is ever pinned."""
-    import os
-
-    try:
-        limit = int(os.environ.get(_PIN_SCAN_BYTES_ENV, _PIN_SCAN_BYTES_DEFAULT))
-        size = int(
-            docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        if 0 < size < limit:
-            return docs.persist()
-    except Exception:  # noqa: BLE001 — planning-only probe; never fatal
-        return docs
-    return docs
+    return small, big
 
 
 def extract_documents_flat(
@@ -497,27 +480,12 @@ def extract_documents_flat(
     ``extract_documents`` + ``extraction_metrics`` when lineage metrics
     are required.
     """
-    spark = docs.sparkSession
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
-    docs = _maybe_pin_small_scan(docs.select("doc_id", "spans"))
-    n = F.size("spans")
-    small_src = docs.filter(n <= salt_threshold).select("doc_id", "spans")
-    if num_partitions:
-        small_src = small_src.repartition(num_partitions, "doc_id")
-    small = small_src.mapInArrow(
+    small, big = _route_by_size(
+        docs, salt_threshold, _make_slicer_arrow(slice_target), num_partitions
+    )
+    return small.mapInArrow(
         _parse_whole_flat_arrow, schema=EXTRACTED_FLAT_SCHEMA
-    )
-    big = explode_extracted(
-        docs.filter(n > salt_threshold)
-        .select("doc_id", "spans")
-        .mapInArrow(_make_slicer_arrow(slice_target), schema=_SLICE_SCHEMA)
-        .repartition(num_partitions or shuffle_parts, "doc_id", "slice_id")
-        .mapInArrow(_parse_slice_arrow, schema=_PARSED_SLICE_SCHEMA)
-        .groupBy("doc_id")
-        .applyInPandas(_reassemble, schema=EXTRACTED_SCHEMA)
-    )
-    return small.unionByName(big)
+    ).unionByName(explode_extracted(big))
 
 
 def explode_extracted(extracted: DataFrame) -> DataFrame:

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from srag_spark.functions.planning import spread_input
+
 #: (name, RE2-safe pattern, replacement token) applied in order.
 PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
     ("email", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
@@ -61,8 +63,6 @@ def scrub_pii(
 ) -> DataFrame:
     """(doc_id, text_redacted, n_email, n_ipv4, n_phone, has_pii) — one
     row per input doc, PII spans replaced by class tokens."""
-    from srag_spark.operators.dedup import spread_input
-
     cols = pii_cols(F.col(text_col))
     # NULL text must yield 0-count / has_pii=false (not NULL): a
     # downstream keep-filter on ~has_pii silently DROPS null verdicts,

@@ -23,8 +23,10 @@ the secondary key ``(doc_id, segment_index)`` (SURVEY.md §4.2.3).
 
 Scale notes: the score relations entering fusion are ≤ pool (200) rows —
 they broadcast.  BM25's idf relation has one row per *query term*, also
-broadcast.  The only big shuffles are the two groupBys over the exploded
-token table, both with map-side partial aggregation.
+broadcast.  BM25 reads the chunks once per query through one regex pass
+per chunk that extracts only the query terms' occurrences; its
+aggregations run over those matches (≤|terms| rows per chunk), with
+map-side partial aggregation.
 """
 
 from __future__ import annotations
@@ -35,6 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from srag_spark.functions.embedding import embed_query, make_rerank_udf
+from srag_spark.functions.planning import held, owns_ledger, persist
 
 FUSION_POOL_SIZE = 200   # QueryService.scala:65
 RERANKER_POOL_SIZE = 200
@@ -110,6 +113,7 @@ def _tokens_col(col) -> "F.Column":
     return F.array_remove(F.split(F.lower(col), LEX_TOKEN_SPLIT), "")
 
 
+@owns_ledger
 def bm25_topk(
     chunks: DataFrame,
     query_text: str,
@@ -117,14 +121,16 @@ def bm25_topk(
     k1: float = 1.2,
     b: float = 0.75,
     flt: dict[str, str] | None = None,
+    persisted: list | None = None,
 ) -> DataFrame:
     """BM25 (Lucene formulation) top-k over the chunks table.
 
-    Two aggregation passes, both with map-side combine:
+    One pass over the chunks feeds both statistics:
       1. corpus stats: N, avgdl (single tiny row → broadcast);
-      2. per-(chunk, term) tf over the exploded token table, restricted to
-         the query's terms *before* the shuffle (predicate pushed below
-         the explode by Catalyst).
+      2. per-(chunk, term) tf, counted inside each row from one
+         alternation-regex pass that extracts only the query terms'
+         occurrences — no token explode; df is a groupBy over the
+         ≤|terms| matched terms per chunk.
     idf uses the Lucene/OpenSearch form ln(1 + (N-df+0.5)/(df+0.5)).
     Empty query → all chunks at score 0.0 (zero_terms_query: all,
     OpenSearchAdapter.scala:205-235), deterministic order.
@@ -141,6 +147,9 @@ def bm25_topk(
     relation via a co-keyed semi-join before scoring, so the sort-limit
     still sees only candidate rows.  Pinned by the ``q3_bm25_filtered``
     oracle entry (VERDICT r4 #3).
+
+    The light per-chunk relation is cached for its two consumers under
+    the ``persisted=`` contract of :mod:`srag_spark.functions.planning`.
     """
     terms = sorted(set(tokenize_lex(query_text)))
     if not terms:
@@ -176,9 +185,8 @@ def bm25_topk(
     # column deliberately stays OUT of the cached relation (guide §2.3:
     # decide on lightweight proxies, move payloads once) — the final
     # fetch joins the ≤k winners back against a plain text scan.
-    from srag_spark.operators.dedup import _persist
 
-    docs = _persist(
+    docs = persist(
         chunks.select(
             *_KEY,
             F.expr(
@@ -188,7 +196,7 @@ def bm25_topk(
                 f"regexp_extract_all(lower(text), '{hit_pat}', 1)"
             ).alias("_hits"),
         ),
-        None,
+        persisted,
     )
     stats = docs.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
@@ -404,16 +412,18 @@ def retrieve_context(
     """
     qvec = query_vec if query_vec is not None else embed_query(query_text, embed_fn)
     semantic = cosine_topk(embeddings, qvec, FUSION_POOL_SIZE, flt)
-    lexical = bm25_topk(chunks, query_text, FUSION_POOL_SIZE, flt=flt)
-    fused = rrf_fuse(semantic, lexical)
-    candidates = resolve_candidate_texts(fused, lexical, chunks).cache()
-    try:
+    with held() as ledger:
+        lexical = bm25_topk(
+            chunks, query_text, FUSION_POOL_SIZE, flt=flt, persisted=ledger
+        )
+        fused = rrf_fuse(semantic, lexical)
+        candidates = persist(resolve_candidate_texts(fused, lexical, chunks), ledger)
         n = candidates.count()
         # every returned frame is MATERIALIZED (eager localCheckpoint of
-        # ≤limit rows) before candidates is unpersisted below — otherwise
-        # the caller's first action would re-execute the whole plan
-        # uncached, and a reranker failure at consumption time would
-        # escape the fusion fallback (ADVICE r2)
+        # ≤limit rows) before the ledger is released — otherwise the
+        # caller's first action would re-execute the whole plan uncached,
+        # and a reranker failure at consumption time would escape the
+        # fusion fallback (ADVICE r2)
         fusion_results = (
             candidates.select(*_KEY, "text", F.col("fused_score").alias("score"))
             .orderBy(F.desc("score"), *_KEY)
@@ -433,8 +443,6 @@ def retrieve_context(
             return filter_reranked(scored, limit).localCheckpoint(eager=True)
         except Exception:  # noqa: BLE001 — reranker failure → fusion fallback
             return fusion_results.localCheckpoint(eager=True)
-    finally:
-        candidates.unpersist(blocking=False)
 
 
 # ---------------------------------------------------------------------------
@@ -459,5 +467,3 @@ def listing(
 
 # Q10 top-k and Q11 distinct are one-liners at call sites:
 #   df.orderBy(...).limit(k)        df.select("doc_id").distinct()
-def distinct_doc_ids(df: DataFrame) -> DataFrame:
-    return df.select("doc_id").distinct()

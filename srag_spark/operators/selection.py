@@ -33,6 +33,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from srag_spark.functions.planning import held, persist, spread_input
 from srag_spark.operators.dedup import words_col
 
 
@@ -64,8 +65,6 @@ def _bucket_counts(docs: DataFrame, text_col: str, hash_chars: int) -> DataFrame
     """(bucket, c): corpus feature counts per hashed bucket — one
     explode + one map-side-combinable groupBy, output bounded by the
     bucket space."""
-    from srag_spark.operators.dedup import spread_input
-
     return (
         spread_input(docs)
         .select(words_col(F.col(text_col)).alias("_w"))
@@ -108,70 +107,70 @@ def dsir_weights(
     # consume it, where the previous shape re-ran the tokenize + n-gram
     # + md5 work per pass (the relation is skinny — id + 3-char bucket —
     # so MEMORY_AND_DISK beats recompute; at true corpus scale prefer a
-    # committed intermediate table, plans.pipeline-style).  The target
-    # pass is an independent job submitted from a thread so its stages
-    # overlap the raw pass's tail (guide §2.6).
+    # committed intermediate table, plans.pipeline-style); the scores are
+    # checkpointed before it is released.  The target pass is an
+    # independent job submitted from a thread so its stages overlap the
+    # raw pass's tail (guide §2.6).
     from concurrent.futures import ThreadPoolExecutor
 
-    from srag_spark.operators.dedup import _persist, spread_input
+    with held() as ledger:
+        feats = persist(
+            spread_input(docs)
+            .select(
+                F.col(id_col).alias("doc_id"),
+                words_col(F.col(text_col)).alias("_w"),
+            )
+            .select(
+                "doc_id",
+                F.explode_outer(dsir_features_col(F.col("_w"))).alias("feat"),
+            )
+            .withColumn("bucket", dsir_bucket_col(F.col("feat"), hash_chars)),
+            ledger,
+        )
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            t_fut = pool.submit(
+                lambda: _bucket_counts(target, text_col, hash_chars).collect()
+            )
+            r_fut = pool.submit(
+                lambda: feats.filter(F.col("bucket").isNotNull())
+                .groupBy("bucket")
+                .agg(F.count("*").alias("c"))
+                .collect()
+            )
+            t_counts = {r["bucket"]: r["c"] for r in t_fut.result()}
+            r_counts = {r["bucket"]: r["c"] for r in r_fut.result()}
 
-    feats = _persist(
-        spread_input(docs)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            words_col(F.col(text_col)).alias("_w"),
-        )
-        .select(
-            "doc_id",
-            F.explode_outer(dsir_features_col(F.col("_w"))).alias("feat"),
-        )
-        .withColumn("bucket", dsir_bucket_col(F.col("feat"), hash_chars)),
-        None,
-    )
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        t_fut = pool.submit(
-            lambda: _bucket_counts(target, text_col, hash_chars).collect()
-        )
-        r_fut = pool.submit(
-            lambda: feats.filter(F.col("bucket").isNotNull())
-            .groupBy("bucket")
-            .agg(F.count("*").alias("c"))
-            .collect()
-        )
-        t_counts = {r["bucket"]: r["c"] for r in t_fut.result()}
-        r_counts = {r["bucket"]: r["c"] for r in r_fut.result()}
+        b_space = float(16 ** hash_chars)
+        t_denom = float(sum(t_counts.values())) + alpha * b_space
+        r_denom = float(sum(r_counts.values())) + alpha * b_space
+        lam0 = math.log(alpha / t_denom) - math.log(alpha / r_denom)
 
-    b_space = float(16 ** hash_chars)
-    t_denom = float(sum(t_counts.values())) + alpha * b_space
-    r_denom = float(sum(r_counts.values())) + alpha * b_space
-    lam0 = math.log(alpha / t_denom) - math.log(alpha / r_denom)
+        spark = docs.sparkSession
+        lam_rows = [
+            (b,
+             math.log((t_counts.get(b, 0) + alpha) / t_denom)
+             - math.log((r_counts.get(b, 0) + alpha) / r_denom))
+            for b in set(t_counts) | set(r_counts)
+        ]
+        lam = spark.createDataFrame(lam_rows, "bucket string, lam double")
 
-    spark = docs.sparkSession
-    lam_rows = [
-        (b,
-         math.log((t_counts.get(b, 0) + alpha) / t_denom)
-         - math.log((r_counts.get(b, 0) + alpha) / r_denom))
-        for b in set(t_counts) | set(r_counts)
-    ]
-    lam = spark.createDataFrame(lam_rows, "bucket string, lam double")
-
-    scored = (
-        feats.join(F.broadcast(lam), "bucket", "left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("feat").alias("n_feats"),
-            F.sum(
-                F.when(F.col("feat").isNotNull(),
-                       F.coalesce("lam", F.lit(lam0)))
-            ).alias("logw"),
+        scored = (
+            feats.join(F.broadcast(lam), "bucket", "left")
+            .groupBy("doc_id")
+            .agg(
+                F.count("feat").alias("n_feats"),
+                F.sum(
+                    F.when(F.col("feat").isNotNull(),
+                           F.coalesce("lam", F.lit(lam0)))
+                ).alias("logw"),
+            )
+            .select(
+                "doc_id",
+                F.col("n_feats").cast("bigint").alias("n_feats"),
+                F.round(F.coalesce("logw", F.lit(0.0)), 4).alias("logw_r"),
+            )
         )
-        .select(
-            "doc_id",
-            F.col("n_feats").cast("bigint").alias("n_feats"),
-            F.round(F.coalesce("logw", F.lit(0.0)), 4).alias("logw_r"),
-        )
-    )
-    return scored
+        return scored.localCheckpoint(eager=True)
 
 
 def cluster_balanced_sample(
@@ -222,7 +221,6 @@ def cluster_balanced_sample(
     the ANN operators do.
     """
     from srag_spark.operators.corpus import sample_stratified
-    from srag_spark.operators.dedup import spread_input
     from srag_spark.operators.similarity import (
         ivf_assign_struct,
         make_centroids,

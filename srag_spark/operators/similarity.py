@@ -24,6 +24,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from srag_spark.functions.planning import (
+    bind_col,
+    nondet_col,
+    owns_ledger,
+    persist,
+    spread_input,
+)
 from srag_spark.operators.dedup import dot_col, dot_lit_sql
 
 
@@ -42,7 +49,7 @@ def brute_force_topk(
     Pass ``dim=`` to use the dim-unrolled codegen'd dot product
     (bit-identical; see ``dedup.dot_sql``) — the fold form stays the
     fallback for callers that cannot know the vector length."""
-    from srag_spark.operators.dedup import dot_sql, spread_input
+    from srag_spark.operators.dedup import dot_sql
 
     q = F.broadcast(
         queries.select(F.col(q_id_col).alias("query_id"), F.col(q_vec_col).alias("qv"))
@@ -192,8 +199,6 @@ def ivf_assign_struct(vec_sql: str, centroids: list[list[float]]) -> "F.Column":
     Consumers needing both (SemDeDup, cluster-balanced sampling) select
     this once and unpack fields; ``csim`` is unrounded so callers apply
     their own rounding."""
-    from srag_spark.operators.dedup import bind_col
-
     dots_arr = F.expr(_centroid_dots_sql(vec_sql, centroids))
 
     def _build(d):
@@ -255,7 +260,6 @@ def ivf_topk(
         raise ValueError(
             f"got {len(centroids)} centroids for n_centroids={n_centroids}"
         )
-    from srag_spark.operators.dedup import nondet_col, spread_input
 
     emb = spread_input(emb)  # guide §2.5; no-op at scale
     # nondet_col pins the n_centroids-dot assignment in THIS projection:
@@ -375,8 +379,6 @@ def knn_graph(
 
         from srag_spark.functions import pairkernels as pk
 
-        from srag_spark.operators.dedup import spread_input
-
         width = band_width(n_planes, bands)
         planes = make_hyperplanes(n_planes, dim)
         coded = spread_input(emb).select(
@@ -449,6 +451,7 @@ def knn_graph(
 _PR_UNIT = 10**9
 
 
+@owns_ledger
 def pagerank(
     edges: DataFrame,
     n_iter: int = 5,
@@ -482,14 +485,13 @@ def pagerank(
     Plan shape per round: one join of the (src, dst, outdeg) relation
     against the current rank (co-keyed on src), one map-side-combinable
     groupBy(dst) sum, one left join back to the node set.  Pass
-    ``persisted=[]`` to pin the edge/node relations and each round's
-    rank (cuts the ``n_iter``-deep lineage; release() after use).
+    a ``persisted`` list to keep the pinned edge/node relations and each
+    round's rank (they cut the ``n_iter``-deep lineage) until the caller
+    releases them — the functions.planning contract.
 
     Returns ``(node, rank_u, rank_r)`` — the exact integer rank and its
     6-decimal real form.
     """
-    from srag_spark.operators.dedup import _persist
-
     if n_iter < 1:
         raise ValueError("n_iter must be >= 1")
     d100 = int(round(damping * 100))
@@ -503,8 +505,8 @@ def pagerank(
     )
     outdeg = e.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg"))
     es = e.join(outdeg, "_s")
-    nodes = _persist(nodes, persisted)
-    es = _persist(es, persisted)
+    nodes = persist(nodes, persisted)
+    es = persist(es, persisted)
     rank = nodes.withColumn("_ru", F.lit(_PR_UNIT).cast("long"))
     base = (100 - d100) * _PR_UNIT
     for _ in range(n_iter):
@@ -527,7 +529,7 @@ def pagerank(
                 ).alias("_ru"),
             )
         )
-        rank = _persist(rank, persisted)
+        rank = persist(rank, persisted)
     return rank.select(
         "node",
         F.col("_ru").alias("rank_u"),
@@ -585,8 +587,6 @@ def probe_buckets_col(bucket_col, n_planes: int, probes: int) -> "F.Column":
     so the un-bound form inlined the full ``n_planes``-dot code
     expression ~3·n_planes times — a plan-size/evaluation blowup that
     measured 1.5 s on a 5-row query side at sfx10."""
-    from srag_spark.operators.dedup import bind_col
-
     def _variants(code):
         variants = [code]
         if probes >= 2:
@@ -624,7 +624,6 @@ def lsh_topk(
     driver-side data peek: the operator must stay lazily plannable)."""
     if dim is None:
         raise ValueError("lsh_topk requires an explicit dim= (vector length)")
-    from srag_spark.operators.dedup import spread_input
 
     planes = make_hyperplanes(n_planes, dim)
     emb = spread_input(emb)  # guide §2.5; no-op at scale

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from srag_spark.functions.planning import spread_input
 from srag_spark.operators.corpus import ngram_hash_col
 
 
@@ -76,8 +77,6 @@ def duplicate_window_flags(
     This is the *census* half; :func:`strip_duplicate_spans` applies
     the keep-first-occurrence cut.
     """
-    from srag_spark.operators.dedup import spread_input
-
     # guide §2.5 input-parallelism guard: the window explode expands a
     # small doc scan 10-50×; a 1-2-split file would serialize both the
     # census and the join pass (no-op at corpus scale)
@@ -158,8 +157,6 @@ def strip_duplicate_spans(
     merged intervals — per-token work is bounded by the doc's MERGED
     interval count, not its raw cut count.
     """
-    from srag_spark.operators.dedup import spread_input
-
     # both passes (census + join-back) and the token surgery inherit
     # this parallelism; no-op at corpus scale (guide §2.5)
     docs = spread_input(docs)

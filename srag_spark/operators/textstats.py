@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from srag_spark.functions.planning import bind_col, held, owns_ledger, persist, spread_input
 from srag_spark.operators.dedup import norm_text_col, shingles_col, words_col
 
 # frozen marker-word profiles (ISO-639-1 → high-frequency function words)
@@ -57,8 +58,6 @@ def language_pred_struct(text_col) -> "F.Column":
     compiled-regex codegen'd pass per language replaces a per-element
     interpreted lambda filter that measured ~1.2 ms/row; values are
     identical."""
-    from srag_spark.operators.dedup import bind_col
-
     langs = sorted(LANG_MARKERS)
 
     def _counts(norm):
@@ -105,8 +104,6 @@ def language_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     CollapseProject keeps multi-referenced non-cheap aliases intact, so
     the two-step select halves the work.  spread_input parallelizes the
     marker scan over an under-partitioned input (no-op at scale)."""
-    from srag_spark.operators.dedup import spread_input
-
     return (
         spread_input(docs)
         .select(
@@ -143,8 +140,6 @@ def quality_metric_cols(text_col) -> dict[str, "F.Column"]:
     """Per-row quality-signal column expressions over a raw text column
     (keys: n_words, avg_word_len_r, stop_ratio_r, alnum_ratio_r,
     quality_r) — join-free for pipeline composition."""
-    from srag_spark.operators.dedup import bind_col
-
     raw = text_col
     # r6 evaluation rewrite — no higher-order functions and no repeated
     # heavy subexpressions:
@@ -205,8 +200,6 @@ def quality_score(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
         quality = 0.4·clamp(n_words/100) + 0.3·stop_presence
                 + 0.3·alnum_ratio
     """
-    from srag_spark.operators.dedup import spread_input
-
     # two-step select (r6): the base-stat array is computed ONCE per row
     # into a real column, and the five metrics are cheap element_at
     # arithmetic over it — selecting five independent metric columns
@@ -253,8 +246,6 @@ def repetition_stats(
     Pure native column expressions; exact DuckDB oracle.  Unlike
     ``shingles_col`` these n-grams are NOT deduplicated before counting —
     the duplicate fraction is the signal."""
-    from srag_spark.operators.dedup import bind_col
-
     # let-bind both the word array and the gram array (r6): the un-bound
     # forms re-tokenized per gram and re-built the gram array per
     # consuming output column
@@ -289,8 +280,6 @@ def repetition_stats(
         ).otherwise(F.array().cast("array<string>"))
         return bind_col(grams, _from_grams)
 
-    from srag_spark.operators.dedup import spread_input
-
     raw = F.col(text_col)
     digits = F.length(F.regexp_replace(raw, "[^0-9]", ""))
     chars = F.length(raw)
@@ -312,24 +301,10 @@ def repetition_stats(
     )
 
 
-def token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, ws_tokens, lex_tokens): whitespace tokens + BPE-ish
-    lowercase-alphanumeric pieces."""
-    ws = F.size(F.array_remove(F.split(F.col(text_col), r"\s+"), ""))
-    lex = F.size(F.array_remove(F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"), ""))
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        ws.cast("bigint").alias("ws_tokens"),
-        lex.cast("bigint").alias("lex_tokens"),
-    )
-
-
 def fingerprint(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n_mins: int = 3) -> DataFrame:
     """(doc_id, full_md5, sketch): content fingerprint = md5 of the
     normalized text plus the ``n_mins`` lexicographically smallest shingle
     md5s (a winnowing-style sketch — stable under small edits)."""
-    from srag_spark.operators.dedup import spread_input
-
     sh = shingles_col(F.col(text_col), 3)
     hashed = F.array_sort(F.transform(sh, lambda s: F.md5(s)))
     # guide §2.5: per-row shingle md5 work otherwise serializes on the
@@ -373,8 +348,6 @@ def lm_perplexity(
     (at 100 TB the token table dwarfs the input; two linear scans beat
     one materialization).  Only three scalars and the bounded vocab
     ever reach the driver."""
-    from srag_spark.operators.dedup import spread_input
-
     # guide §2.5: both linear token passes below inherit the scan's
     # parallelism; spread an under-partitioned input (no-op at scale)
     toks = spread_input(docs).select(
@@ -384,15 +357,18 @@ def lm_perplexity(
     # counts is VOCABULARY-bounded (never corpus-sized), so persisting
     # it is safe at any scale and saves one full token-explode pass —
     # its two consumers (vocab top-k, corpus totals) otherwise each
-    # re-run the explode + groupBy (r6)
-    from srag_spark.operators.dedup import _persist
-
-    counts = _persist(toks.groupBy("tok").agg(F.count("*").alias("c")), None)
-    vocab = counts.orderBy(F.desc("c"), F.asc("tok")).limit(vocab_k)
-
-    totals = counts.agg(
-        F.sum("c").alias("n"), F.count("*").alias("_distinct")
-    ).collect()[0]
+    # re-run the explode + groupBy (r6).  The bounded vocabulary is
+    # checkpointed so the lazy result never reads the released counts.
+    with held() as ledger:
+        counts = persist(toks.groupBy("tok").agg(F.count("*").alias("c")), ledger)
+        vocab = (
+            counts.orderBy(F.desc("c"), F.asc("tok"))
+            .limit(vocab_k)
+            .localCheckpoint(eager=True)
+        )
+        totals = counts.agg(
+            F.sum("c").alias("n"), F.count("*").alias("_distinct")
+        ).collect()[0]
     n_corpus = totals["n"] or 0
     v_size = min(vocab_k, totals["_distinct"])
     denom = float(n_corpus) + alpha * (v_size + 1)
@@ -461,8 +437,6 @@ def c4_line_filter(
     dedup): these rules are row-local — native split + higher-order
     filter + array_join, zero shuffles, zero Python — so they compose
     inline into any scan (the ideal 100 TB shape, like pii.scrub_pii)."""
-    from srag_spark.operators.dedup import spread_input
-
     lines = F.split(F.col(text_col), "\n")
     kept = F.filter(lines, c4_line_keep_col)
     n_lines = F.size(lines)
@@ -568,7 +542,6 @@ def gopher_rules(
         & (alpha_frac >= min_alpha_frac)
         & (n_stop >= min_stopwords)
     )
-    from srag_spark.operators.dedup import spread_input
 
     # guide §2.5 (no-op at corpus scale)
     return spread_input(docs).select(
@@ -613,8 +586,6 @@ def ngram_topk(
     ``n`` words contribute nothing.  Nothing quadratic, nothing
     driver-side beyond the k result rows.
     """
-    from srag_spark.operators.dedup import bind_col, spread_input
-
     def _grams(w):
         return F.when(
             F.size(w) >= n,
@@ -643,6 +614,7 @@ def ngram_topk(
     )
 
 
+@owns_ledger
 def pmi_pairs(
     docs: DataFrame,
     k: int = 100,
@@ -677,8 +649,6 @@ def pmi_pairs(
     bigram side is small; top-k is TakeOrderedAndProject, never a global
     sort.  Nothing quadratic, nothing driver-side beyond 2 scalars + k
     result rows."""
-    from srag_spark.operators.dedup import _persist, spread_input, words_col
-
     # guide §2.5: parallelize the tokenize pass that materializes the
     # shared relation (no-op at corpus scale)
     toks = spread_input(docs).select(words_col(F.col(text_col)).alias("w"))
@@ -687,7 +657,7 @@ def pmi_pairs(
         # the tokenized relation — persist it so the regex normalization
         # runs once per corpus, not three times (persisted=[] + release
         # for caller-controlled lifetime)
-        toks = _persist(toks, persisted)
+        toks = persist(toks, persisted)
     w = F.col("w")
     totals = (
         # size(NULL array) is -1 under non-ANSI semantics — a NULL-text
@@ -847,11 +817,10 @@ def tfidf_keywords(
     df side rather than persisted (lm_perplexity's documented stance:
     at 100 TB the (doc, term) relation dwarfs the input — two linear
     scans beat one materialization; callers that prefer the trade can
-    ``.persist()`` the input).  Nothing quadratic, nothing driver-side.
+    persist the input in a ledger, ``functions.planning.persist``).
+    Nothing quadratic, nothing driver-side.
     """
     from pyspark.sql import Window
-
-    from srag_spark.operators.dedup import spread_input
 
     # guide §2.5 (no-op at corpus scale)
     terms = spread_input(docs).select(
@@ -1010,8 +979,6 @@ def readability(
     :func:`flesch_cols` components as a derived table.  Row-local,
     zero shuffles; compose the columns directly via flesch_cols to
     inline the gate into an existing scan."""
-    from srag_spark.operators.dedup import spread_input
-
     cols = flesch_cols(F.col(text_col))
     # guide §2.5 (no-op at corpus scale)
     return spread_input(docs).select(

@@ -45,6 +45,7 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from srag_spark.functions.planning import held, owns_ledger, persist
 from srag_spark.operators.corpus import (
     derive_mixture_rates,
     find_contamination,
@@ -52,7 +53,6 @@ from srag_spark.operators.corpus import (
     sample_mixture,
     scrub_contamination,
 )
-from srag_spark.operators.dedup import _persist, release
 from srag_spark.operators.pii import pii_cols
 from srag_spark.plans.curation import curate_corpus
 from srag_spark.sources import fsio
@@ -66,6 +66,7 @@ BUILD_COLUMNS = (
 )
 
 
+@owns_ledger
 def build_training_corpus(
     docs: DataFrame,
     eval_docs: DataFrame,
@@ -115,56 +116,44 @@ def build_training_corpus(
     Persist lifecycle: the curated survivor set feeds the contamination
     windows, the anti-join, and the downstream chain, so it is persisted
     (appended to ``persisted`` when given, else released before return
-    per the operators.dedup contract).
+    per the functions.planning contract).
     """
-    own = persisted is None
-    ledger: list = [] if own else persisted
     if url_col is not None:
         docs = _apply_url_gate(
             docs, url_col, url_blocklist, url_word_weights, url_threshold
         )
-    try:
-        curated = curate_corpus(
-            docs,
-            lang_whitelist=lang_whitelist,
-            min_quality=min_quality,
-            n_hashes=n_hashes,
-            bands=bands,
-            jaccard_tau=jaccard_tau,
-            dedup_mode=dedup_mode,
-            materialize=True,
-            persisted=ledger,
-        )
-        curated = _persist(curated, ledger)
-        clean = _apply_decontam(curated, eval_docs, decontam_n, decontam_mode)
-        if exact_substr_n is not None:
-            # the window census + cut read `clean` twice; pin it first
-            clean = _persist(clean, ledger)
-            clean = _strip_substrings(clean, exact_substr_n)
-        if pii_scrub:
-            clean = _scrub_text(clean)
-        if isinstance(rates, tuple):
-            # mixture spec, not explicit rates: derive on the clean
-            # (post-curation, post-decontam, post-scrub) survivor set —
-            # the population the sampler actually draws from, with the
-            # token accounting the trainer will see
-            clean = _persist(clean, ledger)
-            rates = derive_mixture_rates(clean, rates, group_col=group_col)
-        sampled = sample_mixture(
-            clean, rates, group_col=group_col, seed=seed,
-            default_rate=default_rate,
-        )
-        sampled = _persist(sampled, ledger)
-        out = _pack_with_attrs(sampled, budget, persisted=ledger)
-        if own:
-            # materialize before the ledger is released below — the lazy
-            # join references the persisted survivor frames (same
-            # interactive-default contract as pack_sequences itself)
-            return out.localCheckpoint(eager=True)
-        return out
-    finally:
-        if own:
-            release(ledger)
+    curated = curate_corpus(
+        docs,
+        lang_whitelist=lang_whitelist,
+        min_quality=min_quality,
+        n_hashes=n_hashes,
+        bands=bands,
+        jaccard_tau=jaccard_tau,
+        dedup_mode=dedup_mode,
+        materialize=True,
+        persisted=persisted,
+    )
+    curated = persist(curated, persisted)
+    clean = _apply_decontam(curated, eval_docs, decontam_n, decontam_mode)
+    if exact_substr_n is not None:
+        # the window census + cut read `clean` twice; pin it first
+        clean = persist(clean, persisted)
+        clean = _strip_substrings(clean, exact_substr_n)
+    if pii_scrub:
+        clean = _scrub_text(clean)
+    if isinstance(rates, tuple):
+        # mixture spec, not explicit rates: derive on the clean
+        # (post-curation, post-decontam, post-scrub) survivor set —
+        # the population the sampler actually draws from, with the
+        # token accounting the trainer will see
+        clean = persist(clean, persisted)
+        rates = derive_mixture_rates(clean, rates, group_col=group_col)
+    sampled = sample_mixture(
+        clean, rates, group_col=group_col, seed=seed,
+        default_rate=default_rate,
+    )
+    sampled = persist(sampled, persisted)
+    return _pack_with_attrs(sampled, budget, persisted=persisted)
 
 
 def _apply_url_gate(
@@ -324,8 +313,7 @@ def build_training_corpus_durable(
             docs = _apply_url_gate(
                 docs, url_col, url_blocklist, url_word_weights, url_threshold
             )
-        ledger: list = []
-        try:
+        with held() as ledger:
             curated = curate_corpus(
                 docs,
                 lang_whitelist=lang_whitelist,
@@ -340,8 +328,6 @@ def build_training_corpus_durable(
             upsert_by_key(
                 spark, path("curated"), curated, ["doc_id"], n_buckets=n_buckets
             )
-        finally:
-            release(ledger)
         finish("curated")
     if stop_after == "curated":
         return read_table(spark, path("curated"))
@@ -372,15 +358,12 @@ def build_training_corpus_durable(
             clean, rates, group_col=group_col, seed=seed,
             default_rate=default_rate,
         )
-        ledger = []
-        try:
-            sampled = _persist(sampled, ledger)
+        with held() as ledger:
+            sampled = persist(sampled, ledger)
             packed = _pack_with_attrs(sampled, budget, persisted=ledger)
             upsert_by_key(
                 spark, path("packed"), packed, ["doc_id", "pack_id"],
                 n_buckets=n_buckets,
             )
-        finally:
-            release(ledger)
         finish("packed")
     return read_table(spark, path("packed"))

@@ -56,8 +56,8 @@ from pyspark.sql import functions as F
 from srag_spark.sources import fsio
 from srag_spark.sources.tables import read_table, upsert_by_key
 
+from srag_spark.functions.planning import nondet_col, owns_ledger, persist, spread_input
 from srag_spark.operators.dedup import (
-    _persist,
     cluster_canonical,
     minhash_dedup_pairs,
     norm_text_col,
@@ -68,6 +68,7 @@ from srag_spark.operators.textstats import (
 )
 
 
+@owns_ledger
 def curate_corpus(
     docs: DataFrame,
     lang_whitelist: tuple[str, ...] = ("en",),
@@ -101,12 +102,12 @@ def curate_corpus(
     (MEMORY_AND_DISK) because the near-dup stage consumes it from three
     join sides; pass False to keep the plan fully lazy (small inputs /
     single-shot EXPLAIN), or pass a ``persisted`` list and call
-    ``operators.dedup.release`` after the consuming action."""
+    ``functions.planning.release`` after the consuming action."""
     uniq = gate_and_exact_dedup(
         docs, lang_whitelist, min_quality, text_col, id_col
     )
     if materialize:
-        uniq = _persist(uniq, persisted)
+        uniq = persist(uniq, persisted)
     return suppress_neardups(
         uniq, n_hashes, bands, jaccard_tau, dedup_mode,
         materialize=materialize, persisted=persisted,
@@ -122,8 +123,6 @@ def gate_and_exact_dedup(
 ) -> DataFrame:
     """Stage 1: inline language/quality gates on the scan + window-min
     exact dedup (one shuffle).  Lazy — callers persist or table-write."""
-    from srag_spark.operators.dedup import nondet_col, spread_input
-
     text = F.col(text_col)
     pred_lang, _hits = language_pred_cols(text)
     quality = quality_metric_cols(text)["quality_r"]
@@ -168,6 +167,7 @@ def gate_and_exact_dedup(
     )
 
 
+@owns_ledger
 def suppress_neardups(
     uniq: DataFrame,
     n_hashes: int,

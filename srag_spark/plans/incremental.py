@@ -36,8 +36,10 @@ from __future__ import annotations
 import hashlib
 import json
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
+from srag_spark.functions.planning import held, persist
 from srag_spark.sources import fsio
 from srag_spark.sources.tables import (
     _MANIFEST_DIR,
@@ -117,8 +119,6 @@ def incremental_refresh(
     "deleted", ...ingest counts}``.  Single-writer like every engine
     mutation.
     """
-    from pyspark import StorageLevel
-
     spark = engine.spark
     latest = latest_manifest_version(spark, source_path)
     if latest is None:
@@ -163,10 +163,12 @@ def incremental_refresh(
             result.update(published=True, audits=[])
         return result
 
-    diff = snapshot_diff(
-        spark, source_path, from_v, to_v, key_cols=key_cols
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with held() as ledger:
+        diff = persist(
+            snapshot_diff(spark, source_path, from_v, to_v, key_cols=key_cols),
+            ledger,
+            StorageLevel.MEMORY_AND_DISK,
+        )
         by_type = {
             r["change_type"]: r["n"]
             for r in diff.groupBy("change_type").agg(
@@ -225,8 +227,6 @@ def incremental_refresh(
             engine.abandon_ingest(staging_id)
         result.update(published=ok, audits=audit_results)
         return result
-    finally:
-        diff.unpersist(blocking=False)
 
 
 def refresh_plan(engine, source_path: str, to_version: int | None = None) -> DataFrame:

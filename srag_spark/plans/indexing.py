@@ -1,12 +1,13 @@
-"""E3 indexing pipeline: extracted docs → transcripts text → chunks →
-embeddings, as one composed write job (IndexingPipeline.scala:56-115).
+"""E3 indexing stages: extracted docs → transcripts text → chunks →
+embeddings (IndexingPipeline.scala:56-115).
 
 The reference runs persist → embed → vector upsert → lexical
-delete+index per document, sequentially over HTTP; here the whole fan-out
-is one declarative plan over all documents at once.  The reference's
-"delete then index" idempotency (tolerated-failure delete,
-IndexingPipeline.scala:93-103) maps to overwrite-partition writes — a
-re-run converges to the same tables (J7).
+delete+index per document, sequentially over HTTP; here each stage is
+one declarative plan over all documents at once, and
+``SragEngine.ingest`` composes and writes them.  The reference's "delete
+then index" idempotency (tolerated-failure delete,
+IndexingPipeline.scala:93-103) maps to the engine's keyed delete +
+upsert — a re-run converges to the same tables (J7).
 """
 
 from __future__ import annotations
@@ -57,21 +58,3 @@ def build_embeddings(chunks: DataFrame, embed_fn=None) -> DataFrame:
         "metadata",
     )
 
-
-def index_documents(
-    extracted: DataFrame,
-    chunks_path: str | None = None,
-    embeddings_path: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Full indexing fan-out.  When paths are given, writes both tables
-    (overwrite) and re-reads them (so downstream queries scan parquet with
-    pushdown rather than recomputing the UDF chain)."""
-    chunks = build_chunks(extracted)
-    if chunks_path:
-        chunks.write.mode("overwrite").parquet(chunks_path)
-        chunks = extracted.sparkSession.read.parquet(chunks_path)
-    embeddings = build_embeddings(chunks)
-    if embeddings_path:
-        embeddings.write.mode("overwrite").parquet(embeddings_path)
-        embeddings = extracted.sparkSession.read.parquet(embeddings_path)
-    return chunks, embeddings

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from srag_spark.functions.embedding import make_embed_udf
-from srag_spark.operators.dedup import _persist, release
+from srag_spark.functions.planning import held, persist
 from srag_spark.operators.mining import ict_pairs, mine_hard_negatives
 
 
@@ -67,8 +67,7 @@ def build_retrieval_trainset(
     :func:`operators.mining.mine_hard_negatives` (e.g. ``method="lsh",
     dim=..., n_planes=...`` for the banded scale path).
     """
-    ledger: list = []
-    try:
+    with held() as ledger:
         pairs = ict_pairs(
             docs,
             query_words=query_words,
@@ -77,14 +76,14 @@ def build_retrieval_trainset(
             id_col=id_col,
             seed=seed,
         )
-        pairs = _persist(pairs, ledger)
+        pairs = persist(pairs, ledger)
         embed = make_embed_udf(embed_fn)
         emb = pairs.select(
             "doc_id",
             embed(F.col("query")).alias("qvec"),
             embed(F.col("passage")).alias("pvec"),
         )
-        emb = _persist(emb, ledger)
+        emb = persist(emb, ledger)
         corpus = emb.select(
             F.col("doc_id").alias("vec_id"), F.col("pvec").alias("embedding")
         )
@@ -154,10 +153,6 @@ def build_retrieval_trainset(
                 ).alias("neg_scores"),
             )
         )
-        # materialize before releasing the ledger: the caller gets a
-        # frame whose caches are still pinned only during this call
-        out = out.persist()
-        out.count()
-        return out
-    finally:
-        release(ledger)
+        # materialize before the ledger is released: the returned frame
+        # must not read the released caches
+        return out.localCheckpoint(eager=True)

@@ -40,6 +40,7 @@ import traceback
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from srag_spark.functions.planning import held, persist
 from srag_spark.operators.parse import (
     DEFAULT_SALT_THRESHOLD,
     DEFAULT_SLICE_TARGET,
@@ -249,8 +250,8 @@ class ExtractionPipeline:
             salt_threshold=self.salt_threshold,
             slice_target=self.slice_target,
         ).withColumn("bucket", bucket_col(self.n_buckets))
-        extracted = extracted.persist()
-        try:
+        with held() as ledger:
+            extracted = persist(extracted, ledger)
             flat = explode_extracted(extracted).withColumn(
                 "bucket", bucket_col(self.n_buckets)
             )
@@ -265,8 +266,6 @@ class ExtractionPipeline:
                 )
                 .collect()
             )
-        finally:
-            extracted.unpersist(blocking=False)
         return {
             r["bucket"]: (r["docs"], r["kept"], r["dropped"], r["failures"])
             for r in agg

@@ -85,10 +85,10 @@ def build_tokenized_dataset(
     ``pack_id`` (directory-pruned ``shard_id=K/`` layout + row-count
     manifest).
 
-    Persist lifecycle: the dedup-ledger contract of
+    Persist lifecycle: the ``persisted=`` contract of
     :func:`~srag_spark.operators.corpus.materialize_packs` —
     ``persisted=None`` (tests/driver) materializes eagerly; at corpus
-    scale pass ``persisted=[]``, consume, then ``dedup.release``.
+    scale pass ``persisted=[]``, consume, then ``planning.release``.
     """
     if merges is None:
         merges = train_bpe(

@@ -54,10 +54,12 @@ from __future__ import annotations
 import json
 import uuid
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from srag_spark.functions.planning import held, persist
 from srag_spark.sources import fsio
 
 BUCKET_COL = "_kb"
@@ -315,21 +317,16 @@ def upsert_by_key(
     lost update) and the whole batch retries against the fresh snapshot,
     up to ``max_commit_retries`` times — the reference's Postgres row
     locks replaced by compare-and-publish."""
-    from pyspark import StorageLevel
-
     incoming = incoming.dropDuplicates(key_cols)
-    if persist_incoming:
-        incoming.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with held() as ledger:
+        if persist_incoming:
+            incoming = persist(incoming, ledger, StorageLevel.MEMORY_AND_DISK)
         for attempt in range(max_commit_retries + 1):
             try:
                 return _upsert_once(spark, path, incoming, key_cols, n_buckets)
             except ManifestCommitRace:
                 if attempt == max_commit_retries:
                     raise
-    finally:
-        if persist_incoming:
-            incoming.unpersist(blocking=False)
 
 
 def _prepare_upsert(
@@ -1189,16 +1186,11 @@ def stage_upsert(
     upsert write); staging adds one small JSON object.  Staged data dirs
     are protected from :func:`vacuum` until the stage is published or
     abandoned."""
-    from pyspark import StorageLevel
-
     incoming = incoming.dropDuplicates(key_cols)
-    if persist_incoming:
-        incoming.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        prep = _prepare_upsert(spark, path, incoming, key_cols, n_buckets)
-    finally:
+    with held() as ledger:
         if persist_incoming:
-            incoming.unpersist(blocking=False)
+            incoming = persist(incoming, ledger, StorageLevel.MEMORY_AND_DISK)
+        prep = _prepare_upsert(spark, path, incoming, key_cols, n_buckets)
     staging_id = uuid.uuid4().hex
     staged = {
         "base_version": prep["expected_prev"],

@@ -52,11 +52,11 @@ from srag_spark.operators.bloom import (
     merge_blooms,
     table_bucket_col,
 )
+from srag_spark.functions.planning import held, persist
 from srag_spark.operators.dedup import (
     build_dedup_index,
     incremental_dedup,
     norm_text_col,
-    release,
 )
 from srag_spark.sources.tables import read_manifest, read_table, upsert_by_key
 
@@ -290,8 +290,7 @@ def dedup_batch_sink(
             bloom_hex_digits,
         )
 
-    ledger: list = []
-    try:
+    with held() as ledger:
         ann = incremental_dedup(
             batch_df,
             index,
@@ -303,8 +302,7 @@ def dedup_batch_sink(
             max_band_df=max_band_df,
             exact_index=exact_index,
         )
-        ann = ann.persist()
-        ledger.append(ann)
+        ann = persist(ann, ledger)
         kept = ann.filter("keep")
         kept_docs = batch_df.join(kept.select("doc_id"), "doc_id")
         upsert_by_key(
@@ -340,8 +338,6 @@ def dedup_batch_sink(
             upsert_by_key(
                 spark, stats_path, stats, ["epoch_id"], n_buckets=4
             )
-    finally:
-        release(ledger)
 
 
 def start_dedup_stream(

@@ -161,7 +161,7 @@ def test_find_contamination_planted_overlap(spark):
 def test_pack_sequences_lazy_mode_with_release_handle(spark):
     """persisted=[] returns a LAZY frame (corpus-scale path); output
     equals the materialized mode; release() frees the parent."""
-    from srag_spark.operators.dedup import release
+    from srag_spark.functions.planning import release
     from srag_spark.operators.corpus import pack_sequences
 
     docs = spark.createDataFrame(

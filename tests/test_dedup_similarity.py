@@ -83,6 +83,19 @@ def test_simhash_near_pairs_on_near_identical(spark):
     assert pairs[("a", "b")] <= 6
 
 
+def test_simhash_near_pairs_repeated_doc_id_is_no_pair(spark):
+    # a doc_id that appears twice in the signature table (a re-ingested
+    # doc, an unioned batch) must not pair with itself; the strict id
+    # order a < b still holds for every emitted pair
+    sigs = spark.createDataFrame(
+        [("d1", "0" * 32), ("d1", "0" * 32), ("d1", "0" * 31 + "1"),
+         ("d2", "0" * 30 + "11"), ("d3", "1" * 32)],
+        "doc_id string, simhash string",
+    )
+    pairs = {tuple(r) for r in simhash_near_pairs(sigs, max_hamming=3).collect()}
+    assert pairs == {("d1", "d2", 1), ("d1", "d2", 2)}
+
+
 def test_ngram_jaccard_hand_computed(spark):
     # a: shingles {ab c d, b c d e}? words: a b c d e → 3-grams:
     # "a b c","b c d","c d e" ; b: b c d e f → "b c d","c d e","d e f"
@@ -327,7 +340,8 @@ def test_persist_handles_released(spark):
     """Operators register their cached intermediates in the caller's
     ``persisted`` list; release() unpersists them all (ADVICE r2 — no
     session-lifetime cache accumulation)."""
-    from srag_spark.operators.dedup import minhash_dedup_pairs, release
+    from srag_spark.operators.dedup import minhash_dedup_pairs
+    from srag_spark.functions.planning import release
 
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma delta epsilon {i}") for i in range(20)],
@@ -478,7 +492,9 @@ def test_semdedup_matches_bruteforce_rule(spark):
     point with cosine >= tau to ANY earlier-ranked cluster-mate."""
     import numpy as np
 
-    from srag_spark.operators.dedup import release, semdedup_flags
+    from srag_spark.operators.dedup import semdedup_flags
+
+    from srag_spark.functions.planning import release
     from srag_spark.operators.similarity import make_centroids
 
     dim, n_clusters, tau = 16, 4, 0.9

@@ -12,7 +12,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from srag_spark.operators.dedup import release
+from srag_spark.functions.planning import release
 from srag_spark.operators.similarity import knn_graph, pagerank
 
 SF_DIR = "/root/testdata/sf0.001"

@@ -8,7 +8,7 @@ import hashlib
 import pytest
 
 from srag_spark.operators.corpus import sample_stratified
-from srag_spark.operators.dedup import release
+from srag_spark.functions.planning import release
 from srag_spark.operators.textstats import ngram_topk
 
 

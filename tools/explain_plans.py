@@ -3,19 +3,24 @@ checking the properties that matter at scale — PushedFilters reaching the
 parquet scan, pruned ReadSchema, WholeStageCodegen spans, broadcast joins
 where a side is small, and no unexpected exchanges.
 
-Usage: python tools/explain_plans.py [sf_dir] [query ...]
-Prints a per-query summary plus grep-able plan excerpts.
+Usage: python tools/explain_plans.py [sf_dir] [query ...] [-v] [--save TAG SUFFIX]
+Prints a per-query summary plus grep-able plan excerpts (-v prints each
+full plan).  ``--save TAG SUFFIX`` also writes each plan to
+plans/<TAG>/<query>_<SUFFIX>.txt (before/after evidence for a change):
+e.g.   python tools/explain_plans.py /root/testdata/sf0.1 ann_knn_graph --save r06 before
 """
 
 from __future__ import annotations
 
+import argparse
 import io
 import re
 import sys
 from contextlib import redirect_stdout
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 import __spark_entry__ as entrymod
 from srag_spark.session import get_spark
@@ -39,14 +44,23 @@ def plan_of(df) -> str:
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("queries", nargs="*", help="entry names (default: all)")
+    ap.add_argument("-v", action="store_true", help="print each full plan")
+    ap.add_argument("--save", nargs=2, metavar=("TAG", "SUFFIX"),
+                    help="write plans/TAG/<query>_SUFFIX.txt")
+    args = ap.parse_args()
+    out_dir = ROOT / "plans" / args.save[0] if args.save else None
+    if out_dir:
+        out_dir.mkdir(parents=True, exist_ok=True)
+    only = set(args.queries)
     spark = get_spark("explain", master="local[4]", shuffle_partitions=4)
     for name, fn in entrymod.queries().items():
         if only and name not in only:
             continue
         try:
-            plan = plan_of(fn(spark, sf_dir))
+            plan = plan_of(fn(spark, args.sf_dir))
         except Exception as e:  # noqa: BLE001
             print(f"== {name}: ERROR {e}")
             continue
@@ -60,8 +74,11 @@ def main() -> None:
             f"pushed={counts['pushed_filters']} "
             f"python={counts['python_eval']} scan_cols={widths}"
         )
-        if "-v" in sys.argv:
+        if args.v:
             print(plan)
+        if out_dir:
+            (out_dir / f"{name}_{args.save[1]}.txt").write_text(plan)
+            print(f"wrote plans/{args.save[0]}/{name}_{args.save[1]}.txt")
     spark.stop()
 
 
