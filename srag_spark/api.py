@@ -17,9 +17,11 @@ manifest-committed tables under a single root:
 ``ingest`` is the whole worker pipeline (extract → transcript build →
 chunk → embed → upsert, IngestionWorker.scala:70-95 +
 IndexingPipeline.scala:56-115) as ONE call: re-ingesting a document
-replaces it everywhere (entity delete before keyed upsert, so a shrunk
-doc leaves no stale chunks — the reference's delete-then-index,
-OpenSearchAdapter.scala:147-181); replaying converges (J7).  ``query``
+replaces it everywhere with one merge commit per table (the keyed upsert
+also drops the doc's previous chunk and embedding rows, so a shrunk doc
+leaves nothing stale — the reference's delete-then-index,
+OpenSearchAdapter.scala:147-181, as a single snapshot); replaying
+converges (J7).  ``query``
 is QueryService.retrieveContext (vector ∥ BM25 → RRF → rerank gates).
 
 Every write commits through the snapshot-atomic manifest protocol
@@ -70,6 +72,7 @@ from srag_spark.sources.tables import (
     latest_manifest_version,
     read_manifest,
     read_table,
+    rollback as table_rollback,
     table_exists,
     upsert_by_key,
 )
@@ -253,7 +256,7 @@ class SragEngine:
         with held() as ledger:
             # the input batch feeds several subplans (both extraction
             # branches, the metadata/language joins, audio timing, the
-            # doc-id deletes) — persist it so an expensive source (a JSONL
+            # replaced doc ids) — persist it so an expensive source (a JSONL
             # parse, a remote scan) is read once per ingest
             docs = persist(docs, ledger, StorageLevel.MEMORY_AND_DISK)
             extracted = extract_documents(
@@ -293,23 +296,20 @@ class SragEngine:
             embeddings = build_embeddings(chunks, embed_fn=self.embed_fn)
 
             doc_ids = docs.select("doc_id").distinct()
-            # replace-entity: a re-ingested doc drops ALL its previous rows
-            # first (delete-then-index), so shrunk docs leave nothing stale
-            for path in (self.chunks_path, self.embeddings_path):
-                if table_exists(self.spark, path):
-                    delete_by_key(self.spark, path, doc_ids, ["doc_id"])
             upsert_by_key(
                 self.spark, self.transcripts_path, transcripts, ["doc_id"],
                 n_buckets=self.n_buckets,
             )
-            upsert_by_key(
-                self.spark, self.chunks_path, chunks, _CHUNK_KEY,
-                n_buckets=self.n_buckets,
-            )
-            upsert_by_key(
-                self.spark, self.embeddings_path, embeddings, _CHUNK_KEY,
-                n_buckets=self.n_buckets,
-            )
+            # replace-entity: a re-ingested doc drops ALL its previous
+            # chunk and embedding rows in the same commit that lands the
+            # new ones, so shrunk docs leave nothing stale
+            for path, rows in (
+                (self.chunks_path, chunks), (self.embeddings_path, embeddings)
+            ):
+                upsert_by_key(
+                    self.spark, path, rows, _CHUNK_KEY,
+                    n_buckets=self.n_buckets, deletes=doc_ids,
+                )
             # per-doc extraction lineage metrics (north rule; the batch
             # pipeline records the same per bucket, plans/pipeline.py) —
             # a thin projection of the already-persisted extraction
@@ -507,8 +507,6 @@ class SragEngine:
         the data path moves; a table the stage CREATED rolls to an empty
         snapshot).  The staged commit dirs become vacuumable garbage.
         Raises StagedConflict if a table moved past its staged version."""
-        from srag_spark.sources.tables import rollback as table_rollback
-
         rec = self._wap_record(staging_id)
         current = self._table_versions()
         for name, v in rec["staged"].items():
@@ -522,17 +520,9 @@ class SragEngine:
             sv, bv = rec["staged"].get(name), rec["base"].get(name)
             if sv is None or sv == bv:
                 continue  # table untouched by the stage
-            if bv is not None:
-                table_rollback(self.spark, path, bv)
-            else:
-                # the stage created this table: roll forward to an EMPTY
-                # snapshot (same layout/schema, no live buckets)
-                m = read_manifest(self.spark, path, version=sv)
-                body = {
-                    k: v for k, v in m.items() if k not in ("version", "buckets")
-                }
-                body["buckets"] = {}
-                commit_manifest(self.spark, path, body, expected_prev=sv)
+            # a table the stage CREATED rolls to version 0: an EMPTY
+            # snapshot (same layout/schema, no live buckets)
+            table_rollback(self.spark, path, bv or 0)
         # re-pin so readers and vacuum track the unwound latest versions
         self._publish_engine_snapshot()
         fsio.delete(self.spark, self._wap_path(staging_id), recursive=False)
@@ -824,8 +814,6 @@ class SragEngine:
         any data path moves; the rolled-back-over snapshots stay
         time-travelable until vacuumed.  The bad-ingest undo button.
         Returns the new engine snapshot version."""
-        from srag_spark.sources.tables import rollback as table_rollback
-
         pins = self._pinned(snapshot)  # raises if the snapshot is vacuumed
         for name, v in pins.items():
             # every pinned table version must still be readable

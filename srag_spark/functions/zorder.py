@@ -40,6 +40,8 @@ integration.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -81,7 +83,7 @@ def _as_double_sql(col: str, dtype: str) -> str | None:
 
 
 def compute_boundaries(
-    df: DataFrame, cols: list[str], bits: int = 8, rel_err: float | None = None
+    df: DataFrame, cols: list[str], bits: int = 8
 ) -> dict[str, list[float]]:
     """Per-column ascending quantile boundaries for ``2^bits`` bins —
     one GK-sketch pass over ``df`` (``approxQuantile`` on all columns at
@@ -89,14 +91,12 @@ def compute_boundaries(
     count adapts to its actual cardinality.  Raises on unsupported
     column types so callers fail before rewriting anything.
 
-    ``rel_err`` defaults to a QUARTER of the bin spacing (``1 / 2^(bits
-    + 2)``): the sketch error must be well under the 1/2^bits distance
-    between requested quantiles or adjacent edges come back equal /
-    inverted and the dedup collapses the design's bin count (a 0.01
-    error at bits=8 yields ~50-100 effective bins, not 256).  GK driver
-    state stays O(1/rel_err · log n) floats — trivial at 0.001."""
-    if rel_err is None:
-        rel_err = 1.0 / (1 << (bits + 2))
+    The sketch's relative error is a QUARTER of the bin spacing (``1 /
+    2^(bits + 2)``): it must be well under the 1/2^bits distance between
+    requested quantiles or adjacent edges come back equal / inverted and
+    the dedup collapses the design's bin count (a 0.01 error at bits=8
+    yields ~50-100 effective bins, not 256).  GK driver state stays
+    O(2^(bits + 2) · log n) floats — trivial at bits=8."""
     if not 1 <= len(cols) <= _MAX_COLS:
         raise ValueError(f"zorder_by takes 1..{_MAX_COLS} columns, got {len(cols)}")
     by_name = {f.name: f.dataType.simpleString() for f in df.schema.fields}
@@ -117,12 +117,12 @@ def compute_boundaries(
     # percentile_approx: the codegen'd, map-side-combinable AGGREGATE
     # sketch (one normal Spark job) — DataFrame.approxQuantile computes
     # the same kind of estimate through a boxing RDD path, measured ~3×
-    # slower on a 1M-row pass.  accuracy ≈ 1/rel_err bounds the rank
-    # error the same way.  Boundaries shape the LAYOUT only (zone maps
+    # slower on a 1M-row pass.  accuracy ≈ 1/relative error bounds the
+    # rank error the same way.  Boundaries shape the LAYOUT only (zone maps
     # are recorded from the written data), so estimator wobble never
     # changes any query result.
     probs_sql = "array(" + ",".join(repr(p) for p in probs) + ")"
-    acc = max(1 << (bits + 2), int(round(1.0 / rel_err)))
+    acc = 1 << (bits + 2)
     row = proj.agg(
         *[
             F.expr(
@@ -145,6 +145,18 @@ def compute_boundaries(
     return out
 
 
+def _double_sql(v: float) -> str:
+    """A DOUBLE literal in Spark SQL text; non-finite values (an
+    ±Infinity or NaN column value can become a quantile edge) have no
+    ``<digits>D`` form and are cast from their string names."""
+    v = float(v)
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+    return f"{v!r}D"
+
+
 def _bin_search_sql(edges: list[float], x_sql: str) -> str:
     """SQL text of ``#edges <= x`` (the bin index) as a NESTED BINARY
     CASE tree: only ~log2(len(edges)) comparisons are ever evaluated
@@ -162,7 +174,7 @@ def _bin_search_sql(edges: list[float], x_sql: str) -> str:
             return str(lo)
         mid = (lo + hi + 1) // 2
         return (
-            f"(CASE WHEN {x_sql} >= {float(edges[mid - 1])!r}D "
+            f"(CASE WHEN {x_sql} >= {_double_sql(edges[mid - 1])} "
             f"THEN {rec(mid, hi)} ELSE {rec(lo, mid - 1)} END)"
         )
 

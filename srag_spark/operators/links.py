@@ -54,8 +54,12 @@ def _normalize_ws(col):
     # (?U) = Java UNICODE_CHARACTER_CLASS: \s matches Unicode whitespace
     # (NBSP, U+3000, ...), matching the frozen golden spec's Python
     # str.split() semantics — Java's default ASCII-only \s diverged on
-    # 'foo\xa0bar' (ADVICE r5).  ASCII inputs are unchanged.
-    return F.array_join(F.array_remove(F.split(col, r"(?U)\s+"), ""), " ")
+    # 'foo\xa0bar' (ADVICE r5).  str.split() also splits on the
+    # separators U+001C-U+001F, which no Java \s class matches, so they
+    # are listed explicitly.  ASCII-whitespace inputs are unchanged.
+    return F.array_join(
+        F.array_remove(F.split(col, r"(?U)[\s\x1c-\x1f]+"), ""), " "
+    )
 
 
 def extract_links(

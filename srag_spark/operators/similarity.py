@@ -306,7 +306,6 @@ def knn_graph(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     materialize: bool = True,
-    persisted: list | None = None,
 ) -> DataFrame:
     """Self-kNN graph over an embedding table: for every vector, its (up
     to) ``k`` nearest neighbors by cosine — ``(vec_id, nbr_id, score_r,

@@ -7,9 +7,9 @@ non-starter.  :func:`incremental_refresh` computes the manifest-level
 changelog between the last PROCESSED source snapshot and the current one
 (:func:`srag_spark.sources.tables.snapshot_diff` — one co-bucketed
 full-outer join over exactly the two manifests' dirs), re-extracts ONLY
-the inserted/updated documents (the engine's delete-then-index upsert
-replaces every derived row of a changed doc, so shrunk docs leave no
-stale chunks), retracts the deleted ones from all four derived tables,
+the inserted/updated documents (the engine's entity-replacing upsert
+swaps every derived row of a changed doc in one commit per table, so
+shrunk docs leave no stale chunks), retracts the deleted ones from all four derived tables,
 publishes ONE engine snapshot for the whole refresh, and advances a
 durable per-source checkpoint under the engine's metadata.
 
@@ -91,7 +91,7 @@ def incremental_refresh(
     First call (no checkpoint): full ingest of the source snapshot.
     Subsequent calls: CDC diff → keyed deletes of retracted docs across
     transcripts/chunks/embeddings/metrics → re-ingest of inserted and
-    updated docs (delete-then-index inside :meth:`SragEngine.ingest`)
+    updated docs (entity replace inside :meth:`SragEngine.ingest`)
     → one atomic engine-snapshot publish → checkpoint advance.
 
     Pass ``to_version`` to refresh up to a PINNED source snapshot (e.g. a

@@ -6,8 +6,9 @@ delete+index per document, sequentially over HTTP; here each stage is
 one declarative plan over all documents at once, and
 ``SragEngine.ingest`` composes and writes them.  The reference's "delete
 then index" idempotency (tolerated-failure delete,
-IndexingPipeline.scala:93-103) maps to the engine's keyed delete +
-upsert — a re-run converges to the same tables (J7).
+IndexingPipeline.scala:93-103) maps to one merge commit per table (a
+keyed upsert that also drops the document's previous rows) — a re-run
+converges to the same tables (J7).
 """
 
 from __future__ import annotations

@@ -4,8 +4,8 @@ The reference persists to Postgres with upserts
 (PostgresTranscriptRepository.scala:39-58 ``INSERT ... ON CONFLICT(id) DO
 UPDATE``), deletes lexical segments by transcript before re-indexing
 (OpenSearchAdapter.scala:147-181), and tolerates replays (J7).  On a lake
-the same semantics are Iceberg ``MERGE INTO`` / row-level deletes; this
-container has no Iceberg runtime, so this module implements the same
+the same semantics are Iceberg ``MERGE INTO`` / row-level deletes; with
+no Iceberg runtime available, this module implements the same
 contract — including Iceberg's snapshot-atomicity — over plain parquet
 plus a tiny manifest layer:
 
@@ -25,10 +25,14 @@ plus a tiny manifest layer:
   — the Iceberg commit protocol in miniature.  A crash anywhere before
   the rename leaves readers on the old consistent snapshot (cross-bucket
   atomicity, previously a documented gap);
-* ``upsert_by_key`` / ``delete_by_key`` read ONLY the manifest dirs of
-  buckets containing incoming keys and write ONLY those buckets' new
-  dirs: a 1-row upsert into a 10k-bucket 100 TB table reads and rewrites
-  ~1/10k of it.  Both are idempotent — replaying a batch converges (J7);
+* every keyed write — ``upsert_by_key``, ``delete_by_key``, and the
+  entity replace (``upsert_by_key(deletes=...)``: drop every row of the
+  batch's entities, then insert the batch) — is ONE merge commit per
+  table (``_merge_once``): it reads ONLY the manifest dirs of buckets
+  containing incoming or deleted keys and writes ONLY those buckets' new
+  dirs, so a 1-row upsert into a 10k-bucket 100 TB table reads and
+  rewrites ~1/10k of it.  All are idempotent — replaying a batch
+  converges (J7);
 * layout metadata lives INSIDE the manifest (not a sidecar), so it is
   committed atomically with the first data write — a table can never
   exist with data but no layout record;
@@ -40,7 +44,8 @@ Concurrency: optimistic compare-and-publish.  Each commit pins the
 snapshot version it was derived from; if another writer published in
 between, the commit is REJECTED (never a lost update — the reference
 serializes the same hazard with Postgres row locks) and the batch
-retries against the fresh snapshot (bounded by ``max_commit_retries``).
+retries against the fresh snapshot (``_with_commit_retries``, bounded by
+``_COMMIT_RETRIES``).
 On S3 proper the rename becomes a conditional PUT (see
 fsio.rename_atomic).
 
@@ -53,6 +58,7 @@ from __future__ import annotations
 
 import json
 import uuid
+from functools import reduce
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -64,6 +70,7 @@ from srag_spark.sources import fsio
 
 BUCKET_COL = "_kb"
 DEFAULT_KEY_BUCKETS = 64
+_COMMIT_RETRIES = 2  # re-derivations after a lost compare-and-publish race
 _MANIFEST_DIR = "_manifests"
 
 
@@ -280,8 +287,8 @@ def upsert_by_key(
     incoming: DataFrame,
     key_cols: list[str],
     n_buckets: int = DEFAULT_KEY_BUCKETS,
-    max_commit_retries: int = 2,
     persist_incoming: bool = True,
+    deletes: DataFrame | None = None,
 ) -> None:
     """MERGE-INTO-equivalent: replace rows matching incoming keys, insert
     the rest (right-biased upsert, S4 semantics).  Reads and rewrites ONLY
@@ -289,6 +296,15 @@ def upsert_by_key(
     the manifest.  Because merged buckets are written to a NEW directory
     (never the one being read), no lineage break / checkpoint is needed
     and a mid-write crash leaves the old snapshot intact.
+
+    ``deletes`` (optional) replaces whole ENTITIES in the same commit:
+    every existing row whose ``deletes.columns`` values appear in
+    ``deletes`` is dropped before the incoming rows land — the
+    reference's delete-then-index (OpenSearchAdapter.scala:147-181) as
+    ONE snapshot, so a re-ingested document that shrank leaves nothing
+    stale and no reader or crash ever sees the deleted-but-not-yet-
+    upserted state.  Its columns must include the table's bucket column
+    (e.g. ``doc_id`` for a ``(doc_id, segment_index)`` table).
 
     SCHEMA EVOLUTION (Iceberg add-column semantics): an incoming batch
     with extra columns widens the table — new columns append as nullable
@@ -314,124 +330,16 @@ def upsert_by_key(
 
     Optimistic concurrency: if another writer commits between this
     batch's manifest read and its commit, the commit is rejected (never a
-    lost update) and the whole batch retries against the fresh snapshot,
-    up to ``max_commit_retries`` times — the reference's Postgres row
-    locks replaced by compare-and-publish."""
+    lost update) and the whole batch retries against the fresh snapshot
+    (:func:`_with_commit_retries`) — the reference's Postgres row locks
+    replaced by compare-and-publish."""
     incoming = incoming.dropDuplicates(key_cols)
     with held() as ledger:
         if persist_incoming:
             incoming = persist(incoming, ledger, StorageLevel.MEMORY_AND_DISK)
-        for attempt in range(max_commit_retries + 1):
-            try:
-                return _upsert_once(spark, path, incoming, key_cols, n_buckets)
-            except ManifestCommitRace:
-                if attempt == max_commit_retries:
-                    raise
-
-
-def _prepare_upsert(
-    spark: SparkSession,
-    path: str,
-    incoming: DataFrame,
-    key_cols: list[str],
-    n_buckets: int,
-) -> dict:
-    """The shared write half of an upsert: merge ``incoming`` against the
-    current snapshot and land the merged buckets under a fresh commit dir,
-    WITHOUT publishing.  Returns everything a publisher (direct commit or
-    WAP staging) needs::
-
-        {"body": <manifest body>, "expected_prev": <base version>,
-         "touched": [bucket ids], "base_touched_dirs": {bucket: dir|None}}
-
-    The data dirs are invisible to readers until some manifest references
-    them — this is exactly the property write–audit–publish exploits."""
-    manifest = read_manifest(spark, path)
-    expected_prev = manifest["version"] if manifest is not None else 0
-    n_buckets, bcol = _layout(manifest, key_cols, n_buckets)
-    inc = incoming.withColumn(BUCKET_COL, _key_bucket(bcol, n_buckets))
-    commit_id = f"c{uuid.uuid4().hex}"
-
-    if manifest is None:
-        # initial load: write once, derive the bucket set from the
-        # committed directories (no second execution of the incoming plan)
-        data_dir = _write_buckets(inc, path, commit_id)
-        touched = _buckets_in_commit(spark, data_dir)
-        body = {
-            "n_buckets": n_buckets,
-            "bucket_col": bcol,
-            "key_cols": list(key_cols),
-            "schema": incoming.schema.json(),
-            "buckets": {
-                str(b): f"data/{commit_id}/{BUCKET_COL}={b}" for b in touched
-            },
-        }
-        return {
-            "body": body,
-            "expected_prev": expected_prev,
-            "touched": sorted(touched),
-            "base_touched_dirs": {str(b): None for b in touched},
-        }
-    # incremental: the touched-bucket set drives manifest-level pruning of
-    # the read side, so it must be known BEFORE the merge (one pass over
-    # incoming's bucket column — tiny projection)
-    touched = sorted(
-        r[0] for r in inc.select(BUCKET_COL).distinct().collect()
-    )
-
-    # schema evolution (Iceberg add-column semantics): new incoming
-    # columns widen the table schema as nullable; incoming batches may
-    # omit table columns (filled with typed nulls); type changes are
-    # rejected in _merge_schemas.  Untouched buckets' parquet files
-    # simply lack the new columns — Spark's explicit-schema parquet read
-    # returns null for them, so no rewrite of untouched data is needed.
-    old_schema = StructType.fromJson(json.loads(manifest["schema"]))
-    merged = _merge_schemas(old_schema, incoming.schema)
-
-    # manifest-level pruning: read only touched buckets' live dirs
-    existing = _align(read_table(spark, path, buckets=touched), merged)
-    # incoming keys are unique (dropDuplicates in upsert_by_key), so the
-    # anti-join side needs no extra distinct aggregation
-    kept = existing.join(
-        incoming.select(*key_cols), key_cols, "left_anti"
-    ).withColumn(BUCKET_COL, _key_bucket(bcol, n_buckets))
-    inc_aligned = _align(incoming, merged).withColumn(
-        BUCKET_COL, _key_bucket(bcol, n_buckets)
-    )
-    _write_buckets(kept.unionByName(inc_aligned), path, commit_id)
-    buckets = dict(manifest["buckets"])
-    base_touched_dirs = {str(b): buckets.get(str(b)) for b in touched}
-    for b in touched:  # every touched bucket has ≥1 incoming row
-        buckets[str(b)] = f"data/{commit_id}/{BUCKET_COL}={b}"
-    body = {
-        "n_buckets": n_buckets,
-        "bucket_col": bcol,
-        "key_cols": manifest.get("key_cols", list(key_cols)),
-        "sort_by": manifest.get("sort_by"),
-        "zorder_by": manifest.get("zorder_by"),
-        "stats": _carry_stats(manifest, touched),
-        "schema": merged.json(),
-        "buckets": buckets,
-    }
-    return {
-        "body": body,
-        "expected_prev": expected_prev,
-        "touched": touched,
-        "base_touched_dirs": base_touched_dirs,
-    }
-
-
-def _upsert_once(
-    spark: SparkSession,
-    path: str,
-    incoming: DataFrame,
-    key_cols: list[str],
-    n_buckets: int,
-) -> None:
-    prep = _prepare_upsert(spark, path, incoming, key_cols, n_buckets)
-    commit_manifest(
-        spark, path, prep["body"], expected_prev=prep["expected_prev"]
-    )
+        _with_commit_retries(
+            lambda: _merge_once(spark, path, incoming, key_cols, deletes, n_buckets)
+        )
 
 
 def delete_by_key(
@@ -439,90 +347,160 @@ def delete_by_key(
     path: str,
     keys: DataFrame,
     key_cols: list[str],
-    max_commit_retries: int = 2,
 ) -> None:
-    """Row-level delete: drop rows whose key appears in ``keys`` (S10).
-    ``key_cols`` may be a key prefix as long as it includes the table's
-    bucket column.  Emptied buckets simply leave the manifest — no
-    directory deletion on the data path (old dirs age out via vacuum).
-    Same optimistic-concurrency retry as :func:`upsert_by_key`."""
-    for attempt in range(max_commit_retries + 1):
+    """Row-level delete: drop rows whose key appears in ``keys`` (S10) —
+    a merge with no incoming rows.  ``key_cols`` may be a key prefix as
+    long as it includes the table's bucket column.  Emptied buckets
+    simply leave the manifest — no directory deletion on the data path
+    (old dirs age out via vacuum)."""
+    deletes = keys.select(*key_cols)
+    _with_commit_retries(
+        lambda: _merge_once(spark, path, None, key_cols, deletes, DEFAULT_KEY_BUCKETS)
+    )
+
+
+def _with_commit_retries(fn):
+    """Run one derive-and-publish attempt ``fn()``; when it loses the
+    compare-and-publish race (:class:`ManifestCommitRace`), re-run it
+    against the fresh snapshot, at most ``_COMMIT_RETRIES`` more times."""
+    for attempt in range(_COMMIT_RETRIES + 1):
         try:
-            return _delete_once(spark, path, keys, key_cols)
+            return fn()
         except ManifestCommitRace:
-            if attempt == max_commit_retries:
+            if attempt == _COMMIT_RETRIES:
                 raise
 
 
-def _delete_once(
+def _next_body(manifest: dict, touched=(), **changes) -> dict:
+    """The manifest body of the snapshot that follows ``manifest``:
+    layout, keys, clustering order, schema and live buckets carried over,
+    zone-map stats dropped for the ``touched`` (rewritten) buckets, and
+    ``changes`` applied on top.  Every commit builds its body here."""
+    body = {
+        "n_buckets": manifest["n_buckets"],
+        "bucket_col": manifest["bucket_col"],
+        "key_cols": manifest.get("key_cols"),
+        "sort_by": manifest.get("sort_by"),
+        "zorder_by": manifest.get("zorder_by"),
+        "stats": _carry_stats(manifest, touched),
+        "schema": manifest["schema"],
+        "buckets": dict(manifest["buckets"]),
+    }
+    return {**body, **changes}
+
+
+def _merge_once(spark, path, incoming, key_cols, deletes, n_buckets) -> None:
+    """One keyed merge commit: :func:`_prepare_merge`, then publish
+    pinned to the snapshot it was derived from."""
+    prep = _prepare_merge(spark, path, incoming, key_cols, deletes, n_buckets)
+    if prep is not None:
+        commit_manifest(spark, path, prep["body"], expected_prev=prep["expected_prev"])
+
+
+def _prepare_merge(
     spark: SparkSession,
     path: str,
-    keys: DataFrame,
+    incoming: DataFrame | None,
     key_cols: list[str],
-) -> None:
+    deletes: DataFrame | None,
+    n_buckets: int,
+) -> dict | None:
+    """The write half of every keyed commit: merge ``incoming`` (unique
+    keys, or None) and ``deletes`` (entity keys, or None) against the
+    current snapshot and land the touched buckets under a fresh commit
+    dir, WITHOUT publishing.  Returns everything a publisher (direct
+    commit or WAP staging) needs, or None when a delete finds nothing
+    to commit (no table, or no live bucket holds a key)::
+
+        {"body": <manifest body>, "expected_prev": <base version>,
+         "touched": [bucket ids], "base_touched_dirs": {bucket: dir|None}}
+
+    The data dirs are invisible to readers until some manifest references
+    them — this is exactly the property write–audit–publish exploits."""
     manifest = read_manifest(spark, path)
     if manifest is None:
-        return
-    n_buckets, bcol = _layout(manifest, key_cols, DEFAULT_KEY_BUCKETS)
-    keyed = keys.select(*key_cols).distinct().withColumn(
-        BUCKET_COL, _key_bucket(bcol, n_buckets)
+        if incoming is None:
+            return None
+        # initial load: write once, derive the bucket set from the
+        # committed directories (no second execution of the incoming plan)
+        n_buckets, bcol = _layout(None, key_cols, n_buckets)
+        buckets = _write_touched(
+            spark, path, incoming.withColumn(BUCKET_COL, _key_bucket(bcol, n_buckets))
+        )
+        touched = sorted(int(b) for b in buckets)
+        return {
+            "body": _next_body({
+                "n_buckets": n_buckets,
+                "bucket_col": bcol,
+                "key_cols": list(key_cols),
+                "schema": incoming.schema.json(),
+                "buckets": buckets,
+            }),
+            "expected_prev": 0,
+            "touched": touched,
+            "base_touched_dirs": {str(b): None for b in touched},
+        }
+    n_buckets, bcol = _layout(manifest, key_cols, n_buckets)
+    if deletes is not None:  # entity keys must carry the bucket column too
+        _layout(manifest, deletes.columns, n_buckets)
+    bucket = _key_bucket(bcol, n_buckets)
+
+    # the touched-bucket set drives manifest-level pruning of the read
+    # side, so it must be known BEFORE the merge: ONE collect over the
+    # bucket ids of the incoming and delete keys (tiny projection).
+    # Incoming buckets are always rewritten; delete-only buckets only if
+    # they are live.
+    rows = reduce(
+        DataFrame.unionByName,
+        [
+            df.select(bucket.alias(BUCKET_COL), F.lit(df is incoming).alias("inc"))
+            for df in (incoming, deletes)
+            if df is not None
+        ],
+    ).distinct().collect()
+    live = {int(b) for b in manifest["buckets"]}
+    touched = sorted({b for b, inc in rows if inc} | ({b for b, _ in rows} & live))
+    if incoming is None and not touched:
+        return None
+
+    # schema evolution (Iceberg add-column semantics): new incoming
+    # columns widen the table schema as nullable; incoming batches may
+    # omit table columns (filled with typed nulls); type changes are
+    # rejected in _merge_schemas.  Untouched buckets' parquet files
+    # simply lack the new columns — Spark's explicit-schema parquet read
+    # returns null for them, so no rewrite of untouched data is needed.
+    schema = StructType.fromJson(json.loads(manifest["schema"]))
+    # manifest-level pruning: read only touched buckets' live dirs
+    merged = read_table(spark, path, buckets=touched)
+    if deletes is not None:
+        merged = merged.join(deletes, deletes.columns, "left_anti")
+    if incoming is not None:
+        schema = _merge_schemas(schema, incoming.schema)
+        # incoming keys are unique (dropDuplicates in upsert_by_key), so
+        # the anti-join side needs no extra distinct aggregation
+        merged = _align(
+            merged.join(incoming.select(*key_cols), key_cols, "left_anti"), schema
+        ).unionByName(_align(incoming, schema))
+    buckets = _write_touched(
+        spark, path, merged.withColumn(BUCKET_COL, bucket), manifest["buckets"], touched
     )
-    touched = sorted(
-        {r[0] for r in keyed.select(BUCKET_COL).distinct().collect()}
-        & {int(b) for b in manifest["buckets"]}
-    )
-    if not touched:
-        return
-    existing = read_table(spark, path, buckets=touched)
-    remaining = existing.join(
-        keyed.drop(BUCKET_COL), key_cols, "left_anti"
-    ).withColumn(BUCKET_COL, _key_bucket(bcol, n_buckets))
-    _commit_touched_rewrite(spark, path, manifest, touched, remaining)
+    return {
+        "body": _next_body(
+            manifest,
+            touched,
+            # tables created before key recording learn their key here
+            key_cols=manifest.get("key_cols")
+            or (list(key_cols) if incoming is not None else None),
+            schema=schema.json(),
+            buckets=buckets,
+        ),
+        "expected_prev": manifest["version"],
+        "touched": touched,
+        "base_touched_dirs": {str(b): manifest["buckets"].get(str(b)) for b in touched},
+    }
 
 
-def _commit_touched_rewrite(
-    spark: SparkSession,
-    path: str,
-    manifest: dict,
-    touched: list[int],
-    remaining: DataFrame,
-) -> None:
-    """Shared delete-path tail: write the touched buckets' remaining rows
-    under a fresh commit dir, drop emptied buckets from the snapshot, and
-    publish — pinned to the manifest the caller derived ``remaining``
-    from (compare-and-publish)."""
-    commit_id = f"c{uuid.uuid4().hex}"
-    _write_buckets(remaining, path, commit_id)
-    surviving = set(_buckets_in_commit(spark, f"{path}/data/{commit_id}"))
-    buckets = dict(manifest["buckets"])
-    for b in touched:
-        if b in surviving:
-            buckets[str(b)] = f"data/{commit_id}/{BUCKET_COL}={b}"
-        else:
-            buckets.pop(str(b), None)  # bucket emptied → drop from snapshot
-    commit_manifest(
-        spark,
-        path,
-        {
-            "n_buckets": manifest["n_buckets"],
-            "bucket_col": manifest["bucket_col"],
-            "key_cols": manifest.get("key_cols"),
-            "sort_by": manifest.get("sort_by"),
-            "zorder_by": manifest.get("zorder_by"),
-            "stats": _carry_stats(manifest, touched),
-            "schema": manifest["schema"],
-            "buckets": buckets,
-        },
-        expected_prev=manifest["version"],
-    )
-
-
-def delete_where(
-    spark: SparkSession,
-    path: str,
-    condition,
-    max_commit_retries: int = 2,
-) -> int:
+def delete_where(spark: SparkSession, path: str, condition) -> int:
     """Predicate delete (Iceberg ``DELETE FROM ... WHERE`` semantics):
     drop every row matching ``condition`` (a Column or SQL string),
     rewriting ONLY the buckets that contain matches.  Generalizes
@@ -539,12 +517,7 @@ def delete_where(
     leave the snapshot like :func:`delete_by_key`.  Same optimistic
     compare-and-publish retry as every other writer."""
     cond = F.expr(condition) if isinstance(condition, str) else condition
-    for attempt in range(max_commit_retries + 1):
-        try:
-            return _delete_where_once(spark, path, cond)
-        except ManifestCommitRace:
-            if attempt == max_commit_retries:
-                raise
+    return _with_commit_retries(lambda: _delete_where_once(spark, path, cond))
 
 
 def _delete_where_once(spark: SparkSession, path: str, cond) -> int:
@@ -572,8 +545,33 @@ def _delete_where_once(spark: SparkSession, path: str, cond) -> int:
         .filter(~F.coalesce(cond, F.lit(False)))
         .withColumn(BUCKET_COL, _key_bucket(bcol, n_buckets))
     )
-    _commit_touched_rewrite(spark, path, manifest, touched, remaining)
+    buckets = _write_touched(spark, path, remaining, manifest["buckets"], touched)
+    commit_manifest(
+        spark,
+        path,
+        _next_body(manifest, touched, buckets=buckets),
+        expected_prev=manifest["version"],
+    )
     return int(sum(hit.values()))
+
+
+def _write_touched(
+    spark: SparkSession, path: str, rows: DataFrame, live=None, touched=None
+) -> dict:
+    """Write ``rows`` (already carrying BUCKET_COL) under a fresh commit
+    dir and return the live-bucket map ``live`` (bucket → dir) with every
+    ``touched`` bucket pointed at its new dir — or dropped when none of
+    its rows survived (an emptied bucket leaves the snapshot).
+    ``touched=None`` means every bucket the commit wrote."""
+    commit_id = f"c{uuid.uuid4().hex}"
+    written = set(_buckets_in_commit(spark, _write_buckets(rows, path, commit_id)))
+    buckets = dict(live or {})
+    for b in written if touched is None else touched:
+        if b in written:
+            buckets[str(b)] = f"data/{commit_id}/{BUCKET_COL}={b}"
+        else:
+            buckets.pop(str(b), None)
+    return buckets
 
 
 def _buckets_in_commit(spark: SparkSession, data_dir: str) -> list[int]:
@@ -693,7 +691,6 @@ def rewrite_table(
     sort_by: list[str] | None = None,
     stats_for: list[str] | None = None,
     zorder_by: list[str] | None = None,
-    max_commit_retries: int = 2,
 ) -> dict:
     """Compaction + bucket-layout evolution in one snapshot-atomic
     rewrite: read the current snapshot, rewrite EVERY live row under one
@@ -757,14 +754,9 @@ def rewrite_table(
     rides the same exchange) — the minimum any re-layout can do.
     Nothing driver-side beyond the manifest dict.
     """
-    for attempt in range(max_commit_retries + 1):
-        try:
-            return _rewrite_once(
-                spark, path, n_buckets, sort_by, stats_for, zorder_by
-            )
-        except ManifestCommitRace:
-            if attempt == max_commit_retries:
-                raise
+    return _with_commit_retries(
+        lambda: _rewrite_once(spark, path, n_buckets, sort_by, stats_for, zorder_by)
+    )
 
 
 def _rewrite_once(
@@ -830,16 +822,14 @@ def _rewrite_once(
     commit_manifest(
         spark,
         path,
-        {
-            "n_buckets": new_n,
-            "bucket_col": bcol,
-            "key_cols": manifest.get("key_cols"),
-            "sort_by": list(sort_by) if sort_by else None,
-            "zorder_by": list(zorder_by) if zorder_by else None,
-            "stats": stats,
-            "schema": manifest["schema"],
-            "buckets": buckets,
-        },
+        _next_body(
+            manifest,
+            n_buckets=new_n,
+            sort_by=list(sort_by) if sort_by else None,
+            zorder_by=list(zorder_by) if zorder_by else None,
+            stats=stats,
+            buckets=buckets,
+        ),
         expected_prev=expected_prev,
     )
     return {
@@ -1116,31 +1106,29 @@ def table_files(
     )
 
 
-def rollback(
-    spark: SparkSession,
-    path: str,
-    to_version: int,
-    max_commit_retries: int = 2,
-) -> int:
+def rollback(spark: SparkSession, path: str, to_version: int) -> int:
     """Restore a previous snapshot as the NEW latest (Iceberg
     ``rollback_to_snapshot``): re-publishes ``to_version``'s manifest
     content under the next version number.  Nothing on the data path
     moves — the new manifest references the old snapshot's directories,
     so the rollback is instant at any table size and the rolled-back-
-    over history stays time-travelable until vacuumed.  Same optimistic
+    over history stays time-travelable until vacuumed.  ``to_version=0``
+    is the state before the first commit: an EMPTY snapshot with the
+    latest layout and schema and no live buckets.  Same optimistic
     compare-and-publish as every commit.  Returns the new version."""
-    m = read_manifest(spark, path, version=to_version)  # raises if vacuumed
-    if m is None:
-        raise FileNotFoundError(f"no table (no committed manifest) at {path}")
-    body = {k: v for k, v in m.items() if k != "version"}
-    for attempt in range(max_commit_retries + 1):
-        prev = latest_manifest_version(spark, path) or 0
-        try:
-            commit_manifest(spark, path, body, expected_prev=prev)
-            return prev + 1
-        except ManifestCommitRace:
-            if attempt == max_commit_retries:
-                raise
+
+    def once() -> int:
+        latest = read_manifest(spark, path)
+        if latest is None:
+            raise FileNotFoundError(f"no table (no committed manifest) at {path}")
+        if to_version == 0:
+            body = _next_body(latest, stats={}, buckets={})
+        else:  # raises if vacuumed
+            body = _next_body(read_manifest(spark, path, version=to_version))
+        commit_manifest(spark, path, body, expected_prev=latest["version"])
+        return latest["version"] + 1
+
+    return _with_commit_retries(once)
 
 
 # ---------------------------------------------------------------------------
@@ -1190,7 +1178,7 @@ def stage_upsert(
     with held() as ledger:
         if persist_incoming:
             incoming = persist(incoming, ledger, StorageLevel.MEMORY_AND_DISK)
-        prep = _prepare_upsert(spark, path, incoming, key_cols, n_buckets)
+        prep = _prepare_merge(spark, path, incoming, key_cols, None, n_buckets)
     staging_id = uuid.uuid4().hex
     staged = {
         "base_version": prep["expected_prev"],
@@ -1256,7 +1244,6 @@ def publish_staged(
     spark: SparkSession,
     path: str,
     staging_id: str,
-    max_commit_retries: int = 2,
 ) -> int:
     """Write–audit–publish, step 3: atomically make the staged snapshot
     the table's latest.  If the table has not moved since staging, the
@@ -1269,21 +1256,20 @@ def publish_staged(
     the staged data is untouched and the batch must be re-staged.
     Returns the published version; the staged record is removed."""
     st = _read_staged_record(spark, path, staging_id)
-    for attempt in range(max_commit_retries + 1):
+
+    def once() -> int:
         latest = read_manifest(spark, path)
         latest_v = latest["version"] if latest is not None else 0
         if latest_v == st["base_version"]:
             body = st["body"]
         else:
             body = _rebase_staged(latest, st, path)
-        try:
-            commit_manifest(spark, path, body, expected_prev=latest_v)
-        except ManifestCommitRace:
-            if attempt == max_commit_retries:
-                raise
-            continue
-        fsio.delete(spark, _staged_path(path, staging_id), recursive=False)
+        commit_manifest(spark, path, body, expected_prev=latest_v)
         return latest_v + 1
+
+    version = _with_commit_retries(once)
+    fsio.delete(spark, _staged_path(path, staging_id), recursive=False)
+    return version
 
 
 def _rebase_staged(latest: dict | None, st: dict, path: str) -> dict:
@@ -1324,16 +1310,13 @@ def _rebase_staged(latest: dict | None, st: dict, path: str) -> dict:
     buckets = dict(latest["buckets"])
     for b in st["touched"]:
         buckets[str(b)] = staged_body["buckets"][str(b)]
-    return {
-        "n_buckets": latest["n_buckets"],
-        "bucket_col": latest["bucket_col"],
-        "key_cols": latest.get("key_cols") or staged_body.get("key_cols"),
-        "sort_by": latest.get("sort_by"),
-        "zorder_by": latest.get("zorder_by"),
-        "stats": _carry_stats(latest, st["touched"]),
-        "schema": merged.json(),
-        "buckets": buckets,
-    }
+    return _next_body(
+        latest,
+        st["touched"],
+        key_cols=latest.get("key_cols") or staged_body.get("key_cols"),
+        schema=merged.json(),
+        buckets=buckets,
+    )
 
 
 def abandon_staged(spark: SparkSession, path: str, staging_id: str) -> None:

@@ -200,20 +200,16 @@ def rebuild_bloom_sidecar(
         n_hash,
         hex_digits,
     )
-    # delete-then-write would leave a probe window with NO sidecar;
-    # upsert replaces touched buckets and a stale EMPTY bucket row (its
-    # keys all deleted from the index) is only ever a false positive —
-    # but remove vanished buckets anyway so n_keys monitoring is honest
+    # one merge commit replaces the sidecar: rebuilt buckets overwrite
+    # their rows and vanished buckets (keys all deleted from the index)
+    # drop in the same snapshot, so probes never see a window with NO
+    # sidecar and n_keys monitoring stays honest
     try:
         old = read_table(spark, bloom_path).select("bucket")
         gone = old.join(blooms.select("bucket"), "bucket", "left_anti")
-        if not gone.isEmpty():
-            from srag_spark.sources.tables import delete_by_key
-
-            delete_by_key(spark, bloom_path, gone, ["bucket"])
     except FileNotFoundError:
-        pass
-    upsert_by_key(spark, bloom_path, blooms, ["bucket"], n_buckets=4)
+        gone = None
+    upsert_by_key(spark, bloom_path, blooms, ["bucket"], n_buckets=4, deletes=gone)
     return {
         int(r["bucket"]): int(r["n_keys"])
         for r in blooms.select("bucket", "n_keys").collect()

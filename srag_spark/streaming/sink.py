@@ -1,19 +1,17 @@
 """Streaming sink into manifest-committed keyed tables.
 
 Connects Structured Streaming to the engine's table layer
-(sources/tables): each micro-batch lands via the same keyed upsert the
-batch pipeline uses, so a stream and a backfill job can maintain ONE
-table with identical semantics (the reference's worker loop writes both
-paths through the same Postgres repository —
+(sources/tables): each micro-batch lands as ONE merge commit through the
+same keyed upsert the batch pipeline uses, so a stream and a backfill job
+can maintain ONE table with identical semantics (the reference's worker
+loop writes both paths through the same Postgres repository —
 PostgresTranscriptRepository.scala:39-58).
 
 Exactly-once story: Spark's streaming checkpoint records which source
 offsets each epoch consumed; after a crash the SAME micro-batch is
 re-delivered to ``foreachBatch``, and because the keyed upsert is
 idempotent (J7 — replaying a batch converges) the table ends identical —
-at-least-once delivery × idempotent commit = effectively-once.  A crash
-*between* the delete and upsert of a replace-entity batch likewise
-converges on replay: both commits are derived from the replayed batch.
+at-least-once delivery × idempotent commit = effectively-once.
 
 Scale note: each micro-batch touches only the key-hash buckets of the
 docs it carries (manifest-level pruning), so sink cost tracks batch size,
@@ -25,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from srag_spark.sources.tables import delete_by_key, upsert_by_key
+from srag_spark.sources.tables import upsert_by_key
 from srag_spark.streaming.ingest import extract_stream, read_document_stream
 
 
@@ -45,9 +43,9 @@ def start_upsert_stream(
 
     ``replace_entities=True`` gives the reference's S4 transcript-replace
     semantics: every entity (doc) appearing in a batch has its previous
-    rows deleted before the batch's rows are upserted, so a re-ingested
-    document that SHRANK does not leave stale spans behind.  With False,
-    plain keyed row upsert (rows never deleted)."""
+    rows dropped in the same commit that upserts the batch's rows, so a
+    re-ingested document that SHRANK does not leave stale spans behind.
+    With False, plain keyed row upsert (rows never deleted)."""
     from srag_spark.operators.parse import explode_extracted
 
     flat = explode_extracted(extract_stream(read_document_stream(spark, input_dir)))
@@ -55,15 +53,11 @@ def start_upsert_stream(
     def sink(batch_df, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if replace_entities:
-            delete_by_key(
-                spark,
-                table_path,
-                batch_df.select(entity_col).distinct(),
-                [entity_col],
-            )
         upsert_by_key(
-            spark, table_path, batch_df, list(key_cols), n_buckets=n_buckets
+            spark, table_path, batch_df, list(key_cols), n_buckets=n_buckets,
+            deletes=(
+                batch_df.select(entity_col).distinct() if replace_entities else None
+            ),
         )
 
     writer = (

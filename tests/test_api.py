@@ -198,6 +198,50 @@ def test_engine_ingest_parse_kernel_runs_once(spark, tmp_path):
     assert acc2.value == 3
 
 
+def test_engine_reingest_is_one_commit_per_table(spark, tmp_path):
+    """Re-ingesting existing docs replaces them with ONE merge commit per
+    table: chunks and embeddings each advance by exactly one manifest
+    version (the entity delete rides the upsert), and the doc's old
+    chunks are gone."""
+    from srag_spark.sources.tables import latest_manifest_version
+
+    eng = SragEngine(spark, str(tmp_path / "kb"), n_buckets=4)
+    eng.ingest(_docs(spark, [("a", TEXT_A * 20), ("b", TEXT_B)]))
+    before = {
+        p: latest_manifest_version(spark, p)
+        for p in (eng.chunks_path, eng.embeddings_path)
+    }
+    assert eng.chunks().filter(F.col("doc_id") == "a").count() > 1
+    eng.ingest(_docs(spark, [("a", "now one short chunk"), ("c", TEXT_B)]))
+    for p, v in before.items():
+        assert latest_manifest_version(spark, p) == v + 1, p
+    a_rows = eng.chunks().filter(F.col("doc_id") == "a").collect()
+    assert [r["text"] for r in a_rows] == ["now one short chunk"]
+    assert eng.chunks().count() == eng.embeddings().count()
+    assert {r["doc_id"] for r in eng.chunks().collect()} == {"a", "b", "c"}
+
+
+def test_engine_reingest_to_zero_chunks_empties_buckets(spark, tmp_path):
+    """A re-ingested doc whose new content yields NO chunks leaves no
+    chunk or embedding rows, and buckets it emptied leave the manifest
+    (a merge whose incoming side is empty for that entity)."""
+    from srag_spark.sources.tables import read_manifest
+
+    eng = SragEngine(spark, str(tmp_path / "kb"), n_buckets=4)
+    eng.ingest(_docs(spark, [("a", TEXT_A)]))
+    paths = (eng.chunks_path, eng.embeddings_path)
+    before = {p: read_manifest(spark, p) for p in paths}
+    assert all(m["buckets"] for m in before.values())
+    stats = eng.ingest(_docs(spark, [("a", "   ")]))
+    assert stats["chunks"] == 0
+    assert eng.chunks().count() == 0 and eng.embeddings().count() == 0
+    for p in paths:
+        m = read_manifest(spark, p)
+        assert m["buckets"] == {}, p
+        assert m["version"] == before[p]["version"] + 1, p
+    assert eng.transcripts().count() == 1
+
+
 def test_engine_ingest_records_extraction_metrics(spark, tmp_path):
     """North-rule lineage: every ingest upserts per-doc extraction
     metrics (spans_out, blocks kept/dropped, parse failures); re-ingest
@@ -263,13 +307,13 @@ def test_cross_table_snapshot_isolation_between_commits(spark, tmp_path, monkeyp
 
     monkeypatch.setattr(api_mod, "upsert_by_key", spy_upsert)
     monkeypatch.setattr(api_mod, "delete_by_key", spy_delete)
-    # second ingest: re-ingests 'a' (delete-then-upsert across tables) and
+    # second ingest: re-ingests 'a' (entity replace across tables) and
     # adds two new docs — the worst interleave surface
     eng.ingest(_docs(spark, [("a", TEXT_B), ("c", TEXT_A), ("d", TEXT_B)]))
     monkeypatch.setattr(api_mod, "upsert_by_key", real_upsert)
     monkeypatch.setattr(api_mod, "delete_by_key", real_delete)
 
-    assert len(observed) >= 4  # 2 entity deletes + 4 upserts interleaved
+    assert len(observed) >= 4  # 4 upserts (one merge commit per table)
     for snap in observed:
         assert snap == (t0, c0, e0, m0), (
             "reader between table commits saw a partial state"

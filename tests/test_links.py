@@ -64,6 +64,17 @@ def test_operator_matches_golden_on_cases(spark):
     assert not any(k[0] == "6" and k[2] == "/sq" for k in want)
 
 
+def test_anchor_text_splits_on_information_separators(spark):
+    """Python str.split() (the golden spec) treats U+001C-U+001F as
+    whitespace; Java's Unicode \\s does not, so the operator lists them."""
+    html = '<a href="/s">a\x1fb\x1c c\x1d\x1e</a>'
+    want = [("/s", "a b c")]
+    assert [(h, t) for _, h, t, _ in golden_links(html)] == want
+    df = spark.createDataFrame([("d", html)], "doc_id string, text string")
+    got = [(r["href"], r["anchor_text"]) for r in extract_links(df).collect()]
+    assert got == want
+
+
 def test_drop_nofollow_and_edges(spark):
     html = (
         '<a href="doc://7">x</a><a rel="nofollow" href="doc://8">y</a>'

@@ -68,3 +68,28 @@ def test_streaming_upsert_sink_replay_converges(spark, tmp_path):
     first = _spans(spark, tbl)
     _run_once(spark, in_dir, tbl, str(tmp_path / "ckpt2"))  # full replay
     assert _spans(spark, tbl) == first
+
+
+def test_streaming_replace_entity_batch_publishes_one_version(spark, tmp_path):
+    """A replace-entity micro-batch is ONE merge commit: the table moves
+    by exactly one manifest version, and the shrunk entity's old rows
+    and the new ones change in that same snapshot (no intermediate
+    version where the entity is deleted but not yet re-inserted)."""
+    from srag_spark.sources.tables import latest_manifest_version
+
+    in_dir = str(tmp_path / "in")
+    tbl = str(tmp_path / "tbl")
+    ckpt = str(tmp_path / "ckpt")
+    spark.createDataFrame(
+        [_doc("d0", "alpha beta gamma"), _doc("d1", "one two")],
+        schema=DOCUMENTS_SCHEMA,
+    ).write.parquet(in_dir)
+    _run_once(spark, in_dir, tbl, ckpt)
+    v0 = latest_manifest_version(spark, tbl)
+
+    spark.createDataFrame(
+        [_doc("d0", "solo")], schema=DOCUMENTS_SCHEMA
+    ).write.mode("append").parquet(in_dir)
+    _run_once(spark, in_dir, tbl, ckpt)
+    assert latest_manifest_version(spark, tbl) == v0 + 1
+    assert _spans(spark, tbl)["d0"] == {0: "solo"}

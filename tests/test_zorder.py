@@ -6,6 +6,8 @@ lexicographic sort serves only its leading column (Iceberg
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -153,3 +155,39 @@ def test_zorder_clusters_both_dimensions(spark, tmp_path):
     # a 16x16-bin grid over the 64x64 domain → both spans ~16-32
     assert yr_z < 0.6 * yr_lex, (yr_z, yr_lex)
     assert xr_z < 40 and yr_z < 40, (xr_z, yr_z)
+
+
+def test_zorder_rewrite_with_non_finite_values(spark, tmp_path):
+    """A double column holding ±Infinity and NaN yields non-finite
+    quantile edges; the bin-search SQL must render them as casts (a
+    ``<repr>D`` literal like ``infD`` does not parse).  Content stays
+    identical and the non-finite rows bin after every finite one."""
+    path = str(tmp_path / "t")
+    specials = [float("inf"), float("-inf"), float("nan")]
+    rows = [
+        (f"k{i:04d}", specials[i % 3] if i % 3 == 0 or i % 7 == 0 else float(i))
+        for i in range(300)
+    ]
+    df = spark.createDataFrame(rows, "k string, x double")
+    upsert_by_key(spark, path, df, ["k"], n_buckets=1, persist_incoming=False)
+
+    bnds = Z.compute_boundaries(df, ["x"])
+    assert float("inf") in bnds["x"]
+    rewrite_table(spark, path, zorder_by=["x"])
+    after = {r["k"]: r["x"] for r in read_table(spark, path).collect()}
+    assert after.keys() == {k for k, _ in rows}
+    for k, x in rows:
+        assert after[k] == x or (math.isnan(x) and math.isnan(after[k]))
+
+    z = {
+        r["x"]: r["z"]
+        for r in df.select("x", Z.zvalue_col(bnds, {"x": "double"}).alias("z"))
+        .filter(F.col("x") != float("inf"))
+        .filter(~F.isnan("x"))
+        .collect()
+    }
+    z_inf = df.filter(F.col("x") == float("inf")).select(
+        Z.zvalue_col(bnds, {"x": "double"}).alias("z")
+    ).first()["z"]
+    assert z_inf >= max(z.values())
+    assert z[float("-inf")] == min(z.values())
