@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from srag_spark.functions.planning import held, persist
-from srag_spark.operators.parse import extract_documents
+from srag_spark.operators.parse import extract_documents, extraction_metrics
 from srag_spark.operators.retrieval import listing, retrieve_context
 from srag_spark.operators.transcripts import (
     build_transcripts,
@@ -65,8 +65,8 @@ from srag_spark.schema import TRANSCRIPTS_SCHEMA
 from srag_spark.sources import fsio
 from srag_spark.sources.tables import (
     _MANIFEST_DIR,
-    ManifestCommitRace,
     StagedConflict,
+    _with_commit_retries,
     commit_manifest,
     delete_by_key,
     latest_manifest_version,
@@ -119,28 +119,27 @@ class SragEngine:
         }
 
     # -- engine snapshot (cross-table isolation) ---------------------------
-    def _publish_engine_snapshot(self, max_retries: int = 3) -> None:
+    def _publish_engine_snapshot(self) -> None:
         """Publish one engine manifest pinning every existing table's
         CURRENT manifest version — the atomic visibility point for a
         whole ingest/delete batch.  Concurrent publishers race on the
         engine-manifest rename exactly like table commits; a loser
-        re-derives the (monotone) latest versions and retries, so the
-        surviving manifest always pins a state at least as new."""
-        for attempt in range(max_retries + 1):
+        re-derives the (monotone) latest versions and retries
+        (``tables._with_commit_retries``), so the surviving manifest
+        always pins a state at least as new."""
+
+        def once():
             pins = {
                 name: latest_manifest_version(self.spark, path)
                 for name, path in self._table_paths.items()
             }
-            try:
-                commit_manifest(
-                    self.spark,
-                    self.engine_meta_path,
-                    {"tables": {k: v for k, v in pins.items() if v is not None}},
-                )
-                return
-            except ManifestCommitRace:
-                if attempt == max_retries:
-                    raise
+            commit_manifest(
+                self.spark,
+                self.engine_meta_path,
+                {"tables": {k: v for k, v in pins.items() if v is not None}},
+            )
+
+        _with_commit_retries(once)
 
     def snapshot_versions(self) -> list[int]:
         """Engine snapshot versions available for time travel (oldest
@@ -316,13 +315,8 @@ class SragEngine:
             upsert_by_key(
                 self.spark,
                 self.metrics_path,
-                extracted.select(
-                    "doc_id",
-                    F.size("spans").alias("spans_out"),
-                    "blocks_kept",
-                    "blocks_dropped",
-                    "parse_failures",
-                    F.current_timestamp().alias("ingested_at"),
+                extraction_metrics(extracted).withColumn(
+                    "ingested_at", F.current_timestamp()
                 ),
                 ["doc_id"],
                 n_buckets=self.n_buckets,

@@ -67,7 +67,7 @@ def fit_quality_classifier(
     The normalization inside the SQLTransformer is
     ``dedup.norm_text_col``'s (lowercase, non-alphanumerics → space),
     so classifier tokens match the dedup/DSIR token stream."""
-    return Pipeline(
+    model = Pipeline(
         stages=[
             SQLTransformer(statement=_WORDS_STMT.format(text=text_col)),
             HashingTF(
@@ -82,6 +82,12 @@ def fit_quality_classifier(
             ),
         ]
     ).fit(labeled)
+    # Scoring task closures capture the model, and its LR training summary
+    # holds the SparkSession, which stops serializing once the session has
+    # run an Observation (pipeline waves do).  Nothing reads it: drop it.
+    none = getattr(getattr(labeled.sparkSession._jvm.scala, "None$"), "MODULE$")
+    model.stages[-1]._java_obj.setSummary(none)
+    return model
 
 
 def score_quality(

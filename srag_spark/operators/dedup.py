@@ -689,7 +689,6 @@ def embedding_neardup_pairs(
     dim: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    materialize: bool = True,
 ) -> DataFrame:
     """(id_a, id_b, cos_r) near-dup pairs with cosine ≥ threshold, found
     via hyperplane-LSH banding — the 100 TB-safe plan (the same shape as

@@ -421,13 +421,13 @@ def host_stats(
     rows = docs.withColumn("host", host_of(F.col(url_col))).filter(
         F.col("host").isNotNull()
     )
-    # n_paths counts URLs with the AUTHORITY lowercased (paths stay
-    # case-sensitive): case-variant hosts of one resource land in one
+    # n_paths counts URLs with scheme and AUTHORITY lowercased (paths
+    # stay case-sensitive): case variants of one resource land in one
     # host group, so they must not count as two paths (ADVICE r5).  The
-    # group key is the lowercased host already; only the authority
-    # portion of the counted URL is normalized to match it.
+    # group key is the lowercased host already; scheme and authority of
+    # the counted URL are normalized to match, as in resolve_href_col.
     canon_url = F.concat(
-        F.regexp_extract(F.col(url_col), _URL_PARTS, 1),
+        F.lower(F.regexp_extract(F.col(url_col), _URL_PARTS, 1)),
         F.lit("://"),
         F.lower(F.regexp_extract(F.col(url_col), _URL_PARTS, 2)),
         F.regexp_extract(F.col(url_col), _URL_PARTS, 3),

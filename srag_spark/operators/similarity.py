@@ -305,7 +305,6 @@ def knn_graph(
     dim: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    materialize: bool = True,
 ) -> DataFrame:
     """Self-kNN graph over an embedding table: for every vector, its (up
     to) ``k`` nearest neighbors by cosine — ``(vec_id, nbr_id, score_r,

@@ -17,7 +17,8 @@ Design:
   per Spark job).  Each wave writes its output with dynamic partition
   overwrite (idempotent — the Iceberg ``overwritePartitions`` analogue)
   and then appends per-bucket checkpoint rows with lineage + extraction
-  metrics.  A crash between waves loses at most one wave of work;
+  metrics observed in the writing job itself (``DataFrame.observe``: one
+  job, no cache).  A crash between waves loses at most one wave of work;
 * resume = read the checkpoint table, keep the latest row per bucket
   (status-history preserved, like the reference's updatedAt-bumping
   ``mark*`` transitions), and anti-join Success buckets out of the
@@ -37,10 +38,9 @@ from __future__ import annotations
 import datetime as _dt
 import traceback
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from srag_spark.functions.planning import held, persist
 from srag_spark.operators.parse import (
     DEFAULT_SALT_THRESHOLD,
     DEFAULT_SLICE_TARGET,
@@ -78,6 +78,29 @@ def retry_delay_s(attempt: int) -> float:
 
 def bucket_col(n_buckets: int):
     return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+
+
+_SUMMED = ("blocks_kept", "blocks_dropped", "parse_failures")
+
+
+def wave_count_cols(wave: list[int]) -> list:
+    """One global aggregate of a wave's checkpoint figures: per bucket, its
+    doc count and its ``_SUMMED`` sums (0 for an empty bucket)."""
+    cols = []
+    for b in wave:
+        hit = F.col("bucket") == b
+        cols.append(F.count(F.when(hit, 1)).alias(f"docs_{b}"))
+        cols += [
+            F.coalesce(F.sum(F.when(hit, F.col(c))), F.lit(0)).alias(f"{c}_{b}")
+            for c in _SUMMED
+        ]
+    return cols
+
+
+def wave_counts(row, wave: list[int]) -> dict[int, tuple[int, int, int, int]]:
+    """:func:`wave_count_cols` result (a Row, or an ``Observation``'s dict)
+    → ``{bucket: (docs, kept, dropped, failures)}`` for every wave bucket."""
+    return {b: tuple(row[f"{c}_{b}"] for c in ("docs", *_SUMMED)) for b in wave}
 
 
 class ExtractionPipeline:
@@ -206,16 +229,13 @@ class ExtractionPipeline:
                 if fail_injector is not None:
                     fail_injector(wave)
                 metrics = self._process_wave(docs, wave)
-                rows = []
-                for b in wave:
-                    m = metrics.get(b, (0, 0, 0, 0))
-                    rows.append(
-                        self._ckpt_row(
-                            b, STATUS_SUCCESS, attempt_of[b], None,
-                            input_snapshot, m, started,
-                        )
+                self._append_checkpoints([
+                    self._ckpt_row(
+                        b, STATUS_SUCCESS, attempt_of[b], None,
+                        input_snapshot, metrics[b], started,
                     )
-                self._append_checkpoints(rows)
+                    for b in wave
+                ])
                 summary["succeeded"].extend(wave)
             except Exception as exc:  # noqa: BLE001 — wave-level retry boundary
                 err = f"{type(exc).__name__}: {exc}\n{traceback.format_exc(limit=3)}"
@@ -242,34 +262,23 @@ class ExtractionPipeline:
         return summary
 
     def _process_wave(self, docs: DataFrame, wave: list[int]) -> dict:
-        """One Spark job: extract the wave's buckets, overwrite their
-        output partitions, return per-bucket metrics."""
+        """One Spark job: extract the wave's buckets, overwrite their output
+        partitions, return the per-bucket counts observed by that write (in
+        its result stage, which counts each partition once)."""
         wave_docs = docs.filter(F.col("bucket").isin(wave)).select("doc_id", "spans")
+        obs = Observation()
         extracted = extract_documents(
             wave_docs,
             salt_threshold=self.salt_threshold,
             slice_target=self.slice_target,
-        ).withColumn("bucket", bucket_col(self.n_buckets))
-        with held() as ledger:
-            extracted = persist(extracted, ledger)
-            flat = explode_extracted(extracted).withColumn(
-                "bucket", bucket_col(self.n_buckets)
-            )
-            flat.write.mode("overwrite").partitionBy("bucket").parquet(self.spans_dir)
-            agg = (
-                extracted.groupBy("bucket")
-                .agg(
-                    F.count(F.lit(1)).alias("docs"),
-                    F.sum("blocks_kept").alias("kept"),
-                    F.sum("blocks_dropped").alias("dropped"),
-                    F.sum("parse_failures").alias("failures"),
-                )
-                .collect()
-            )
-        return {
-            r["bucket"]: (r["docs"], r["kept"], r["dropped"], r["failures"])
-            for r in agg
-        }
+        ).withColumn("bucket", bucket_col(self.n_buckets)).observe(
+            obs, *wave_count_cols(wave)
+        )
+        flat = explode_extracted(extracted).withColumn(
+            "bucket", bucket_col(self.n_buckets)
+        )
+        flat.write.mode("overwrite").partitionBy("bucket").parquet(self.spans_dir)
+        return wave_counts(obs.get, wave)
 
     def _ckpt_row(
         self, bucket, status, attempt, error, snapshot, metrics, started,
@@ -343,13 +352,15 @@ class IngestionPipeline(ExtractionPipeline):
         self.batch_metadata = batch_metadata
 
     def _process_wave(self, docs: DataFrame, wave: list[int]) -> dict:
+        """``engine.ingest`` the wave; its writes are out of an Observation's
+        reach, so the counts are one :func:`wave_count_cols` aggregate over
+        the metrics rows that ingest just committed."""
         from srag_spark.sources.tables import read_manifest, read_table
 
         wave_docs = docs.filter(F.col("bucket").isin(wave)).drop("bucket")
         self.engine.ingest(wave_docs, metadata=self.batch_metadata)
-        # per-bucket lineage metrics: the engine just upserted this
-        # wave's rows into root/metrics, whose buckets coincide with the
-        # wave ids (same key hash + modulus) — prune the read to them.
+        # root/metrics buckets coincide with the wave ids (same key hash
+        # + modulus) — prune the read to them.
         # Bucket contents are CUMULATIVE across batches (prior ingests
         # into the same engine land in the same buckets), so the read is
         # additionally semi-joined on the wave's own doc ids: checkpoint
@@ -364,22 +375,11 @@ class IngestionPipeline(ExtractionPipeline):
         # read (the semi-join alone keeps the counts correct).
         meta = read_manifest(self.spark, self.engine.metrics_path)
         prune = wave if meta and meta["n_buckets"] == self.n_buckets else None
-        m = (
+        row = (
             read_table(self.spark, self.engine.metrics_path, buckets=prune)
             .join(wave_docs.select("doc_id"), "doc_id", "left_semi")
             .withColumn("bucket", bucket_col(self.n_buckets))
+            .agg(*wave_count_cols(wave))
+            .first()
         )
-        agg = (
-            m.groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("docs"),
-                F.sum("blocks_kept").alias("kept"),
-                F.sum("blocks_dropped").alias("dropped"),
-                F.sum("parse_failures").alias("failures"),
-            )
-            .collect()
-        )
-        return {
-            r["bucket"]: (r["docs"], r["kept"], r["dropped"], r["failures"])
-            for r in agg
-        }
+        return wave_counts(row, wave)

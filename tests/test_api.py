@@ -359,7 +359,7 @@ def test_engine_vacuum_never_drops_pinned_versions(spark, tmp_path, monkeypatch)
 
     # crash injection: the second ingest commits all tables but dies
     # before publishing the engine snapshot
-    def no_publish(self_, max_retries=3):
+    def no_publish(self_):
         raise RuntimeError("crash before engine publish")
 
     monkeypatch.setattr(

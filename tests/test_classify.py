@@ -71,6 +71,23 @@ def test_filter_keeps_above_threshold(spark, fitted):
     assert ids == {d for d, _, l in test if l == 1.0}
 
 
+def test_scoring_after_an_observation(spark, fitted):
+    # once a session has run an Observation, the SparkSession stops
+    # serializing; a scoring closure that reaches it (through the LR
+    # training summary) fails every task
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    spark.range(3).observe(obs, F.count(F.lit(1)).alias("n")).collect()
+    assert obs.get == {"n": 3}
+    model, test = fitted
+    docs = spark.createDataFrame(test, "doc_id long, text string, label double")
+    got = score_quality(docs, model).collect()
+    assert sorted(r["doc_id"] for r in got) == sorted(d for d, _, _ in test)
+    assert all(0.0 <= r["quality_p"] <= 1.0 for r in got)
+
+
 def test_scoring_plan_has_no_shuffle(spark, fitted):
     model, _ = fitted
     docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")

@@ -69,6 +69,19 @@ def test_host_stats_case_variant_hosts_one_path(spark):
     assert out[0]["n_paths"] == 2
 
 
+def test_host_stats_case_variant_scheme_one_path(spark):
+    # the scheme is case-insensitive too (RFC 3986 §3.1): HTTP://a.test/p
+    # and http://a.test/p share the host group and are one path
+    df = spark.createDataFrame(
+        [("HTTP://a.test/p",), ("http://a.test/p",)], "url string"
+    )
+    out = host_stats(df).collect()
+    assert len(out) == 1
+    assert out[0]["host"] == "a.test"
+    assert out[0]["n_docs"] == 2
+    assert out[0]["n_paths"] == 1
+
+
 def test_host_stats_minimal_columns(spark):
     df = spark.createDataFrame(
         [("https://s.test/a",), ("https://s.test/b",)], "url string"

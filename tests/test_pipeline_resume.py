@@ -294,3 +294,91 @@ def test_optimize_between_kill_and_resume_is_transparent(spark, tmp_path):
     done = pipe2.latest_checkpoints().collect()
     assert sum(r["docs_processed"] for r in done) == 24
     assert all(r["docs_processed"] > 0 for r in done)
+
+
+# -- checkpoint figures --------------------------------------------------------
+# Mega docs with a low salt threshold: every mega doc goes down the salted
+# slice path, so the observed counts cover both extraction paths.
+SALT = {"salt_threshold": 1000, "slice_target": 256}
+
+
+@pytest.fixture()
+def mega_rows():
+    rows = synth.generate_rows(60, seed=5, mega_every=20)
+    assert sum(len(spans) > SALT["salt_threshold"] for _, spans in rows) == 3
+    return rows
+
+
+def golden_bucket_counts(spark, rows, n_buckets):
+    """{bucket: (docs, kept, dropped, failures)} from the golden extractor,
+    every bucket present (zeros where no doc hashes)."""
+    from srag_spark.plans.pipeline import bucket_col
+
+    ids = spark.createDataFrame([(d,) for d, _ in rows], "doc_id string")
+    bucket_of = {
+        r["doc_id"]: r["bucket"]
+        for r in ids.withColumn("bucket", bucket_col(n_buckets)).collect()
+    }
+    out = {b: [0, 0, 0, 0] for b in range(n_buckets)}
+    for doc_id, spans in rows:
+        _, kept, dropped, failures = golden.extract_document(spans)
+        for i, v in enumerate((1, kept, dropped, failures)):
+            out[bucket_of[doc_id]][i] += v
+    return {b: tuple(v) for b, v in out.items()}
+
+
+@pytest.mark.parametrize("n_buckets,wave_size", [(8, 4), (64, 64)])
+def test_checkpoint_counts_match_golden_per_bucket(
+    spark, mega_rows, tmp_path, n_buckets, wave_size
+):
+    """Every bucket's checkpoint row carries the golden extractor's
+    per-bucket docs / blocks kept / blocks dropped / parse failures —
+    salted mega docs included, and zeros for buckets holding no doc
+    (60 docs over 64 buckets leave some empty)."""
+    want = golden_bucket_counts(spark, mega_rows, n_buckets)
+    assert any(v[0] == 0 for v in want.values()) == (n_buckets == 64)
+
+    pipe = ExtractionPipeline(
+        spark, str(tmp_path / "out"), n_buckets=n_buckets, wave_size=wave_size,
+        **SALT,
+    )
+    docs = spark.createDataFrame(mega_rows, schema=DOCUMENTS_SCHEMA)
+    s = pipe.run(docs)
+    assert sorted(s["succeeded"]) == list(range(n_buckets))
+    got = {
+        r["partition_id"]: (r["docs_processed"], r["blocks_kept"],
+                            r["blocks_dropped"], r["parse_failures"])
+        for r in pipe.latest_checkpoints().collect()
+    }
+    assert got == want
+    assert read_flat(pipe) == golden_flat(mega_rows)
+
+
+def test_wave_runs_no_more_jobs_than_its_bare_write(
+    spark, mega_rows, tmp_path, jobs_run_by
+):
+    """A wave is its write: counting the checkpoint figures adds no job
+    (no cache fill, no second aggregation pass) over a bare write of the
+    same extraction plan."""
+    from srag_spark.operators.parse import explode_extracted, extract_documents
+    from srag_spark.plans.pipeline import bucket_col
+
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    docs = spark.createDataFrame(mega_rows, schema=DOCUMENTS_SCHEMA)
+    pipe = ExtractionPipeline(spark, str(tmp_path / "out"), n_buckets=4, **SALT)
+
+    def bare_write():
+        flat = explode_extracted(extract_documents(docs, **SALT)).withColumn(
+            "bucket", bucket_col(4)
+        )
+        flat.write.mode("overwrite").partitionBy("bucket").parquet(
+            str(tmp_path / "bare")
+        )
+
+    _, bare = jobs_run_by(bare_write)
+    counts, wave = jobs_run_by(
+        lambda: pipe._process_wave(docs.withColumn("bucket", bucket_col(4)),
+                                   [0, 1, 2, 3])
+    )
+    assert bare and len(wave) <= len(bare)
+    assert sum(c[0] for c in counts.values()) == len(mega_rows)

@@ -5,26 +5,11 @@ untouched; a column name is never mistaken for a plan node."""
 
 from __future__ import annotations
 
-import itertools
 import logging
 
 import pytest
 
 from srag_spark.functions.planning import spread_input
-
-_groups = itertools.count()
-
-
-def jobs_run_by(spark, fn):
-    """(fn(), ids of the Spark jobs fn ran) via a one-off job group."""
-    sc = spark.sparkContext
-    group = f"spread-probe-{next(_groups)}"
-    sc.setJobGroup(group, "spread_input probe")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="module")
@@ -44,18 +29,18 @@ def one_file_scan(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize("compose", ["distinct", "dropDuplicates"])
-def test_composed_input_runs_no_job(spark, one_file_scan, compose):
+def test_composed_input_runs_no_job(one_file_scan, jobs_run_by, compose):
     composed = getattr(one_file_scan("k").select("id"), compose)()
-    out, jobs = jobs_run_by(spark, lambda: spread_input(composed))
+    out, jobs = jobs_run_by(lambda: spread_input(composed))
     assert jobs == []
     assert out is composed
 
 
-def test_scan_with_join_named_column_is_spread(spark, one_file_scan):
+def test_scan_with_join_named_column_is_spread(spark, one_file_scan, jobs_run_by):
     target = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert target > 1
     src = one_file_scan("JoinKey").filter("JoinKey >= 0").select("id", "JoinKey")
-    out, jobs = jobs_run_by(spark, lambda: spread_input(src))
+    out, jobs = jobs_run_by(lambda: spread_input(src))
     assert jobs == []
     assert out.rdd.getNumPartitions() == target
     assert sorted(r.id for r in out.collect()) == list(range(200))
