@@ -70,9 +70,12 @@ from srag_spark.sources.tables import (
     commit_manifest,
     delete_by_key,
     latest_manifest_version,
+    manifest_versions,
     read_manifest,
     read_table,
     rollback as table_rollback,
+    scan_manifest,
+    snapshot,
     table_exists,
     upsert_by_key,
 )
@@ -129,10 +132,7 @@ class SragEngine:
         always pins a state at least as new."""
 
         def once():
-            pins = {
-                name: latest_manifest_version(self.spark, path)
-                for name, path in self._table_paths.items()
-            }
+            pins = self._table_versions()
             commit_manifest(
                 self.spark,
                 self.engine_meta_path,
@@ -144,45 +144,32 @@ class SragEngine:
     def snapshot_versions(self) -> list[int]:
         """Engine snapshot versions available for time travel (oldest
         surviving → latest); [] before the first publish."""
-        latest = latest_manifest_version(self.spark, self.engine_meta_path)
-        if latest is None:
-            return []
-        out = []
-        for v in range(1, latest + 1):
-            try:
-                read_manifest(self.spark, self.engine_meta_path, version=v)
-                out.append(v)
-            except FileNotFoundError:
-                continue  # vacuumed
-        return out
+        return manifest_versions(self.spark, self.engine_meta_path)
 
     def _pinned(self, version: int | None = None) -> dict[str, int] | None:
         """The table-version quadruple of an engine snapshot (latest by
         default); None when no engine manifest exists (tables written by
         pre-engine-manifest code, or mid-first-ingest) — readers then
         fall back to each table's latest snapshot."""
-        if version is None:
-            m = read_manifest(self.spark, self.engine_meta_path)
-            return m["tables"] if m is not None else None
-        return read_manifest(
-            self.spark, self.engine_meta_path, version=version
-        )["tables"]
+        m = read_manifest(self.spark, self.engine_meta_path, version=version)
+        return m["tables"] if m is not None else None
 
-    def _read(
+    def _pinned_version(
         self,
         name: str,
         version: int | None = None,
         pins: dict[str, int] | None = None,
-    ) -> DataFrame:
-        """Read one table at the engine-pinned version.  ``pins`` lets a
+    ) -> int | None:
+        """The version of table ``name`` an engine snapshot pins (None:
+        no engine manifest, read the table's latest).  ``pins`` lets a
         multi-table reader (query) resolve the engine manifest ONCE so
         all its tables come from the same snapshot even if a concurrent
         ingest publishes between the per-table reads."""
         if pins is None:
             pins = self._pinned(version)
         if pins is None:
-            pinned_v = None  # pre-engine-manifest tables: latest snapshot
-        elif name not in pins:
+            return None  # pre-engine-manifest tables: latest snapshot
+        if name not in pins:
             # an engine manifest exists but does not pin this table: the
             # table is ABSENT at this snapshot (e.g. while an initial
             # ingest is staged, or time-traveling to before the table's
@@ -191,10 +178,19 @@ class SragEngine:
             raise FileNotFoundError(
                 f"table {name!r} is not part of this engine snapshot"
             )
-        else:
-            pinned_v = pins[name]
+        return pins[name]
+
+    def _read(
+        self,
+        name: str,
+        version: int | None = None,
+        pins: dict[str, int] | None = None,
+    ) -> DataFrame:
+        """Read one table at the engine-pinned version."""
         return read_table(
-            self.spark, self._table_paths[name], version=pinned_v
+            self.spark,
+            self._table_paths[name],
+            version=self._pinned_version(name, version, pins),
         )
 
     # -- ingest (POST /api/v1/ingest/* + the async worker pipeline) --------
@@ -573,17 +569,11 @@ class SragEngine:
         (:func:`srag_spark.sources.tables.lookup_by_key`)."""
         from srag_spark.sources.tables import lookup_by_key
 
-        pins = self._pinned()
-        if pins is None:
-            v = None
-        elif "transcripts" not in pins:
-            raise FileNotFoundError(
-                "table 'transcripts' is not part of this engine snapshot"
-            )
-        else:
-            v = pins["transcripts"]
         return lookup_by_key(
-            self.spark, self.transcripts_path, [doc_id], version=v
+            self.spark,
+            self.transcripts_path,
+            [doc_id],
+            version=self._pinned_version("transcripts"),
         ).limit(1)
 
     def list_transcripts(
@@ -604,12 +594,8 @@ class SragEngine:
         """Delete a document everywhere (S10): transcript row plus all its
         chunks and embeddings."""
         keys = self.spark.createDataFrame([(doc_id,)], "doc_id string")
-        for path in (
-            self.transcripts_path, self.chunks_path, self.embeddings_path,
-            self.metrics_path,
-        ):
-            if table_exists(self.spark, path):
-                delete_by_key(self.spark, path, keys, ["doc_id"])
+        for path in self._table_paths.values():
+            delete_by_key(self.spark, path, keys, ["doc_id"])  # no table: no-op
         self._publish_engine_snapshot()
 
     def delete_where(self, condition) -> int:
@@ -633,14 +619,13 @@ class SragEngine:
         single-writer: concurrent writers are serialized per TABLE by
         compare-and-publish, but the engine snapshot pins whatever
         four-table versions are latest at publish time."""
-        from srag_spark.sources.tables import read_table
-
         cond = F.expr(condition) if isinstance(condition, str) else condition
-        if not table_exists(self.spark, self.transcripts_path):
+        manifest = read_manifest(self.spark, self.transcripts_path)
+        if manifest is None:
             return 0
         with held() as ledger:
             keys = persist(
-                read_table(self.spark, self.transcripts_path)
+                scan_manifest(self.spark, self.transcripts_path, manifest)
                 .filter(F.coalesce(cond, F.lit(False)))
                 .select("doc_id")
                 .distinct(),
@@ -650,8 +635,7 @@ class SragEngine:
             if n == 0:
                 return 0
             for path in self._table_paths.values():
-                if table_exists(self.spark, path):
-                    delete_by_key(self.spark, path, keys, ["doc_id"])
+                delete_by_key(self.spark, path, keys, ["doc_id"])
             self._publish_engine_snapshot()
             return n
 
@@ -665,7 +649,6 @@ class SragEngine:
         O(live buckets) directory listings on the driver, never a data
         file opened."""
         from srag_spark.sources.tables import _file_rows
-        from srag_spark.sources.tables import read_manifest as _read_m
 
         pins = self._pinned(version) or {}
         rows = []
@@ -673,8 +656,8 @@ class SragEngine:
             v = pins.get(name)
             if v is None:
                 continue
-            m = _read_m(self.spark, path, version=v)
-            files = _file_rows(self.spark, path, v)
+            m = snapshot(self.spark, path, v)
+            files = _file_rows(self.spark, path, m)
             rows.append(
                 (
                     name,
@@ -699,10 +682,7 @@ class SragEngine:
         from srag_spark.plans.preflight import health_check
 
         return health_check(
-            self.spark,
-            [self.transcripts_path, self.chunks_path, self.embeddings_path,
-             self.metrics_path],
-            self.root,
+            self.spark, list(self._table_paths.values()), self.root
         )
 
     def vacuum(
@@ -734,7 +714,8 @@ class SragEngine:
                 tag_pins[name] = min(tag_pins.get(name, v), v)
         total = 0
         for name, path in self._table_paths.items():
-            if not table_exists(self.spark, path):
+            latest = latest_manifest_version(self.spark, path)
+            if latest is None:
                 continue
             keep = keep_manifests
             oldest = min(
@@ -742,7 +723,6 @@ class SragEngine:
                 default=None,
             )
             if oldest is not None:
-                latest = latest_manifest_version(self.spark, path) or oldest
                 keep = max(keep, latest - oldest + 1)
             total += vacuum(
                 self.spark, path, keep_manifests=keep,

@@ -1065,7 +1065,7 @@ def read_shards_manifest(spark, path: str) -> dict:
     ``_``-prefixed sidecars from DataFrame reads by design)."""
     from srag_spark.sources import fsio
 
-    return json.loads(fsio.read_text_fs(spark, f"{path}/_shards.json"))
+    return json.loads(fsio.read_text(spark, f"{path}/_shards.json"))
 
 
 def read_shards(spark, path: str, shard_id: int | None = None) -> DataFrame:

@@ -419,18 +419,18 @@ def retrieve_context(
         fused = rrf_fuse(semantic, lexical)
         candidates = persist(resolve_candidate_texts(fused, lexical, chunks), ledger)
         n = candidates.count()
-        # every returned frame is MATERIALIZED (eager localCheckpoint of
-        # ≤limit rows) before the ledger is released — otherwise the
-        # caller's first action would re-execute the whole plan uncached,
-        # and a reranker failure at consumption time would escape the
-        # fusion fallback (ADVICE r2)
+        # every returned frame holds its ≤limit rows as a local relation,
+        # collected before the ledger is released — the caller's action
+        # re-executes nothing, a reranker failure surfaces here inside
+        # the fusion fallback (ADVICE r2), and no persisted RDD outlives
+        # the call
         fusion_results = (
             candidates.select(*_KEY, "text", F.col("fused_score").alias("score"))
             .orderBy(F.desc("score"), *_KEY)
             .limit(limit)
         )
         if n < MIN_CANDIDATES_FOR_RERANK:
-            return fusion_results.localCheckpoint(eager=True)
+            return _collected(fusion_results)
         try:
             score = (
                 rerank_col
@@ -438,11 +438,16 @@ def retrieve_context(
                 else make_rerank_udf(query_text, rerank_fn)(F.col("text"))
             )
             scored = candidates.select(*_KEY, "text", score.alias("score"))
-            # eager checkpoint forces the rerank UDF NOW, inside the try —
-            # the fallback decision is made on materialized results
-            return filter_reranked(scored, limit).localCheckpoint(eager=True)
+            return _collected(filter_reranked(scored, limit))
         except Exception:  # noqa: BLE001 — reranker failure → fusion fallback
-            return fusion_results.localCheckpoint(eager=True)
+            return _collected(fusion_results)
+
+
+def _collected(df: DataFrame) -> DataFrame:
+    """``df``'s rows (a small result), collected now through Arrow, as a
+    local relation with the same schema: the caller's actions on it start
+    no Spark job."""
+    return df.sparkSession.createDataFrame(df.toArrow(), df.schema)
 
 
 # ---------------------------------------------------------------------------

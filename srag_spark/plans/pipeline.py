@@ -355,7 +355,7 @@ class IngestionPipeline(ExtractionPipeline):
         """``engine.ingest`` the wave; its writes are out of an Observation's
         reach, so the counts are one :func:`wave_count_cols` aggregate over
         the metrics rows that ingest just committed."""
-        from srag_spark.sources.tables import read_manifest, read_table
+        from srag_spark.sources.tables import scan_manifest, snapshot
 
         wave_docs = docs.filter(F.col("bucket").isin(wave)).drop("bucket")
         self.engine.ingest(wave_docs, metadata=self.batch_metadata)
@@ -373,10 +373,11 @@ class IngestionPipeline(ExtractionPipeline):
         # layout matches the wave modulus — SragEngine.optimize() can
         # re-bucket mid-load.  On mismatch, fall back to an unpruned
         # read (the semi-join alone keeps the counts correct).
-        meta = read_manifest(self.spark, self.engine.metrics_path)
-        prune = wave if meta and meta["n_buckets"] == self.n_buckets else None
+        path = self.engine.metrics_path
+        meta = snapshot(self.spark, path)
+        prune = wave if meta["n_buckets"] == self.n_buckets else None
         row = (
-            read_table(self.spark, self.engine.metrics_path, buckets=prune)
+            scan_manifest(self.spark, path, meta, prune)
             .join(wave_docs.select("doc_id"), "doc_id", "left_semi")
             .withColumn("bucket", bucket_col(self.n_buckets))
             .agg(*wave_count_cols(wave))

@@ -6,10 +6,10 @@ abstraction Spark's own committers use — so the sink layer runs unchanged
 wherever a 100 TB table actually lives (HDFS, S3A, GCS, ABFS, local).
 No ``os`` / ``shutil`` / ``open()`` calls anywhere in the sink path.
 
-Small-file reads go through ``spark.read`` (wholetext), writes through
-``FileSystem.create``; the single rename used for manifest commits is
-atomic on HDFS and local filesystems.  On S3 proper, swap
-:func:`rename_atomic` for a conditional PUT (If-None-Match) — one
+Small-file reads go through ``FileSystem.open`` on the driver (no Spark
+job), writes through ``FileSystem.create``; the single rename used for
+manifest commits is atomic on HDFS and local filesystems.  On S3 proper,
+swap :func:`rename_atomic` for a conditional PUT (If-None-Match) — one
 function, documented at the call site in :mod:`srag_spark.sources.tables`.
 """
 
@@ -84,36 +84,26 @@ def write_text(spark: SparkSession, path: str, data: str) -> None:
 
 
 def read_text(spark: SparkSession, path: str) -> str:
-    """Read a small text file (one object — e.g. a manifest)."""
-    row = spark.read.option("wholetext", "true").text(path).head()
-    return row[0] if row is not None else ""
-
-
-def read_text_or_none(spark: SparkSession, path: str) -> str | None:
-    """Like :func:`read_text_fs`, but None when the object is absent —
-    the existence-probe read tag resolution uses."""
-    fs = _fs(spark, path)
-    if not fs.exists(_jpath(spark, path)):
-        return None
-    return read_text_fs(spark, path)
-
-
-def read_text_fs(spark: SparkSession, path: str) -> str:
-    """Read a small text file through the raw FileSystem API.
-
-    Unlike :func:`read_text` (a DataFrame read), this sees files whose
-    names start with ``_`` or ``.`` — Spark's file index treats those
-    as hidden/metadata and returns NOTHING for them, which is exactly
-    why sidecar manifests use such names (parquet readers of the same
-    directory must skip them)."""
+    """Read a small text file (one object — e.g. a manifest) through the
+    FileSystem API on the driver: no Spark job, and it also sees names
+    starting with ``_`` or ``.``, which Spark's file index hides (sidecar
+    manifests use such names so parquet readers of the same directory
+    skip them)."""
     fs = _fs(spark, path)
     inp = fs.open(_jpath(spark, path))
     try:
-        baos = spark._jvm.java.io.ByteArrayOutputStream()
-        spark._jvm.org.apache.hadoop.io.IOUtils.copyBytes(inp, baos, 4096, False)
-        return bytes(baos.toByteArray()).decode("utf-8")
+        data = spark._jvm.org.apache.commons.io.IOUtils.toByteArray(inp)
+        return bytes(data).decode("utf-8")
     finally:
         inp.close()
+
+
+def read_text_or_none(spark: SparkSession, path: str) -> str | None:
+    """Like :func:`read_text`, but None when the object is absent —
+    the existence-probe read tag resolution uses."""
+    if not exists(spark, path):
+        return None
+    return read_text(spark, path)
 
 
 def modification_time_ms(spark: SparkSession, path: str) -> int | None:

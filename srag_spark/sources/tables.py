@@ -60,6 +60,8 @@ import json
 import uuid
 from functools import reduce
 
+import pyarrow as pa
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -85,14 +87,20 @@ def _manifest_path(path: str, version: int) -> str:
     return f"{path}/{_MANIFEST_DIR}/v{version:010d}.json"
 
 
-def latest_manifest_version(spark: SparkSession, path: str) -> int | None:
-    names = fsio.list_names(spark, f"{path}/{_MANIFEST_DIR}")
-    versions = [
+def manifest_versions(spark: SparkSession, path: str) -> list[int]:
+    """Every committed snapshot version still on storage, oldest first
+    (vacuumed ones are absent) — one directory listing, no manifest
+    read."""
+    return sorted(
         int(n[1:-5])
-        for n in names
+        for n in fsio.list_names(spark, f"{path}/{_MANIFEST_DIR}")
         if n.startswith("v") and n.endswith(".json") and n[1:-5].isdigit()
-    ]
-    return max(versions) if versions else None
+    )
+
+
+def latest_manifest_version(spark: SparkSession, path: str) -> int | None:
+    versions = manifest_versions(spark, path)
+    return versions[-1] if versions else None
 
 
 def read_manifest(
@@ -113,6 +121,25 @@ def read_manifest(
         ) from exc
     m["version"] = v
     return m
+
+
+def snapshot(
+    spark: SparkSession,
+    path: str,
+    version: int | None = None,
+    tag: str | None = None,
+) -> dict:
+    """The manifest of the snapshot a reader asked for — the latest, a
+    ``version``, or a named ``tag`` — read once; raises when the table
+    does not exist or the snapshot was vacuumed."""
+    if tag is not None:
+        if version is not None:
+            raise ValueError("pass version= or tag=, not both")
+        version = resolve_tag(spark, path, tag)
+    manifest = read_manifest(spark, path, version=version)
+    if manifest is None:
+        raise FileNotFoundError(f"no table (no committed manifest) at {path}")
+    return manifest
 
 
 class ManifestCommitRace(RuntimeError):
@@ -161,6 +188,20 @@ def _bucket_dirs(path: str, manifest: dict, buckets=None) -> list[str]:
     return [f"{path}/{live[k]}" for k in sorted(keys, key=int) if k in live]
 
 
+def scan_manifest(
+    spark: SparkSession, path: str, manifest: dict, buckets=None
+) -> DataFrame:
+    """The rows of the snapshot ``manifest`` describes (optionally pruned
+    to specific buckets — the manifest-level partition pruning used by
+    upsert/delete).  Every table scan goes through here, so a caller
+    that holds a manifest scans exactly that snapshot."""
+    schema = StructType.fromJson(json.loads(manifest["schema"]))
+    dirs = _bucket_dirs(path, manifest, buckets)
+    if not dirs:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*dirs)
+
+
 def read_table(
     spark: SparkSession,
     path: str,
@@ -169,20 +210,8 @@ def read_table(
     tag: str | None = None,
 ) -> DataFrame:
     """Read a snapshot — the latest, time-travel to ``version``, or a
-    named ``tag`` (optionally pruned to specific buckets — the
-    manifest-level partition pruning used by upsert/delete)."""
-    if tag is not None:
-        if version is not None:
-            raise ValueError("pass version= or tag=, not both")
-        version = resolve_tag(spark, path, tag)
-    manifest = read_manifest(spark, path, version=version)
-    if manifest is None:
-        raise FileNotFoundError(f"no table (no committed manifest) at {path}")
-    schema = StructType.fromJson(json.loads(manifest["schema"]))
-    dirs = _bucket_dirs(path, manifest, buckets)
-    if not dirs:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*dirs)
+    named ``tag`` (optionally pruned to specific buckets)."""
+    return scan_manifest(spark, path, snapshot(spark, path, version, tag), buckets)
 
 
 def lookup_by_key(
@@ -193,27 +222,22 @@ def lookup_by_key(
 ) -> DataFrame:
     """Point lookup (S6) that PRUNES to the key buckets: the manifest's
     bucket layout (``pmod(xxhash64(key), n)``) is evaluated for the
-    requested key values in one single-row Spark job, and only those
-    buckets' dirs are scanned — a lookup on a 100 TB table reads
-    ~1/n_buckets of it (then parquet row-group stats narrow further),
-    instead of the full scan a plain ``read_table().filter()`` plans.
+    requested key values on an Arrow-backed local relation (on the
+    driver, no Spark job), and only those buckets' dirs are scanned — a
+    lookup on a 100 TB table reads ~1/n_buckets of it (then parquet
+    row-group stats narrow further), instead of the full scan a plain
+    ``read_table().filter()`` plans.
     Returns the matching rows (all rows of a multi-row key).  Keys are
     matched on the table's FIRST key column (the bucket column)."""
-    manifest = read_manifest(spark, path, version=version)
-    if manifest is None:
-        raise FileNotFoundError(f"no table (no committed manifest) at {path}")
+    manifest = snapshot(spark, path, version)
     bcol = manifest["bucket_col"]
     n = manifest["n_buckets"]
     vals = sorted(set(values))
-    buckets = [
-        r[0]
-        for r in spark.createDataFrame([(v,) for v in vals], f"{bcol} string")
-        .select(_key_bucket(bcol, n))
-        .collect()
-    ]
-    return read_table(
-        spark, path, buckets=sorted(set(buckets)), version=manifest["version"]
-    ).filter(F.col(bcol).isin(vals))
+    keys = spark.createDataFrame(pa.table({bcol: pa.array(vals, pa.string())}))
+    buckets = [r[0] for r in keys.select(_key_bucket(bcol, n)).collect()]
+    return scan_manifest(spark, path, manifest, sorted(set(buckets))).filter(
+        F.col(bcol).isin(vals)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -471,7 +495,7 @@ def _prepare_merge(
     # returns null for them, so no rewrite of untouched data is needed.
     schema = StructType.fromJson(json.loads(manifest["schema"]))
     # manifest-level pruning: read only touched buckets' live dirs
-    merged = read_table(spark, path, buckets=touched)
+    merged = scan_manifest(spark, path, manifest, touched)
     if deletes is not None:
         merged = merged.join(deletes, deletes.columns, "left_anti")
     if incoming is not None:
@@ -528,7 +552,7 @@ def _delete_where_once(spark: SparkSession, path: str, cond) -> int:
 
     # pass 1: which buckets hold matches, and how many rows die (tiny
     # grouped result — bucket ids + counts only reach the driver)
-    full = read_table(spark, path).withColumn(
+    full = scan_manifest(spark, path, manifest).withColumn(
         BUCKET_COL, _key_bucket(bcol, n_buckets)
     )
     hit = {
@@ -541,7 +565,7 @@ def _delete_where_once(spark: SparkSession, path: str, cond) -> int:
 
     # pass 2: rewrite only the touched buckets without their matches
     remaining = (
-        read_table(spark, path, buckets=touched)
+        scan_manifest(spark, path, manifest, touched)
         .filter(~F.coalesce(cond, F.lit(False)))
         .withColumn(BUCKET_COL, _key_bucket(bcol, n_buckets))
     )
@@ -613,9 +637,7 @@ def snapshot_diff(
     on both sides when the layout is unchanged between the versions —
     with null-safe struct equality on the non-key columns.  Nothing
     driver-side."""
-    m_to = read_manifest(spark, path, version=to_version)
-    if m_to is None:
-        raise FileNotFoundError(f"no table (no committed manifest) at {path}")
+    m_to = snapshot(spark, path, to_version)
     if from_version > m_to["version"]:
         raise ValueError(
             f"snapshot_diff window is inverted: from v{from_version} > "
@@ -627,8 +649,10 @@ def snapshot_diff(
             f"table at {path} predates key recording — pass key_cols="
         )
     to_schema = StructType.fromJson(json.loads(m_to["schema"]))
-    old = _align(read_table(spark, path, version=from_version), to_schema)
-    new = _align(read_table(spark, path, version=m_to["version"]), to_schema)
+    old = _align(
+        scan_manifest(spark, path, snapshot(spark, path, from_version)), to_schema
+    )
+    new = _align(scan_manifest(spark, path, m_to), to_schema)
     val_cols = [c for c in to_schema.fieldNames() if c not in keys]
 
     # MAP columns are not comparable (no ordering); canonicalize them to
@@ -767,13 +791,11 @@ def _rewrite_once(
     stats_for: list[str] | None = None,
     zorder_by: list[str] | None = None,
 ) -> dict:
-    manifest = read_manifest(spark, path)
-    if manifest is None:
-        raise FileNotFoundError(f"no table (no committed manifest) at {path}")
+    manifest = snapshot(spark, path)
     expected_prev = manifest["version"]
     bcol = manifest["bucket_col"]
     new_n = manifest["n_buckets"] if n_buckets is None else n_buckets
-    rows = read_table(spark, path).withColumn(
+    rows = scan_manifest(spark, path, manifest).withColumn(
         BUCKET_COL, _key_bucket(bcol, new_n)
     )
     commit_id = f"c{uuid.uuid4().hex}"
@@ -859,10 +881,7 @@ def tag_snapshot(
     history ages out.  Defaults to the latest version; re-pointing an
     existing tag requires ``overwrite=True``.  Returns the pinned
     version."""
-    v = latest_manifest_version(spark, path) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no table (no committed manifest) at {path}")
-    read_manifest(spark, path, version=v)  # must exist (raises otherwise)
+    v = snapshot(spark, path, version)["version"]  # must exist
     tp = _tag_path(path, name)
     if not overwrite and fsio.read_text_or_none(spark, tp) is not None:
         raise ValueError(f"tag {name!r} already exists (pass overwrite=True)")
@@ -1007,15 +1026,9 @@ def scan_range(
     ts-sorted table opens ~1/8760 of the files; everything else is
     eliminated from the manifest dict alone, before any task launches.
     """
-    if tag is not None:
-        if version is not None:
-            raise ValueError("pass version= or tag=, not both")
-        version = resolve_tag(spark, path, tag)
-    manifest = read_manifest(spark, path, version=version)
-    if manifest is None:
-        raise FileNotFoundError(f"no table (no committed manifest) at {path}")
+    manifest = snapshot(spark, path, version, tag)
     keep, _ = _prune_for_range(manifest, col, lo, hi)
-    df = read_table(spark, path, buckets=keep, version=manifest["version"])
+    df = scan_manifest(spark, path, manifest, keep)
     if lo is not None:
         df = df.filter(F.col(col) >= F.lit(lo))
     if hi is not None:
@@ -1029,21 +1042,16 @@ def table_history(spark: SparkSession, path: str) -> DataFrame:
     ``(version, n_buckets, bucket_col, key_cols, sort_by, zorder_by,
     n_live_buckets, n_fields, tags)`` — so layout evolution, schema
     growth and tag placement are queryable without touching a byte of
-    data.  Metadata-only: O(versions) manifest reads on the driver,
-    vacuumed snapshots silently absent, no Spark job until the result
-    is consumed."""
-    latest = latest_manifest_version(spark, path)
-    if latest is None:
-        raise FileNotFoundError(f"no table (no committed manifest) at {path}")
+    data.  Metadata-only: one listing plus one FileSystem-API read per
+    surviving manifest on the driver (vacuumed snapshots are simply not
+    listed); building the result starts no Spark job."""
+    latest = snapshot(spark, path)
     tag_by_v: dict[int, list[str]] = {}
     for name, v in sorted(list_tags(spark, path).items()):
         tag_by_v.setdefault(v, []).append(name)
     rows = []
-    for v in range(1, latest + 1):
-        try:
-            m = read_manifest(spark, path, version=v)
-        except FileNotFoundError:
-            continue  # vacuumed
+    for v in manifest_versions(spark, path):
+        m = latest if v == latest["version"] else read_manifest(spark, path, v)
         n_fields = len(json.loads(m["schema"])["fields"]) if m.get("schema") else None
         rows.append(
             (
@@ -1067,13 +1075,10 @@ def table_history(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def _file_rows(spark: SparkSession, path: str, version: int | None) -> list:
+def _file_rows(spark: SparkSession, path: str, manifest: dict) -> list:
     """Driver-side rows behind :func:`table_files` (shared with callers
     like ``SragEngine.describe`` that consume the listing without a
     DataFrame round-trip)."""
-    manifest = read_manifest(spark, path, version=version)
-    if manifest is None:
-        raise FileNotFoundError(f"no table (no committed manifest) at {path}")
     stats = manifest.get("stats") or {}
     rows = []
     for b, rel in sorted(manifest["buckets"].items(), key=lambda kv: int(kv[0])):
@@ -1101,7 +1106,7 @@ def table_files(
     listings on the driver (the same class as vacuum) — metadata-only,
     never opens a data file."""
     return spark.createDataFrame(
-        _file_rows(spark, path, version),
+        _file_rows(spark, path, snapshot(spark, path, version)),
         "bucket int, file string, size_bytes long, mtime_ms long, stats string",
     )
 
@@ -1118,13 +1123,11 @@ def rollback(spark: SparkSession, path: str, to_version: int) -> int:
     compare-and-publish as every commit.  Returns the new version."""
 
     def once() -> int:
-        latest = read_manifest(spark, path)
-        if latest is None:
-            raise FileNotFoundError(f"no table (no committed manifest) at {path}")
+        latest = snapshot(spark, path)
         if to_version == 0:
             body = _next_body(latest, stats={}, buckets={})
         else:  # raises if vacuumed
-            body = _next_body(read_manifest(spark, path, version=to_version))
+            body = _next_body(snapshot(spark, path, to_version))
         commit_manifest(spark, path, body, expected_prev=latest["version"])
         return latest["version"] + 1
 
@@ -1231,13 +1234,9 @@ def read_staged(
     ``buckets=touched`` (from :func:`list_staged`) to audit only the
     buckets the staged batch rewrote — the usual shape for per-batch
     quality gates on a table far larger than any one batch."""
-    st = _read_staged_record(spark, path, staging_id)
-    body = st["body"]
-    schema = StructType.fromJson(json.loads(body["schema"]))
-    dirs = _bucket_dirs(path, body, buckets)
-    if not dirs:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*dirs)
+    return scan_manifest(
+        spark, path, _read_staged_record(spark, path, staging_id)["body"], buckets
+    )
 
 
 def publish_staged(
@@ -1347,18 +1346,14 @@ def vacuum(
     Set it comfortably above the longest plausible commit duration; 0
     restores delete-everything-unreferenced (safe only when no writer
     can possibly be mid-commit)."""
-    versions = sorted(
-        int(n[1:-5])
-        for n in fsio.list_names(spark, f"{path}/{_MANIFEST_DIR}")
-        if n.startswith("v") and n.endswith(".json") and n[1:-5].isdigit()
-    )
+    versions = manifest_versions(spark, path)
     if not versions:
         return 0
     tagged = set(list_tags(spark, path).values())
     keep = sorted(set(versions[-keep_manifests:]) | (tagged & set(versions)))
     live_commits: set[str] = set()
     for v in keep:
-        m = json.loads(fsio.read_text(spark, _manifest_path(path, v)))
+        m = read_manifest(spark, path, v)
         # engine-level manifests (api.SragEngine) reuse this protocol but
         # carry no data dirs — only their manifest files age out
         for d in m.get("buckets", {}).values():

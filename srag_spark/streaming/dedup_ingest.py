@@ -58,16 +58,21 @@ from srag_spark.operators.dedup import (
     incremental_dedup,
     norm_text_col,
 )
-from srag_spark.sources.tables import read_manifest, read_table, upsert_by_key
+from srag_spark.sources.tables import (
+    read_manifest,
+    read_table,
+    scan_manifest,
+    upsert_by_key,
+)
 
 
 def _bloom_prefilter(
     spark: SparkSession,
     batch_df: DataFrame,
     index_path: str,
+    idx_manifest: dict,
     bloom_path: str,
     index: DataFrame,
-    idx_buckets: int,
     n_hash: int,
     hex_digits: int,
 ):
@@ -77,7 +82,7 @@ def _bloom_prefilter(
     sidecar over an EXISTING index = onboarding: build it from the
     committed keys once (one index scan) and commit it before any
     verdict depends on it."""
-    bucket = table_bucket_col(F.col("text_hash"), idx_buckets)
+    bucket = table_bucket_col(F.col("text_hash"), idx_manifest["n_buckets"])
     try:
         blooms = read_table(spark, bloom_path)
         meta = blooms.select("n_hash", "hex_digits").first()
@@ -120,7 +125,7 @@ def _bloom_prefilter(
     hit_buckets = sorted(r["bucket"] for r in hits)
     if not hit_buckets:
         return index.limit(0)
-    return read_table(spark, index_path, buckets=hit_buckets).select(
+    return scan_manifest(spark, index_path, idx_manifest, hit_buckets).select(
         "doc_id", "text_hash", "sig"
     )
 
@@ -191,9 +196,12 @@ def rebuild_bloom_sidecar(
             f"{index_path} is bucketed by {manifest['bucket_col']!r}; a "
             "bloom sidecar requires a text_hash-keyed index"
         )
-    idx_buckets = manifest["n_buckets"]
-    keys = read_table(spark, index_path).select("text_hash").withColumn(
-        "bucket", table_bucket_col(F.col("text_hash"), idx_buckets)
+    keys = (
+        scan_manifest(spark, index_path, manifest)
+        .select("text_hash")
+        .withColumn(
+            "bucket", table_bucket_col(F.col("text_hash"), manifest["n_buckets"])
+        )
     )
     blooms = _stamp_bloom_params(
         build_bloom(keys, "text_hash", "bucket", n_hash, hex_digits),
@@ -265,12 +273,12 @@ def dedup_batch_sink(
                 "disable the sidecar)"
             )
     index_keys = ["text_hash"] if bloom_path is not None else ["doc_id"]
-    try:
-        index = read_table(spark, index_path).select(
+    if idx_manifest is None:  # first batch: nothing committed yet
+        index = build_dedup_index(batch_df.limit(0))
+    else:
+        index = scan_manifest(spark, index_path, idx_manifest).select(
             "doc_id", "text_hash", "sig"
         )
-    except FileNotFoundError:  # first batch: nothing committed yet
-        index = build_dedup_index(batch_df.limit(0))
 
     exact_index = None
     idx_buckets = idx_manifest["n_buckets"] if idx_manifest else n_buckets
@@ -279,9 +287,9 @@ def dedup_batch_sink(
             spark,
             batch_df,
             index_path,
+            idx_manifest,
             bloom_path,
             index,
-            idx_buckets,
             bloom_n_hash,
             bloom_hex_digits,
         )

@@ -324,6 +324,18 @@ def test_cross_table_snapshot_isolation_between_commits(spark, tmp_path, monkeyp
     assert eng.metrics().count() == 4
 
 
+def test_lookup_runs_at_most_two_jobs(spark, tmp_path, jobs_run_by):
+    """A point lookup reads the engine and table manifests on the driver
+    and maps the key to its bucket without a job: only the bucket scan
+    runs (``limit(1)`` may take a second pass over the bucket's files)."""
+    eng = SragEngine(spark, str(tmp_path / "kb"), n_buckets=4)
+    eng.ingest(_docs(spark, [("a", TEXT_A), ("b", TEXT_B)]))
+    for doc in ("a", "b"):
+        rows, jobs = jobs_run_by(lambda: eng.get_transcript(doc).collect())
+        assert [r["doc_id"] for r in rows] == [doc]
+        assert len(jobs) <= 2, jobs
+
+
 def test_engine_time_travel_across_snapshots(spark, tmp_path):
     """Every ingest/delete publishes an engine snapshot; old versions
     stay readable (four-table-consistent) until vacuumed."""

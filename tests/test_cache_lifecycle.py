@@ -72,9 +72,13 @@ def test_engine_ingest_and_queries_release(spark, tmp_path):
     eng = SragEngine(spark, str(tmp_path / "kb"), n_buckets=4)
     eng.ingest(_span_docs(spark, [("a", GOOD), ("b", OTHER)]))
     assert cache_empty(spark)
+    persisted_rdds = spark.sparkContext._jsc.getPersistentRDDs
     for text in ("quick brown fox", "cooking pasta", "basil garden summer"):
+        before = persisted_rdds().size()
         assert eng.query(text, limit=2).collect()
         assert cache_empty(spark)
+        # a query result holds its rows, not a persisted RDD
+        assert persisted_rdds().size() == before
 
 
 def test_curate_without_ledger_releases(spark, text_docs):

@@ -15,6 +15,7 @@ from srag_spark.sources.tables import (
     latest_manifest_version,
     read_manifest,
     rewrite_table,
+    rollback,
     table_files,
     table_history,
     tag_snapshot,
@@ -45,6 +46,28 @@ def test_table_history_versions_tags_and_layout(spark, tmp_path):
         m = read_manifest(spark, path, version=v)
         assert row["n_live_buckets"] == len(m["buckets"])
         assert row["n_fields"] == len(json.loads(m["schema"])["fields"])
+
+
+def test_metadata_reads_start_no_spark_job(spark, tmp_path, jobs_run_by):
+    """Manifests are read through the FileSystem API on the driver:
+    reading one, building a 4-version table's history and listing an
+    engine's snapshots start no Spark job."""
+    path = str(tmp_path / "t")
+    upsert_by_key(spark, path, _docs(spark, 4), ["doc_id"], n_buckets=2)
+    upsert_by_key(spark, path, _docs(spark, 2, seed=9), ["doc_id"], n_buckets=2)
+    rollback(spark, path, 1)
+    rollback(spark, path, 2)
+    eng = SragEngine(spark, str(tmp_path / "kb"), n_buckets=2)
+    for _ in range(4):
+        eng._publish_engine_snapshot()
+
+    manifest, jobs = jobs_run_by(lambda: read_manifest(spark, path))
+    assert manifest["version"] == 4 and jobs == []
+    hist, jobs = jobs_run_by(lambda: table_history(spark, path))
+    assert jobs == []
+    assert [r["version"] for r in hist.orderBy("version").collect()] == [1, 2, 3, 4]
+    versions, jobs = jobs_run_by(eng.snapshot_versions)
+    assert versions == [1, 2, 3, 4] and jobs == []
 
 
 def test_table_files_lists_live_parquet_and_stats(spark, tmp_path):

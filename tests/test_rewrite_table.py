@@ -603,12 +603,14 @@ def test_engine_tags_survive_vacuum(spark, tmp_path):
     eng.vacuum(keep_manifests=1, min_age_seconds=0)
     # the tagged engine snapshot AND its pinned table versions survive
     assert eng.tags() == {"prod": s1}
+    assert eng.snapshot_versions() == [s1, s1 + 2]  # vacuumed s1 + 1 omitted
     assert eng.transcripts(version=s1).count() == 3
     assert eng.transcripts().count() == 8
 
     # dropping the tag releases everything at the next vacuum
     eng.drop_tag("prod")
     eng.vacuum(keep_manifests=1, min_age_seconds=0)
+    assert eng.snapshot_versions() == [s1 + 2]
     import pytest
     with pytest.raises(FileNotFoundError):
         eng.transcripts(version=s1).count()
