@@ -566,7 +566,9 @@ class SragEngine:
         """Point lookup (S6), bucket-pruned: the manifest's key layout
         maps doc_id to its hash bucket driver-side, so the scan opens
         ~1/n_buckets of the table instead of all of it
-        (:func:`srag_spark.sources.tables.lookup_by_key`)."""
+        (:func:`srag_spark.sources.tables.lookup_by_key`).  The upsert
+        keeps ``doc_id`` unique, so the result needs no ``limit(1)``, which
+        would scan the bucket's files one job at a time."""
         from srag_spark.sources.tables import lookup_by_key
 
         return lookup_by_key(
@@ -574,7 +576,7 @@ class SragEngine:
             self.transcripts_path,
             [doc_id],
             version=self._pinned_version("transcripts"),
-        ).limit(1)
+        )
 
     def list_transcripts(
         self,

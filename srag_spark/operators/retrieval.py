@@ -413,8 +413,12 @@ def retrieve_context(
     qvec = query_vec if query_vec is not None else embed_query(query_text, embed_fn)
     semantic = cosine_topk(embeddings, qvec, FUSION_POOL_SIZE, flt)
     with held() as ledger:
-        lexical = bm25_topk(
-            chunks, query_text, FUSION_POOL_SIZE, flt=flt, persisted=ledger
+        # the BM25 top-k feeds both the fusion and the text resolution,
+        # and the reranked scores both the gate stats and the rows: each
+        # is evaluated once
+        lexical = persist(
+            bm25_topk(chunks, query_text, FUSION_POOL_SIZE, flt=flt, persisted=ledger),
+            ledger,
         )
         fused = rrf_fuse(semantic, lexical)
         candidates = persist(resolve_candidate_texts(fused, lexical, chunks), ledger)
@@ -437,7 +441,7 @@ def retrieve_context(
                 if rerank_col is not None
                 else make_rerank_udf(query_text, rerank_fn)(F.col("text"))
             )
-            scored = candidates.select(*_KEY, "text", score.alias("score"))
+            scored = persist(candidates.select(*_KEY, "text", score.alias("score")), ledger)
             return _collected(filter_reranked(scored, limit))
         except Exception:  # noqa: BLE001 — reranker failure → fusion fallback
             return _collected(fusion_results)

@@ -15,10 +15,16 @@ Design:
   to the reference's per-job granularity;
 * buckets are processed in **waves** (a configurable number of buckets
   per Spark job).  Each wave writes its output with dynamic partition
-  overwrite (idempotent — the Iceberg ``overwritePartitions`` analogue)
-  and then appends per-bucket checkpoint rows with lineage + extraction
-  metrics observed in the writing job itself (``DataFrame.observe``: one
-  job, no cache).  A crash between waves loses at most one wave of work;
+  overwrite, set on that write only (idempotent — the Iceberg
+  ``overwritePartitions`` analogue), and then appends per-bucket
+  checkpoint rows with lineage + extraction metrics observed in the
+  writing job itself (``DataFrame.observe``: one job, no cache).  A
+  crash between waves loses at most one wave of work;
+* the checkpoint table is a directory of parquet files that Spark reads
+  as usual (``spark.read.schema(CHECKPOINTS_SCHEMA).parquet(dir)``), but
+  the pipeline reads and appends it on the driver through
+  :mod:`srag_spark.sources.fsio` and pyarrow: a wave's bookkeeping starts
+  no Spark job, so a wave runs only its write job;
 * resume = read the checkpoint table, keep the latest row per bucket
   (status-history preserved, like the reference's updatedAt-bumping
   ``mark*`` transitions), and anti-join Success buckets out of the
@@ -37,9 +43,13 @@ from __future__ import annotations
 
 import datetime as _dt
 import traceback
+import uuid
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from srag_spark.operators.parse import (
     DEFAULT_SALT_THRESHOLD,
@@ -58,6 +68,30 @@ from srag_spark.sources import fsio
 
 def _now() -> _dt.datetime:
     return _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+
+
+# The checkpoint table's Arrow schema, derived from CHECKPOINTS_SCHEMA:
+# timestamps are ``timestamp[us, UTC]`` in the files this module writes,
+# and naive UTC (``_now()``'s form) once read.  Files Spark wrote carry
+# INT96 timestamps, which pyarrow reads as naive UTC values.
+_ARROW = to_arrow_schema(CHECKPOINTS_SCHEMA)
+_ARROW_NAIVE = pa.schema(
+    [f.with_type(pa.timestamp("us")) if pa.types.is_timestamp(f.type) else f
+     for f in _ARROW]
+)
+
+
+def _latest(history: pa.Table) -> pa.Table:
+    """The latest row per bucket of a checkpoint history: ``updated_at``
+    desc, then ``attempt`` desc."""
+    ordered = history.sort_by([
+        ("partition_id", "ascending"),
+        ("updated_at", "descending"),
+        ("attempt", "descending"),
+    ])
+    ids = ordered.column("partition_id").to_pylist()
+    first = [i for i, b in enumerate(ids) if i == 0 or b != ids[i - 1]]
+    return ordered.take(pa.array(first, pa.int64()))
 
 
 # J5 retry backoff (IngestionWorker.scala:362-368; application.conf
@@ -132,39 +166,58 @@ class ExtractionPipeline:
         self.slice_target = slice_target
 
     # -- checkpoint table ---------------------------------------------------
+    def _history(self) -> pa.Table:
+        """Every checkpoint row, read on the driver (no Spark job): the
+        visible part files of the checkpoint dir (names starting with
+        ``_`` or ``.`` skipped, as Spark's file index skips them — so a
+        crashed append's hidden temp file is never read), decoded by
+        pyarrow, timestamps normalized to naive UTC."""
+        names = sorted(
+            n for n in fsio.list_names(self.spark, self.checkpoint_dir)
+            if not n.startswith(("_", "."))
+        )
+        parts = [
+            pq.read_table(pa.BufferReader(
+                fsio.read_bytes(self.spark, f"{self.checkpoint_dir}/{n}")
+            )).cast(_ARROW_NAIVE)
+            for n in names
+        ]
+        return pa.concat_tables(parts) if parts else _ARROW_NAIVE.empty_table()
+
+    def _relation(self, table: pa.Table) -> DataFrame:
+        """Checkpoint rows as an Arrow-backed local relation."""
+        return self.spark.createDataFrame(table.cast(_ARROW), CHECKPOINTS_SCHEMA)
+
     def checkpoints(self) -> DataFrame:
-        """Full checkpoint history (may be empty)."""
-        if not fsio.exists(self.spark, self.checkpoint_dir):
-            return self.spark.createDataFrame([], CHECKPOINTS_SCHEMA)
-        return self.spark.read.schema(CHECKPOINTS_SCHEMA).parquet(self.checkpoint_dir)
+        """Full checkpoint history (may be empty), as a local relation."""
+        return self._relation(self._history())
 
     def latest_checkpoints(self) -> DataFrame:
-        """Latest row per bucket (updated_at desc, attempt desc)."""
-        w = Window.partitionBy("partition_id").orderBy(
-            F.desc("updated_at"), F.desc("attempt")
-        )
-        return (
-            self.checkpoints()
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        """Latest row per bucket (updated_at desc, attempt desc) — the
+        rows :meth:`run` decides from."""
+        return self._relation(_latest(self._history()))
 
     def _append_checkpoints(self, rows: list[dict]) -> None:
-        df = self.spark.createDataFrame(
-            [tuple(r[f.name] for f in CHECKPOINTS_SCHEMA.fields) for r in rows],
-            CHECKPOINTS_SCHEMA,
-        )
-        df.coalesce(1).write.mode("append").parquet(self.checkpoint_dir)
+        """Append one parquet file of checkpoint rows on the driver (no
+        Spark job): written under a hidden temp name, then renamed to a
+        fresh ``part-<uuid>.parquet``, so a reader sees all of it or none
+        of it.  A rename that reports failure raises, so the wave is not
+        recorded as done."""
+        buf = pa.BufferOutputStream()
+        pq.write_table(pa.Table.from_pylist(rows, schema=_ARROW), buf)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = f"{self.checkpoint_dir}/.{name}.tmp"
+        fsio.write_bytes(self.spark, tmp, buf.getvalue().to_pybytes())
+        if not fsio.rename(self.spark, tmp, f"{self.checkpoint_dir}/{name}"):
+            fsio.delete(self.spark, tmp, recursive=False)
+            raise OSError(f"could not append checkpoint rows at {self.checkpoint_dir}")
 
     def _bucket_states(self) -> dict[int, tuple[str, int, object]]:
         """bucket → (status, attempt, next_attempt_at) from the latest
         checkpoint rows."""
         return {
             r["partition_id"]: (r["status"], r["attempt"], r["next_attempt_at"])
-            for r in self.latest_checkpoints()
-            .select("partition_id", "status", "attempt", "next_attempt_at")
-            .collect()
+            for r in _latest(self._history()).to_pylist()
         }
 
     def pending_buckets(self, now: _dt.datetime | None = None) -> list[int]:
@@ -202,11 +255,10 @@ class ExtractionPipeline:
         ``now`` overrides the clock for the backoff check (tests).
         Returns a summary dict.
         """
-        spark = self.spark
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-        states = self._bucket_states()
         pending = self.pending_buckets(now=now)
+        # the attempt numbers of this run's rows; a second driver-side
+        # read of the table, which starts no Spark job
+        states = self._bucket_states()
         summary = {
             "skipped": self.n_buckets - len(pending),
             "succeeded": [],
@@ -263,8 +315,10 @@ class ExtractionPipeline:
 
     def _process_wave(self, docs: DataFrame, wave: list[int]) -> dict:
         """One Spark job: extract the wave's buckets, overwrite their output
-        partitions, return the per-bucket counts observed by that write (in
-        its result stage, which counts each partition once)."""
+        partitions (dynamic overwrite as an option of this write, so the
+        session's ``partitionOverwriteMode`` stays as the caller set it),
+        return the per-bucket counts observed by that write (in its
+        result stage, which counts each partition once)."""
         wave_docs = docs.filter(F.col("bucket").isin(wave)).select("doc_id", "spans")
         obs = Observation()
         extracted = extract_documents(
@@ -277,7 +331,9 @@ class ExtractionPipeline:
         flat = explode_extracted(extracted).withColumn(
             "bucket", bucket_col(self.n_buckets)
         )
-        flat.write.mode("overwrite").partitionBy("bucket").parquet(self.spans_dir)
+        flat.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("bucket").parquet(self.spans_dir)
         return wave_counts(obs.get, wave)
 
     def _ckpt_row(

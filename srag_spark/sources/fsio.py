@@ -7,8 +7,11 @@ wherever a 100 TB table actually lives (HDFS, S3A, GCS, ABFS, local).
 No ``os`` / ``shutil`` / ``open()`` calls anywhere in the sink path.
 
 Small-file reads go through ``FileSystem.open`` on the driver (no Spark
-job), writes through ``FileSystem.create``; the single rename used for
-manifest commits is atomic on HDFS and local filesystems.  On S3 proper,
+job), writes through ``FileSystem.create``: manifests as text, and the
+pipeline's checkpoint part files as parquet bytes that pyarrow encodes
+and decodes on the driver.  The single rename used for manifest commits
+is atomic on HDFS and local filesystems; a checkpoint part file is
+published by a plain :func:`rename` to a uuid name.  On S3 proper,
 swap :func:`rename_atomic` for a conditional PUT (If-None-Match) — one
 function, documented at the call site in :mod:`srag_spark.sources.tables`.
 """
@@ -73,29 +76,36 @@ def list_status(spark: SparkSession, path: str) -> list[dict]:
     ]
 
 
-def write_text(spark: SparkSession, path: str, data: str) -> None:
-    """Create/overwrite a small text file through the FS API."""
+def write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
+    """Create/overwrite a small file through the FS API."""
     fs = _fs(spark, path)
     out = fs.create(_jpath(spark, path), True)
     try:
-        out.write(bytearray(data.encode("utf-8")))
+        out.write(bytearray(data))
     finally:
         out.close()
 
 
-def read_text(spark: SparkSession, path: str) -> str:
-    """Read a small text file (one object — e.g. a manifest) through the
-    FileSystem API on the driver: no Spark job, and it also sees names
-    starting with ``_`` or ``.``, which Spark's file index hides (sidecar
-    manifests use such names so parquet readers of the same directory
-    skip them)."""
+def write_text(spark: SparkSession, path: str, data: str) -> None:
+    write_bytes(spark, path, data.encode("utf-8"))
+
+
+def read_bytes(spark: SparkSession, path: str) -> bytes:
+    """Read a small file (one object — a manifest, a checkpoint part
+    file) through the FileSystem API on the driver: no Spark job, and it
+    also sees names starting with ``_`` or ``.``, which Spark's file
+    index hides (sidecar manifests use such names so parquet readers of
+    the same directory skip them)."""
     fs = _fs(spark, path)
     inp = fs.open(_jpath(spark, path))
     try:
-        data = spark._jvm.org.apache.commons.io.IOUtils.toByteArray(inp)
-        return bytes(data).decode("utf-8")
+        return bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(inp))
     finally:
         inp.close()
+
+
+def read_text(spark: SparkSession, path: str) -> str:
+    return read_bytes(spark, path).decode("utf-8")
 
 
 def read_text_or_none(spark: SparkSession, path: str) -> str | None:
@@ -122,6 +132,12 @@ def current_time_ms(spark: SparkSession) -> int:
     object stores the store's clock stamps objects; keep retention
     windows ≫ plausible clock skew."""
     return int(spark._jvm.System.currentTimeMillis())
+
+
+def rename(spark: SparkSession, src: str, dst: str) -> bool:
+    """Plain rename, for a destination name no other writer can pick (a
+    fresh uuid): no claim is taken, unlike :func:`rename_atomic`."""
+    return bool(_fs(spark, src).rename(_jpath(spark, src), _jpath(spark, dst)))
 
 
 _CLAIM_STALE_MS = 60_000

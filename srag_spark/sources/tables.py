@@ -228,12 +228,17 @@ def lookup_by_key(
     row-group stats narrow further), instead of the full scan a plain
     ``read_table().filter()`` plans.
     Returns the matching rows (all rows of a multi-row key).  Keys are
-    matched on the table's FIRST key column (the bucket column)."""
+    matched on the table's FIRST key column (the bucket column); the
+    string ``values`` are cast to that column's type before hashing."""
     manifest = snapshot(spark, path, version)
     bcol = manifest["bucket_col"]
     n = manifest["n_buckets"]
     vals = sorted(set(values))
-    keys = spark.createDataFrame(pa.table({bcol: pa.array(vals, pa.string())}))
+    # hash the values as the column's type, as the writes bucketed them
+    btype = StructType.fromJson(json.loads(manifest["schema"]))[bcol].dataType
+    keys = spark.createDataFrame(pa.table({bcol: pa.array(vals, pa.string())})).select(
+        F.col(bcol).cast(btype).alias(bcol)
+    )
     buckets = [r[0] for r in keys.select(_key_bucket(bcol, n)).collect()]
     return scan_manifest(spark, path, manifest, sorted(set(buckets))).filter(
         F.col(bcol).isin(vals)

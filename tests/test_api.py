@@ -336,6 +336,23 @@ def test_lookup_runs_at_most_two_jobs(spark, tmp_path, jobs_run_by):
         assert len(jobs) <= 2, jobs
 
 
+def test_lookup_and_query_job_counts(spark, tmp_path, jobs_run_by):
+    """Over buckets of several files each: a lookup is one job, since
+    ``doc_id`` is unique and the scan needs no ``limit(1)`` pass per file;
+    a query evaluates its BM25 top-k and its rerank scores once each."""
+    eng = SragEngine(spark, str(tmp_path / "kb"), n_buckets=2)
+    words = TEXT_A.split() + TEXT_B.split()
+    docs = [(f"d{i}", " ".join(words[i:] + words[:i])) for i in range(12)]
+    eng.ingest(_docs(spark, docs))
+    for doc, _ in docs:
+        rows, jobs = jobs_run_by(lambda: eng.get_transcript(doc).collect())
+        assert [r["doc_id"] for r in rows] == [doc]
+        assert len(jobs) == 1, (doc, jobs)
+    rows, jobs = jobs_run_by(lambda: eng.query("quick fox pasta", limit=3).collect())
+    assert rows
+    assert len(jobs) <= 22, jobs  # 25 with both relations recomputed
+
+
 def test_engine_time_travel_across_snapshots(spark, tmp_path):
     """Every ingest/delete publishes an engine snapshot; old versions
     stay readable (four-table-consistent) until vacuumed."""

@@ -7,10 +7,12 @@ from __future__ import annotations
 import datetime as _dt
 
 import pytest
+from pyspark.sql import functions as F
 
 from srag_spark import golden, synth
 from srag_spark.plans.pipeline import ExtractionPipeline
 from srag_spark.schema import (
+    CHECKPOINTS_SCHEMA,
     DOCUMENTS_SCHEMA,
     STATUS_DEAD_LETTER,
     STATUS_FAILED,
@@ -363,7 +365,6 @@ def test_wave_runs_no_more_jobs_than_its_bare_write(
     from srag_spark.operators.parse import explode_extracted, extract_documents
     from srag_spark.plans.pipeline import bucket_col
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     docs = spark.createDataFrame(mega_rows, schema=DOCUMENTS_SCHEMA)
     pipe = ExtractionPipeline(spark, str(tmp_path / "out"), n_buckets=4, **SALT)
 
@@ -371,9 +372,9 @@ def test_wave_runs_no_more_jobs_than_its_bare_write(
         flat = explode_extracted(extract_documents(docs, **SALT)).withColumn(
             "bucket", bucket_col(4)
         )
-        flat.write.mode("overwrite").partitionBy("bucket").parquet(
-            str(tmp_path / "bare")
-        )
+        flat.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("bucket").parquet(str(tmp_path / "bare"))
 
     _, bare = jobs_run_by(bare_write)
     counts, wave = jobs_run_by(
@@ -382,3 +383,206 @@ def test_wave_runs_no_more_jobs_than_its_bare_write(
     )
     assert bare and len(wave) <= len(bare)
     assert sum(c[0] for c in counts.values()) == len(mega_rows)
+
+
+# -- checkpoint bookkeeping on the driver --------------------------------------
+def test_run_starts_only_its_wave_writes(spark, docs_df, tmp_path, jobs_run_by):
+    """Reading the checkpoint table and appending a wave's rows start no
+    Spark job: a 2-wave run starts no more jobs than the bare writes of
+    its two waves."""
+    from srag_spark.operators.parse import explode_extracted, extract_documents
+    from srag_spark.plans.pipeline import bucket_col
+
+    pipe = ExtractionPipeline(spark, str(tmp_path / "out"), n_buckets=4, wave_size=2)
+    docs = docs_df.withColumn("bucket", bucket_col(4))
+
+    def bare_writes():
+        for wave in ([0, 1], [2, 3]):
+            wave_docs = docs.filter(docs.bucket.isin(wave)).select("doc_id", "spans")
+            flat = explode_extracted(extract_documents(wave_docs)).withColumn(
+                "bucket", bucket_col(4)
+            )
+            flat.write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("bucket").parquet(str(tmp_path / "bare"))
+
+    _, bare = jobs_run_by(bare_writes)
+    summary, run = jobs_run_by(lambda: pipe.run(docs_df))
+    assert summary["succeeded"] == [0, 1, 2, 3]
+    assert bare and len(run) <= len(bare), (run, bare)
+    # the resume leg reads the table and decides on the driver alone
+    summary, resume = jobs_run_by(lambda: pipe.run(docs_df))
+    assert summary["skipped"] == 4 and resume == []
+
+
+def test_run_leaves_session_overwrite_mode_alone(spark, docs_df, tmp_path):
+    """Dynamic partition overwrite is an option of the wave write, not a
+    session setting: after run() a plain partitioned overwrite in the same
+    session still replaces every partition."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    ExtractionPipeline(spark, str(tmp_path / "out"), n_buckets=2).run(docs_df)
+    assert spark.conf.get(key) == before
+
+    out = str(tmp_path / "plain")
+    spark.range(4).withColumn("p", F.col("id") % 2).write.mode(
+        "overwrite"
+    ).partitionBy("p").parquet(out)
+    spark.range(1).withColumn("p", F.lit(0)).write.mode(
+        "overwrite"
+    ).partitionBy("p").parquet(out)
+    assert [tuple(r) for r in spark.read.parquet(out).collect()] == [(0, 0)]
+
+
+def _ckpt(bucket, status, attempt, updated_at, next_at=None):
+    return {
+        "partition_id": bucket, "status": status, "attempt": attempt,
+        "max_attempts": 5, "error_message": None, "input_snapshot": "",
+        "docs_processed": 0, "blocks_kept": 0, "blocks_dropped": 0,
+        "parse_failures": 0, "started_at": updated_at, "updated_at": updated_at,
+        "next_attempt_at": next_at,
+    }
+
+
+def _legacy_append(spark, checkpoint_dir, rows):
+    """The previous checkpoint writer: a Spark job appending one file with
+    INT96 timestamps, plus ``_SUCCESS`` and ``.crc`` files."""
+    spark.createDataFrame(
+        [tuple(r[f.name] for f in CHECKPOINTS_SCHEMA.fields) for r in rows],
+        CHECKPOINTS_SCHEMA,
+    ).coalesce(1).write.mode("append").parquet(checkpoint_dir)
+
+
+def _states(rows):
+    return {r["partition_id"]: (r["status"], r["attempt"], r["next_attempt_at"])
+            for r in rows}
+
+
+def test_resume_from_a_checkpoint_dir_of_both_writers(spark, docs_df, tmp_path):
+    """A checkpoint dir the Spark writer started (INT96 timestamps,
+    ``_SUCCESS``, ``.crc``) and this writer continued resumes: the latest
+    row per bucket is taken across both kinds of file, in both directions,
+    and a Failed bucket's backoff is honoured."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    t = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None) - _dt.timedelta(hours=1)
+    sec = lambda n: t + _dt.timedelta(seconds=n)  # noqa: E731
+    pipe = ExtractionPipeline(
+        spark, str(tmp_path / "out"), n_buckets=4, wave_size=4, max_attempts=5
+    )
+    _legacy_append(spark, pipe.checkpoint_dir, [
+        _ckpt(0, STATUS_SUCCESS, 1, t),
+        _ckpt(1, STATUS_FAILED, 1, t, sec(2)),
+        _ckpt(2, STATUS_SUCCESS, 1, t),
+        _ckpt(3, STATUS_FAILED, 1, t, sec(2)),
+    ])
+    pipe._append_checkpoints([  # newer than the Spark-written rows
+        _ckpt(2, STATUS_FAILED, 2, sec(10), sec(14)),
+        _ckpt(3, STATUS_SUCCESS, 2, sec(10)),
+    ])
+    _legacy_append(spark, pipe.checkpoint_dir, [  # newer than this writer's
+        _ckpt(3, STATUS_FAILED, 3, sec(20), sec(28)),
+    ])
+    names = os.listdir(pipe.checkpoint_dir)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    timestamp_types = {
+        str(pq.ParquetFile(os.path.join(pipe.checkpoint_dir, n)).schema.column(11).physical_type)
+        for n in names if n.startswith("part-")
+    }
+    assert timestamp_types == {"INT96", "INT64"}
+
+    assert _states(pipe.latest_checkpoints().collect()) == {
+        0: (STATUS_SUCCESS, 1, None),
+        1: (STATUS_FAILED, 1, sec(2)),
+        2: (STATUS_FAILED, 2, sec(14)),
+        3: (STATUS_FAILED, 3, sec(28)),
+    }
+    # bucket 3's backoff runs until sec(28)
+    assert pipe.pending_buckets(now=sec(20)) == [1, 2]
+    s1 = pipe.run(docs_df, now=sec(20))
+    assert s1["succeeded"] == [1, 2] and s1["skipped"] == 2
+    s2 = pipe.run(docs_df, now=sec(30))
+    assert s2["succeeded"] == [3] and s2["skipped"] == 3
+    latest = {r["partition_id"]: (r["status"], r["attempt"])
+              for r in pipe.latest_checkpoints().collect()}
+    assert latest == {0: (STATUS_SUCCESS, 1), 1: (STATUS_SUCCESS, 2),
+                      2: (STATUS_SUCCESS, 3), 3: (STATUS_SUCCESS, 4)}
+    # the files stay one parquet table for Spark's reader
+    assert spark.read.schema(CHECKPOINTS_SCHEMA).parquet(pipe.checkpoint_dir).count() == 10
+    assert pipe.checkpoints().count() == 10
+
+
+def test_latest_checkpoints_are_the_states_run_decides_from(spark, docs_df, tmp_path):
+    """latest_checkpoints() and run() apply one latest-row rule to the
+    same checkpoint rows."""
+    pipe = ExtractionPipeline(
+        spark, str(tmp_path / "out"), n_buckets=4, wave_size=2, max_attempts=5
+    )
+    t = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+    # same updated_at for two rows of bucket 1: the higher attempt wins
+    pipe._append_checkpoints([
+        _ckpt(0, STATUS_FAILED, 1, t, t),
+        _ckpt(1, STATUS_FAILED, 1, t, t),
+        _ckpt(1, STATUS_FAILED, 2, t, t),
+    ])
+
+    def fail(wave):
+        raise RuntimeError("injected")
+
+    pipe.run(docs_df, fail_injector=fail, max_waves=1, now=t)  # waves [0,1]
+    decided = {}
+    read = pipe._bucket_states
+
+    def spy():
+        states = read()
+        decided.update(states)
+        return states
+
+    pipe._bucket_states = spy
+    want = _states(pipe.latest_checkpoints().collect())
+    pipe.run(docs_df, fail_injector=fail, now=t + _dt.timedelta(minutes=5))
+    assert decided == want
+    assert {b: v[:2] for b, v in want.items()} == {
+        0: (STATUS_FAILED, 2), 1: (STATUS_FAILED, 3)
+    }
+
+
+def test_hidden_temp_file_is_ignored(spark, tmp_path, monkeypatch):
+    """A crash between an append's write and its rename leaves a hidden
+    temp file; neither the pipeline nor Spark's reader sees its rows."""
+    import os
+
+    from srag_spark.sources import fsio
+
+    pipe = ExtractionPipeline(spark, str(tmp_path / "out"), n_buckets=2)
+    t = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
+    pipe._append_checkpoints([_ckpt(0, STATUS_SUCCESS, 1, t)])
+
+    def crash(*args):
+        raise RuntimeError("driver lost before the rename")
+
+    monkeypatch.setattr(fsio, "rename", crash)
+    with pytest.raises(RuntimeError):
+        pipe._append_checkpoints([_ckpt(1, STATUS_SUCCESS, 1, t)])
+    monkeypatch.undo()
+    stray = [n for n in os.listdir(pipe.checkpoint_dir)
+             if n.startswith(".") and not n.endswith(".crc")]
+    assert len(stray) == 1
+
+    assert pipe.pending_buckets() == [1]
+    assert _states(pipe.latest_checkpoints().collect()) == {
+        0: (STATUS_SUCCESS, 1, None)
+    }
+    assert spark.read.schema(CHECKPOINTS_SCHEMA).parquet(pipe.checkpoint_dir).count() == 1
+
+    # a rename that reports failure (Hadoop's FileSystem.rename returns
+    # false) fails the append, so the wave is not reported done
+    monkeypatch.setattr(fsio, "rename", lambda *args: False)
+    with pytest.raises(OSError):
+        pipe._append_checkpoints([_ckpt(1, STATUS_SUCCESS, 1, t)])
+    monkeypatch.undo()
+    assert pipe.pending_buckets() == [1]
+    assert [n for n in os.listdir(pipe.checkpoint_dir)
+            if n.startswith(".") and not n.endswith(".crc")] == stray

@@ -356,3 +356,21 @@ def test_bm25_filter_restricts_results_without_changing_scores(spark):
     sub = {k: v[0] for k, v in corpus.items() if v[1] == "a"}
     subset_scores = bm25_py(sub, "quick fox")
     assert filtered[("d1", 0)] != pytest.approx(subset_scores[("d1", 0)])
+
+
+def test_retrieve_context_scores_each_candidate_once(spark):
+    """The rerank scores, read by the gate stats and by the rows, are
+    evaluated once per query: every candidate is scored once (three times
+    when each reader recomputed them)."""
+    chunks, emb = _corpus_dfs(spark)
+    scored = spark.sparkContext.accumulator(0)
+
+    def rerank(query, texts):
+        scored.add(len(texts))
+        return [stable_unit_score(query, t) for t in texts]
+
+    out = retrieve_context(
+        chunks, emb, "spark documents", limit=3, rerank_fn=rerank
+    ).collect()
+    assert out
+    assert scored.value == 6  # the six candidates, each scored once

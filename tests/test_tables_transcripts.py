@@ -706,3 +706,18 @@ def test_lookup_by_key_prunes_and_matches_full_scan(spark, tmp_path):
     assert lookup_by_key(spark, path, ["nope"]).count() == 0
     multi = lookup_by_key(spark, path, ["d1", "d2", "d3"])
     assert multi.count() == 6
+
+
+def test_lookup_by_key_hashes_values_as_the_key_type(spark, tmp_path):
+    """The lookup's string values are hashed as the bucket column's type,
+    as the write bucketed them: a ``long`` key finds every row."""
+    from srag_spark.sources.tables import lookup_by_key
+
+    path = str(tmp_path / "t")
+    upsert_by_key(
+        spark, path,
+        spark.createDataFrame([(i, f"v{i}") for i in range(20)], "doc_id long, v string"),
+        ["doc_id"], n_buckets=8,
+    )
+    got = lookup_by_key(spark, path, ["5", "6", "7"]).collect()
+    assert sorted((r["doc_id"], r["v"]) for r in got) == [(5, "v5"), (6, "v6"), (7, "v7")]
