@@ -26,7 +26,10 @@ is QueryService.retrieveContext (vector ∥ BM25 → RRF → rerank gates).
 
 Every write commits through the snapshot-atomic manifest protocol
 (sources/tables), and the facade adds CROSS-TABLE snapshot isolation on
-top: after a batch's four table commits, ``ingest`` publishes one
+top.  An engine mutation (``ingest``, ``delete_transcript``,
+``delete_where``, ``optimize``) runs its four table commits
+concurrently, one thread per table (``SragEngine._each_table``), and
+only after all of them have finished publishes one
 ENGINE manifest (``root/_engine``) pinning the (transcripts, chunks,
 embeddings, metrics) version quadruple, and every reader
 (``transcripts()``, ``chunks()``, ``query()``, ...) resolves tables
@@ -36,9 +39,10 @@ the new state becomes visible atomically at the engine-manifest
 publish.  This is STRONGER than the reference, whose delete-then-index
 against OpenSearch/Qdrant exposes a window in which chunks are deleted
 but embeddings not yet indexed (IndexingPipeline.scala:93-103); the
-write-side crash contract is unchanged — a crash between table commits
-leaves readers on the old quadruple until the ingest is replayed,
-which converges (J7) and publishes.  Engine manifests are ordinary
+write-side crash contract is unchanged by the overlap — a crash or a
+failed table commit, whichever others have landed, leaves readers on
+the old quadruple until the ingest is replayed, which converges (J7)
+and publishes.  Engine manifests are ordinary
 manifest versions, so TIME TRAVEL works across whole-engine snapshots
 (pass ``version=`` to the table accessors).
 """
@@ -47,13 +51,21 @@ from __future__ import annotations
 
 import json
 import uuid
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from srag_spark.functions.planning import held, persist
-from srag_spark.operators.parse import extract_documents, extraction_metrics
+from srag_spark.operators.parse import (
+    DEFAULT_SALT_THRESHOLD,
+    extract_documents,
+    extraction_metrics,
+)
 from srag_spark.operators.retrieval import listing, retrieve_context
 from srag_spark.operators.transcripts import (
     build_transcripts,
@@ -141,6 +153,30 @@ class SragEngine:
 
         _with_commit_retries(once)
 
+    def _each_table(self, commit: Callable[[str, str], object]) -> dict:
+        """Run ``commit(name, path)`` for the four tables concurrently, one
+        thread per table, and return ``{name: result}`` once EVERY commit
+        has finished.  A mutation's per-table commits are independent (each
+        is its own compare-and-publish on its own table), and nothing they
+        land is visible before the caller's engine publish, so overlapping
+        them changes no reader's view and no crash outcome.
+
+        Each thread inherits the caller's local properties (job group,
+        job description, job tags) and session tags.  The target is wrapped
+        once per thread: ``inheritable_thread_target`` clones the caller's
+        properties when called, and every thread one wrapper starts would
+        share (and mutate) that one clone.  A failed commit does not stop
+        the others; the call waits for all of them, then raises the first
+        failure in table order."""
+        with ThreadPoolExecutor(max_workers=len(self._table_paths)) as pool:
+            futures = {
+                name: pool.submit(
+                    inheritable_thread_target(self.spark)(commit), name, path
+                )
+                for name, path in self._table_paths.items()
+            }
+        return {name: f.result() for name, f in futures.items()}
+
     def snapshot_versions(self) -> list[int]:
         """Engine snapshot versions available for time travel (oldest
         surviving → latest); [] before the first publish."""
@@ -222,6 +258,15 @@ class SragEngine:
         ingestion worker for a batch of interleaved documents
         (DOCUMENTS_SCHEMA).  Returns row counts per table.
 
+        The four table merges run concurrently (:meth:`_each_table`) over
+        the shared persisted extraction; the engine-manifest publish after
+        all four is still the only point where readers see the batch, and
+        a failed merge is re-raised only once the other three have
+        finished, with nothing published.  A batch whose largest doc is
+        within ``DEFAULT_SALT_THRESHOLD`` spans is extracted by the
+        whole-doc kernel alone; one holding a mega doc takes the salted
+        path, as :func:`extract_documents` plans it.
+
         ``docs`` may carry two OPTIONAL columns beyond the input_hint
         shape: ``metadata map<string,string>`` (per-doc) and ``language
         string`` — the reference's ingest request fields
@@ -249,13 +294,24 @@ class SragEngine:
         so readers stay on the previous quadruple.
         """
         with held() as ledger:
-            # the input batch feeds several subplans (both extraction
-            # branches, the metadata/language joins, audio timing, the
-            # replaced doc ids) — persist it so an expensive source (a JSONL
-            # parse, a remote scan) is read once per ingest
+            # the input batch feeds several subplans (the extraction, the
+            # metadata/language joins, audio timing, the replaced doc ids)
+            # — persist it so an expensive source (a JSONL parse, a remote
+            # scan) is read once per ingest
             docs = persist(docs, ledger, StorageLevel.MEMORY_AND_DISK)
+            # one job over the persisted batch: the returned document count
+            # and the largest doc, which decides the routing — a batch with
+            # no mega doc runs only the whole-doc kernel, not the salted
+            # path's Python stages over zero rows
+            batch = docs.agg(
+                F.count_distinct("doc_id").alias("documents"),
+                F.max(F.size("spans")).alias("max_spans"),
+            ).first()
+            salted = (batch["max_spans"] or 0) > DEFAULT_SALT_THRESHOLD
             extracted = extract_documents(
-                docs.select("doc_id", "spans"), doc_counter=doc_counter
+                docs.select("doc_id", "spans"),
+                salt_threshold=DEFAULT_SALT_THRESHOLD if salted else None,
+                doc_counter=doc_counter,
             )
             # the Python parse kernel is the most expensive stage and its
             # output feeds transcripts AND chunks AND embeddings — persist it
@@ -291,33 +347,39 @@ class SragEngine:
             embeddings = build_embeddings(chunks, embed_fn=self.embed_fn)
 
             doc_ids = docs.select("doc_id").distinct()
-            upsert_by_key(
-                self.spark, self.transcripts_path, transcripts, ["doc_id"],
-                n_buckets=self.n_buckets,
-            )
-            # replace-entity: a re-ingested doc drops ALL its previous
-            # chunk and embedding rows in the same commit that lands the
-            # new ones, so shrunk docs leave nothing stale
-            for path, rows in (
-                (self.chunks_path, chunks), (self.embeddings_path, embeddings)
-            ):
-                upsert_by_key(
-                    self.spark, path, rows, _CHUNK_KEY,
-                    n_buckets=self.n_buckets, deletes=doc_ids,
-                )
-            # per-doc extraction lineage metrics (north rule; the batch
-            # pipeline records the same per bucket, plans/pipeline.py) —
-            # a thin projection of the already-persisted extraction
-            upsert_by_key(
-                self.spark,
-                self.metrics_path,
-                extraction_metrics(extracted).withColumn(
-                    "ingested_at", F.current_timestamp()
+            # per table: (rows, key, entity deletes, persist the rows)
+            merges = {
+                "transcripts": (transcripts, ["doc_id"], None, True),
+                # replace-entity: a re-ingested doc drops ALL its previous
+                # chunk and embedding rows in the same commit that lands
+                # the new ones, so shrunk docs leave nothing stale
+                "chunks": (chunks, _CHUNK_KEY, doc_ids, True),
+                "embeddings": (embeddings, _CHUNK_KEY, doc_ids, True),
+                # per-doc extraction lineage metrics (north rule; the batch
+                # pipeline records the same per bucket, plans/pipeline.py)
+                # — a cheap projection of the persisted extraction, so its
+                # rows are not persisted again
+                "metrics": (
+                    extraction_metrics(extracted).withColumn(
+                        "ingested_at", F.current_timestamp()
+                    ),
+                    ["doc_id"],
+                    None,
+                    False,
                 ),
-                ["doc_id"],
-                n_buckets=self.n_buckets,
-                persist_incoming=False,  # cheap projection of a cached frame
-            )
+            }
+
+            def merge(name: str, path: str) -> None:
+                rows, key, deletes, persist_rows = merges[name]
+                upsert_by_key(
+                    self.spark, path, rows, key, n_buckets=self.n_buckets,
+                    persist_incoming=persist_rows, deletes=deletes,
+                )
+
+            # the four merges overlap; concurrent readers of the persisted
+            # ``extracted`` and ``chunks`` wait on Spark's block locks
+            # instead of recomputing them
+            self._each_table(merge)
             # atomic visibility point: readers switch from the old to the
             # new four-table state HERE, never between the commits above
             # (skipped by stage_ingest, whose publish IS this publish)
@@ -325,7 +387,7 @@ class SragEngine:
                 self._publish_engine_snapshot()
             n_chunks = chunks.count()
             return {
-                "documents": doc_ids.count(),
+                "documents": batch["documents"],
                 "chunks": n_chunks,
                 "embeddings": n_chunks,
             }
@@ -594,10 +656,17 @@ class SragEngine:
 
     def delete_transcript(self, doc_id: str) -> None:
         """Delete a document everywhere (S10): transcript row plus all its
-        chunks and embeddings."""
-        keys = self.spark.createDataFrame([(doc_id,)], "doc_id string")
-        for path in self._table_paths.values():
-            delete_by_key(self.spark, path, keys, ["doc_id"])  # no table: no-op
+        chunks, embeddings and metrics.  The four keyed deletes run
+        concurrently (:meth:`_each_table`); the engine publish after them
+        is still the only point where readers see the removal."""
+        # an Arrow-backed local relation: each delete reads the key off
+        # the driver, not by rescanning a pickled one-row RDD
+        keys = self.spark.createDataFrame(
+            pa.table({"doc_id": pa.array([doc_id], pa.string())})
+        )
+        self._each_table(  # a delete on an absent table commits nothing
+            lambda _, path: delete_by_key(self.spark, path, keys, ["doc_id"])
+        )
         self._publish_engine_snapshot()
 
     def delete_where(self, condition) -> int:
@@ -608,8 +677,9 @@ class SragEngine:
         :meth:`delete_transcript`, and one engine snapshot publishes the
         whole removal atomically.  Returns the number of documents
         deleted.  The doc_id set is computed FIRST and reused for every
-        table (bucket-pruned keyed deletes), so the predicate is
-        evaluated exactly once.
+        table (bucket-pruned keyed deletes, run concurrently by
+        :meth:`_each_table`), so the predicate is evaluated exactly once;
+        the publish after all four is the only visibility point.
 
         The predicate is evaluated against the transcripts table's
         LATEST snapshot — the same state the keyed deletes operate on —
@@ -636,8 +706,9 @@ class SragEngine:
             n = keys.count()
             if n == 0:
                 return 0
-            for path in self._table_paths.values():
-                delete_by_key(self.spark, path, keys, ["doc_id"])
+            self._each_table(
+                lambda _, path: delete_by_key(self.spark, path, keys, ["doc_id"])
+            )
             self._publish_engine_snapshot()
             return n
 
@@ -746,7 +817,8 @@ class SragEngine:
     ) -> dict:
         """Compact all four tables (one file per bucket; optionally
         re-bucket to ``n_buckets`` — tables.rewrite_table's layout
-        evolution) and publish a fresh engine snapshot pinning the
+        evolution), concurrently (:meth:`_each_table`), and once every
+        rewrite has finished publish a fresh engine snapshot pinning the
         compacted versions.  ``sort_by`` maps table name → in-bucket
         sort columns (tables.rewrite_table's sort order + zone-map
         stats) for the tables that benefit, e.g. ``{"metrics":
@@ -769,16 +841,18 @@ class SragEngine:
         pipeline re-derives bucket pruning from the table manifest)."""
         from srag_spark.sources.tables import rewrite_table
 
-        stats = {}
-        for name, path in self._table_paths.items():
-            if table_exists(self.spark, path):
-                stats[name] = rewrite_table(
-                    self.spark, path, n_buckets=n_buckets,
-                    sort_by=(sort_by or {}).get(name),
-                    zorder_by=(zorder_by or {}).get(name),
-                )
+        def rewrite(name: str, path: str) -> dict | None:
+            if not table_exists(self.spark, path):
+                return None
+            return rewrite_table(
+                self.spark, path, n_buckets=n_buckets,
+                sort_by=(sort_by or {}).get(name),
+                zorder_by=(zorder_by or {}).get(name),
+            )
+
+        stats = self._each_table(rewrite)
         self._publish_engine_snapshot()
-        return stats
+        return {name: s for name, s in stats.items() if s is not None}
 
     def rollback(self, snapshot: int) -> int:
         """Restore a previous ENGINE snapshot as the new latest (Iceberg

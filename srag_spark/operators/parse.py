@@ -32,7 +32,8 @@ span bytes.  The operator caches nothing itself (pinning a small scan
 measured no gain at local[4]); a caller whose input is expensive to
 re-read persists it in its own ledger, as ``SragEngine.ingest`` does,
 and ExtractionPipeline waves keep each re-scan bounded to one wave's
-buckets.
+buckets.  A caller that knows its input holds no mega doc passes
+``salt_threshold=None`` and gets the one-branch plan.
 """
 
 from __future__ import annotations
@@ -401,7 +402,7 @@ def _counting(kernel, counter):
 
 def extract_documents(
     docs: DataFrame,
-    salt_threshold: int = DEFAULT_SALT_THRESHOLD,
+    salt_threshold: int | None = DEFAULT_SALT_THRESHOLD,
     slice_target: int = DEFAULT_SLICE_TARGET,
     num_partitions: int | None = None,
     doc_counter=None,
@@ -420,6 +421,12 @@ def extract_documents(
     The salted path touches only the skewed tail, so at 100 TB the extra
     shuffle moves a tiny fraction of rows while removing the straggler
     tasks that would otherwise dominate the stage.
+
+    ``salt_threshold=None``: no doc takes the salted path — the plan is
+    the whole-doc ``mapInArrow`` alone.  A caller that knows its batch
+    holds no mega doc (``SragEngine.ingest`` reads the largest span count
+    off its persisted batch) passes it and skips the salted stages'
+    fixed Python cost on zero rows.
     """
     parse_kernel = _parse_whole_arrow
     slicer_kernel = _make_slicer_arrow(slice_target)
@@ -430,25 +437,32 @@ def extract_documents(
         parse_kernel = _counting(parse_kernel, doc_counter)
         slicer_kernel = _counting(slicer_kernel, doc_counter)
     small, big = _route_by_size(docs, salt_threshold, slicer_kernel, num_partitions)
-    return small.mapInArrow(parse_kernel, schema=EXTRACTED_SCHEMA).unionByName(big)
+    out = small.mapInArrow(parse_kernel, schema=EXTRACTED_SCHEMA)
+    return out if big is None else out.unionByName(big)
 
 
 def _route_by_size(
-    docs: DataFrame, salt_threshold: int, slicer_kernel, num_partitions: int | None
-) -> tuple[DataFrame, DataFrame]:
+    docs: DataFrame,
+    salt_threshold: int | None,
+    slicer_kernel,
+    num_partitions: int | None,
+) -> tuple[DataFrame, DataFrame | None]:
     """Split the input by per-doc span count: ``(small, big)`` — the
     normal docs as ``(doc_id, spans)`` on the scan's own partitioning
     (or a doc_id-hash repartition with ``num_partitions``), ready for a
     whole-doc kernel, and the mega docs already parsed through the
     salted path (``slicer_kernel`` → ``repartition(doc_id, slice_id)``
     → per-slice parse → ``groupBy(doc_id).applyInPandas`` reassembly)
-    as EXTRACTED_SCHEMA rows."""
+    as EXTRACTED_SCHEMA rows.  ``salt_threshold=None``: every doc is
+    small and ``big`` is None."""
     shuffle_parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     docs = docs.select("doc_id", "spans")
     n = F.size("spans")
-    small = docs.filter(n <= salt_threshold)
+    small = docs if salt_threshold is None else docs.filter(n <= salt_threshold)
     if num_partitions:
         small = small.repartition(num_partitions, "doc_id")
+    if salt_threshold is None:
+        return small, None
     big = (
         docs.filter(n > salt_threshold)
         .mapInArrow(slicer_kernel, schema=_SLICE_SCHEMA)

@@ -3,6 +3,9 @@
 
 from __future__ import annotations
 
+import threading
+
+import pytest
 from pyspark.sql import functions as F
 
 from srag_spark.api import SragEngine
@@ -322,6 +325,187 @@ def test_cross_table_snapshot_isolation_between_commits(spark, tmp_path, monkeyp
     assert eng.transcripts().count() == 4
     assert eng.chunks().count() == eng.embeddings().count()
     assert eng.metrics().count() == 4
+
+
+def _held_at_barrier(real, barrier, seen=None):
+    """A spy that holds each call at ``barrier`` before the real call:
+    calls made one after another break it (``BrokenBarrierError``).
+    ``seen`` collects, per call, the job group and session tags the
+    calling thread runs under."""
+
+    def spy(spark_, *a, **k):
+        if seen is not None:
+            seen.append(
+                (
+                    spark_.sparkContext.getLocalProperty("spark.jobGroup.id"),
+                    spark_.getTags(),
+                )
+            )
+        barrier.wait()
+        return real(spark_, *a, **k)
+
+    return spy
+
+
+def test_ingest_merges_overlap_under_the_callers_job_group(
+    spark, tmp_path, monkeypatch, jobs_run_by
+):
+    """The four merges of one ingest run at the same time, and every
+    Spark job the ingest starts, from whichever thread, carries the
+    caller's job group and session tags."""
+    import srag_spark.api as api_mod
+
+    eng = SragEngine(spark, str(tmp_path / "kb"), n_buckets=4)
+    seen = []
+    monkeypatch.setattr(
+        api_mod, "upsert_by_key",
+        _held_at_barrier(api_mod.upsert_by_key, threading.Barrier(4, timeout=30), seen),
+    )
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    spark.addTag("ingest-caller")
+    try:
+        stats, jobs = jobs_run_by(
+            lambda: eng.ingest(_docs(spark, [("a", TEXT_A), ("b", TEXT_B)]))
+        )
+    finally:
+        spark.removeTag("ingest-caller")
+    assert stats["documents"] == 2
+    assert jobs
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    assert len(seen) == 4
+    groups = {group for group, _ in seen}
+    assert len(groups) == 1 and None not in groups, groups
+    assert all("ingest-caller" in tags for _, tags in seen), seen
+    assert eng.transcripts().count() == 2
+
+
+def test_delete_transcript_deletes_overlap(spark, tmp_path, monkeypatch):
+    """The four keyed deletes of ``delete_transcript`` run at the same
+    time, over a key frame that is a local relation (``LocalTableScan``),
+    not a pickled RDD each delete rescans."""
+    import srag_spark.api as api_mod
+
+    eng = SragEngine(spark, str(tmp_path / "kb"), n_buckets=4)
+    eng.ingest(_docs(spark, [("a", TEXT_A), ("b", TEXT_B)]))
+    real = api_mod.delete_by_key
+    plans = []
+
+    def record(spark_, path, keys, *a, **k):
+        plans.append(keys._jdf.queryExecution().executedPlan().toString())
+        return real(spark_, path, keys, *a, **k)
+
+    monkeypatch.setattr(
+        api_mod, "delete_by_key",
+        _held_at_barrier(record, threading.Barrier(4, timeout=30)),
+    )
+    eng.delete_transcript("a")
+    monkeypatch.setattr(api_mod, "delete_by_key", real)
+    assert len(plans) == 4
+    for plan in plans:
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    for table in (eng.transcripts(), eng.chunks(), eng.embeddings(), eng.metrics()):
+        assert {r["doc_id"] for r in table.select("doc_id").collect()} == {"b"}
+
+
+def _engine_state(eng) -> dict:
+    """Every table's rows, timestamps left out, as sorted reprs."""
+    out = {}
+    for name in ("transcripts", "chunks", "embeddings", "metrics"):
+        df = getattr(eng, name)()
+        cols = [f.name for f in df.schema.fields if f.dataType.typeName() != "timestamp"]
+        out[name] = sorted(repr(r) for r in df.select(*cols).collect())
+    return out
+
+
+def test_failed_merge_waits_for_the_others_and_publishes_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """When one table's merge fails, ingest re-raises it only after the
+    other three merges have finished; nothing is published, so every
+    reader stays on the old state, and replaying the ingest converges to
+    the state a clean ingest leaves."""
+    import srag_spark.api as api_mod
+
+    base = _docs(spark, [("a", TEXT_A), ("b", TEXT_B)])
+    batch = _docs(spark, [("a", TEXT_B), ("c", TEXT_A * 3)])
+    eng = SragEngine(spark, str(tmp_path / "kb"), n_buckets=4)
+    eng.ingest(base)
+    versions = eng.snapshot_versions()
+    before = _engine_state(eng)
+    real = api_mod.upsert_by_key
+    finished = []
+
+    def spy(spark_, path, *a, **k):
+        if path == eng.embeddings_path:
+            raise RuntimeError("embeddings merge failed")
+        real(spark_, path, *a, **k)
+        finished.append(path)
+
+    monkeypatch.setattr(api_mod, "upsert_by_key", spy)
+    with pytest.raises(RuntimeError, match="embeddings merge failed"):
+        eng.ingest(batch)
+    monkeypatch.setattr(api_mod, "upsert_by_key", real)
+    assert sorted(finished) == sorted(
+        [eng.transcripts_path, eng.chunks_path, eng.metrics_path]
+    )
+    assert eng.snapshot_versions() == versions
+    assert _engine_state(eng) == before
+    assert eng.get_transcript("c").count() == 0
+
+    eng.ingest(batch)  # replay with the real merges
+    clean = SragEngine(spark, str(tmp_path / "clean"), n_buckets=4)
+    clean.ingest(base)
+    clean.ingest(batch)
+    assert _engine_state(eng) == _engine_state(clean)
+
+
+def _plan_nodes(plan) -> list[str]:
+    kids = plan.children()
+    return [plan.nodeName()] + [
+        n for i in range(kids.size()) for n in _plan_nodes(kids.apply(i))
+    ]
+
+
+def test_ingest_routes_on_the_batchs_largest_doc(spark, tmp_path, monkeypatch):
+    """A batch with no mega doc is extracted by the whole-doc kernel
+    alone (one ``MapInArrow``, no salted stages); a batch holding a
+    5,000-span doc takes the salted path and its transcript words equal
+    the golden extractor's."""
+    import srag_spark.api as api_mod
+    from srag_spark.golden import extract_document
+
+    real = api_mod.extract_documents
+    planned = []
+
+    def spy(*a, **k):
+        out = real(*a, **k)
+        planned.append(_plan_nodes(out._jdf.queryExecution().analyzed()))
+        return out
+
+    monkeypatch.setattr(api_mod, "extract_documents", spy)
+    eng = SragEngine(spark, str(tmp_path / "kb"), n_buckets=4)
+    eng.ingest(_docs(spark, [("a", TEXT_A), ("b", TEXT_B)]))
+    nodes = planned.pop()
+    assert nodes.count("MapInArrow") == 1, nodes
+    assert "FlatMapGroupsInPandas" not in nodes, nodes
+
+    spans = [
+        {"kind": "text", "text": f"word{i} and more", "media_ref": None, "offset": i}
+        for i in range(5000)
+    ]
+    docs = spark.createDataFrame(
+        [("mega", spans), ("small", _docs(spark, [("x", TEXT_B)]).first()["spans"])],
+        schema=DOCUMENTS_SCHEMA,
+    )
+    eng.ingest(docs)
+    nodes = planned.pop()
+    assert nodes.count("MapInArrow") == 3, nodes
+    assert "FlatMapGroupsInPandas" in nodes, nodes
+    want = [t for _, t, _ in extract_document(spans)[0] if t is not None]
+    words = eng.get_transcript("mega").collect()[0]["words"]
+    assert [w["text"] for w in words] == want
+    assert eng.get_transcript("small").count() == 1
 
 
 def test_lookup_runs_at_most_two_jobs(spark, tmp_path, jobs_run_by):
