@@ -290,91 +290,19 @@ def q_q2_vector_topk(spark, sf_dir):
 
 
 def q_q3_bm25_topk(spark, sf_dir):
-    """Q3: in-engine BM25 top-k (OpenSearchAdapter.scala:196-262).
-    r6 evaluation shape (mirrors retrieval.bm25_topk): tf comes from
-    one alternation-regex pass per doc (a hit ≡ a token equal to a
-    query term, so tf/df/dl are value-identical to the exploded-token
-    form — the oracle still computes the exploded form) and the light
-    (doc, dl, hits) relation is persisted for its two consumers; the
-    corpus-tokens-sized explode and its groupBy shuffle are gone."""
-    from srag_spark.operators.retrieval import tokenize_lex
+    """Q3: in-engine BM25 top-k (OpenSearchAdapter.scala:196-262),
+    THROUGH the engine operator (retrieval.bm25_topk) over the documents
+    as one-segment chunks.  tf comes from one alternation-regex pass per
+    doc (a hit ≡ a token equal to a query term, so tf/df/dl are
+    value-identical to the exploded-token form — the oracle still
+    computes the exploded form)."""
+    from srag_spark.operators.retrieval import bm25_topk
 
-    k1, b = 1.2, 0.75
-    terms = sorted(set(tokenize_lex(BM25_QUERY)))
-    alt = "|".join(terms)
-    hit_pat = f"(?<![a-z0-9])({alt})(?![a-z0-9])"
-    # bench.py's clearCache() between queries releases this persist
-    docs = (
-        _t(spark, sf_dir, "documents").select(
-            "doc_id",
-            F.expr(
-                "CAST(regexp_count(lower(text), '[a-z0-9]+') AS INT)"
-            ).alias("dl"),
-            F.expr(
-                f"regexp_extract_all(lower(text), '{hit_pat}', 1)"
-            ).alias("_hits"),
-        )
-        .persist()
+    chunks = _t(spark, sf_dir, "documents").select(
+        "doc_id", F.lit(0).alias("segment_index"), "text"
     )
-    stats = docs.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-
-    def _count_of(t_):
-        return lambda h: h == F.lit(t_)
-
-    tf = (
-        docs.select(
-            "doc_id",
-            "dl",
-            F.explode(
-                F.filter(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(t_).alias("term"),
-                                F.size(
-                                    F.filter(F.col("_hits"), _count_of(t_))
-                                ).cast("double").alias("tf"),
-                            )
-                            for t_ in terms
-                        ]
-                    ),
-                    lambda s: s["tf"] > 0,
-                )
-            ).alias("_tc"),
-        )
-        .select("doc_id", "dl", F.col("_tc.term").alias("term"), F.col("_tc.tf").alias("tf"))
-    )
-    idf = (
-        tf.groupBy("term")
-        .agg(F.count(F.lit(1)).cast("double").alias("df"))
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "term",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-            ).alias("idf"),
-            "avgdl",
-        )
-    )
-    scored = (
-        tf.join(F.broadcast(idf), "term")
-        .withColumn(
-            "term_score",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1.0))
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("term_score").alias("score"))
-    )
-    return (
-        scored.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(20)
-        .select("doc_id", F.round("score", 4).alias("score_r"))
+    return bm25_topk(chunks, BM25_QUERY, k=20).select(
+        "doc_id", F.round("score", 4).alias("score_r")
     )
 
 

@@ -52,15 +52,14 @@ from __future__ import annotations
 import json
 import uuid
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.util import inheritable_thread_target
 
-from srag_spark.functions.planning import held, persist
+from srag_spark.functions.planning import held, in_threads, persist
 from srag_spark.operators.parse import (
     DEFAULT_SALT_THRESHOLD,
     extract_documents,
@@ -161,21 +160,13 @@ class SragEngine:
         land is visible before the caller's engine publish, so overlapping
         them changes no reader's view and no crash outcome.
 
-        Each thread inherits the caller's local properties (job group,
-        job description, job tags) and session tags.  The target is wrapped
-        once per thread: ``inheritable_thread_target`` clones the caller's
-        properties when called, and every thread one wrapper starts would
-        share (and mutate) that one clone.  A failed commit does not stop
-        the others; the call waits for all of them, then raises the first
-        failure in table order."""
-        with ThreadPoolExecutor(max_workers=len(self._table_paths)) as pool:
-            futures = {
-                name: pool.submit(
-                    inheritable_thread_target(self.spark)(commit), name, path
-                )
-                for name, path in self._table_paths.items()
-            }
-        return {name: f.result() for name, f in futures.items()}
+        Each thread keeps the caller's job group, description and tags
+        (:func:`~srag_spark.functions.planning.in_threads`).  A failed
+        commit does not stop the others; the call waits for all of them,
+        then raises the first failure in table order."""
+        paths = self._table_paths
+        calls = [partial(commit, name, path) for name, path in paths.items()]
+        return dict(zip(paths, in_threads(self.spark, calls)))
 
     def snapshot_versions(self) -> list[int]:
         """Engine snapshot versions available for time travel (oldest

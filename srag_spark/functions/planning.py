@@ -19,6 +19,10 @@ The ``persisted=`` contract, the same on every operator that takes it
   pins every output row executor-side, so it suits tests and
   driver-scale inputs; at corpus scale pass a list.
 
+Concurrent jobs.  :func:`in_threads` is the one way a caller submits
+independent Spark jobs from threads: each thread keeps the caller's job
+group, description and tags.
+
 Plan hygiene.  :func:`bind_col`, :func:`no_pushdown`, :func:`nondet_col`
 and :func:`spread_input` are the expression and partitioning devices
 the operators share (evaluation-count, pushdown and input-skew fixes
@@ -29,13 +33,15 @@ from __future__ import annotations
 
 import inspect
 import logging
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator, Sequence
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from functools import wraps
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 log = logging.getLogger(__name__)
 
@@ -92,6 +98,25 @@ def owns_ledger(op):
             return out.localCheckpoint(eager=True) if ledger else out
 
     return run
+
+
+# ---------------------------------------------------------------------------
+# concurrent jobs
+# ---------------------------------------------------------------------------
+def in_threads(spark: SparkSession, calls: Sequence[Callable[[], object]]) -> list:
+    """Run each of ``calls`` on its own thread and return their results in
+    order once EVERY call has finished.
+
+    Each thread inherits the caller's local properties (job group, job
+    description, job tags) and session tags, so the jobs it starts count
+    against the caller's group.  Each call is wrapped on its own:
+    ``inheritable_thread_target`` clones the caller's properties when
+    called, and every thread one wrapper starts would share (and mutate)
+    that one clone.  A failed call does not stop the others; the first
+    failure in ``calls`` order is raised after all of them end."""
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(c)) for c in calls]
+    return [f.result() for f in futures]
 
 
 # ---------------------------------------------------------------------------

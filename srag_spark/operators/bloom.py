@@ -42,6 +42,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from srag_spark.sources.tables import _key_bucket
+
+
 def _pow2():
     """2^b for b in 0..63 as a literal long array (bit 63 wraps to the
     sign bit — the Python literal -(2**63) is exactly that bit pattern).
@@ -207,7 +210,7 @@ def table_bucket_col(key_col, n_buckets: int):
     ``read_table(buckets=...)`` can prune to; use
     :func:`md5_bucket_col` only for the oracle-reproducible standalone
     form."""
-    return F.pmod(F.xxhash64(key_col), F.lit(n_buckets)).cast("int")
+    return _key_bucket(key_col, n_buckets)
 
 
 def bloom_from_index(

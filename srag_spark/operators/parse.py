@@ -7,16 +7,18 @@ media-anchor pass-through).  This module supplies the *distributed
 machinery* around it, which is what must be engineered explicitly for
 100 TB (SURVEY.md §4.2):
 
-* **mapInArrow hot path**: span arrays cross the JVM↔Python boundary as
-  Arrow ``list<struct>`` buffers and are consumed column-wise (child
-  arrays bulk-converted once per batch) — no per-span Python dicts, no
-  pandas object columns.  Measured ~3× faster than the naive
-  ``mapInPandas``-with-dicts formulation at local[8];
+* **one mapInArrow kernel** (``_parse_kernel``): span arrays cross the
+  JVM↔Python boundary as Arrow ``list<struct>`` buffers and are consumed
+  column-wise (child arrays bulk-converted once per batch) — no per-span
+  Python dicts, no pandas object columns.  Measured ~3× faster than the
+  naive ``mapInPandas``-with-dicts formulation at local[8].  Every parse
+  runs this one loop: whole docs into the nested EXTRACTED_SCHEMA
+  (``extract_documents``), whole docs straight into flat span rows
+  (``extract_documents_flat``, the streaming sinks), and salted slices
+  (``assume_sorted=True``, ``slice_id`` passed through);
 * **no forced input shuffle**: the parse is embarrassingly parallel, so
   the operator runs on whatever partitioning the scan provides (Parquet/
-  Iceberg split planning already balances bytes).  ``num_partitions``
-  opts into an explicit doc_id-hash repartition when the input is
-  pathologically few-filed;
+  Iceberg split planning already balances bytes);
 * **salting for skewed mega-documents**: docs whose span count exceeds
   ``salt_threshold`` are split into contiguous span slices at audio-run-
   safe boundaries, hash-distributed on ``(doc_id, slice_id)``, parsed
@@ -122,12 +124,13 @@ def _doc_order(offsets: list) -> list[int]:
     )
 
 
-def _sort_doc_spans(spans: list[dict]) -> list[dict]:
+def sort_doc_spans(spans: list[dict]) -> list[dict]:
+    """Dict-view of the document order the slicer applies (tests / spec)."""
     return [spans[i] for i in _doc_order([s.get("offset") for s in spans])]
 
 
 # ---------------------------------------------------------------------------
-# Arrow-native parse kernels
+# Arrow-native parse kernel
 # ---------------------------------------------------------------------------
 def _span_cols(batch):
     """Bulk-extract one Arrow batch's span child arrays → Python lists.
@@ -137,7 +140,7 @@ def _span_cols(batch):
     so the (few) distinct kind strings are shared references instead of
     one fresh Python string per span — the kernel is memory-bandwidth
     bound and this column is the most repetitive."""
-    spans = batch.column(batch.schema.get_field_index("spans"))
+    spans = batch.column("spans")
     if spans.null_count:
         raise ValueError(
             "spans column contains null list entries; a null spans array "
@@ -169,104 +172,79 @@ def _span_cols(batch):
     )
 
 
-def _extracted_batch(pa, doc_ids, parsed):
-    """Assemble an EXTRACTED_SCHEMA Arrow batch from per-doc parse results
-    [(out_kinds, out_texts, out_medias, kept, dropped, fails), ...]."""
-    lo = [0]
-    fk: list = []
-    ft: list = []
-    fm: list = []
-    fs: list = []
-    kept = []
-    dropped = []
-    fails = []
-    for ok, ot, om, k, d, f in parsed:
-        fk.extend(ok)
-        ft.extend(ot)
-        fm.extend(om)
-        fs.extend(range(len(ok)))
-        lo.append(len(fk))
-        kept.append(k)
-        dropped.append(d)
-        fails.append(f)
-    struct = pa.StructArray.from_arrays(
-        [
-            pa.array(fk, pa.string()),
-            pa.array(ft, pa.string()),
-            pa.array(fm, pa.string()),
-            pa.array(fs, pa.int32()),
-        ],
-        ["kind", "text", "media_ref", "seq"],
-    )
-    spans_arr = pa.ListArray.from_arrays(pa.array(lo, pa.int32()), struct)
-    return pa.RecordBatch.from_arrays(
-        [
-            doc_ids,
-            spans_arr,
-            pa.array(kept, pa.int64()),
-            pa.array(dropped, pa.int64()),
-            pa.array(fails, pa.int64()),
-        ],
-        ["doc_id", "spans", "blocks_kept", "blocks_dropped", "parse_failures"],
-    )
+def _parse_kernel(schema: StructType, assume_sorted: bool = False):
+    """The one Arrow parse loop: ``extract_document_cols`` once per doc,
+    emitting batches of ``schema``.
 
+    The loop collects the output kind/text/media lists plus per-doc span
+    counts and metrics; ``seq`` is vectorized numpy.  A flat ``schema``
+    (no ``spans`` field — EXTRACTED_FLAT_SCHEMA) gets one row per span,
+    its doc_id repeated by a C-level ``take``; a nested one gets the
+    ``spans`` ListArray and the metric columns.  Any other field
+    (``doc_id``, a salted slice's ``slice_id``) passes through from the
+    input batch.  ``assume_sorted=True`` is the salted slice parse: the
+    slicer already applied the global (offset | index) document order,
+    and a slice-local re-sort is not idempotent when offsets contain
+    nulls."""
+    names = schema.fieldNames()
+    flat = "spans" not in names
 
-def _parse_whole_arrow(batches: Iterator) -> Iterator:
-    import pyarrow as pa  # noqa: PLC0415 — executor-side import
+    def parse(batches: Iterator) -> Iterator:
+        import numpy as np  # noqa: PLC0415 — executor-side import
+        import pyarrow as pa  # noqa: PLC0415
 
-    for batch in batches:
-        offs, kinds, texts, medias, offsets = _span_cols(batch)
-        parsed = []
-        for i in range(batch.num_rows):
-            a, b = offs[i], offs[i + 1]
-            parsed.append(
-                extract_document_cols(
-                    kinds[a:b], texts[a:b], medias[a:b], offsets[a:b]
+        for batch in batches:
+            offs, kinds, texts, medias, offsets = _span_cols(batch)
+            n = batch.num_rows
+            fk: list = []
+            ft: list = []
+            fm: list = []
+            lens = np.empty(n, dtype=np.int64)
+            kept = np.empty(n, dtype=np.int64)
+            dropped = np.empty(n, dtype=np.int64)
+            fails = np.empty(n, dtype=np.int64)
+            for i in range(n):
+                a, b = offs[i], offs[i + 1]
+                ok, ot, om, kept[i], dropped[i], fails[i] = extract_document_cols(
+                    kinds[a:b], texts[a:b], medias[a:b], offsets[a:b],
+                    assume_sorted=assume_sorted,
                 )
+                fk.extend(ok)
+                ft.extend(ot)
+                fm.extend(om)
+                lens[i] = len(ok)
+            ends = np.cumsum(lens)
+            seq = pa.array(
+                (np.arange(len(fk)) - np.repeat(ends - lens, lens)).astype(np.int32)
             )
-        yield _extracted_batch(
-            pa, batch.column(batch.schema.get_field_index("doc_id")), parsed
-        )
-
-
-def _parse_whole_flat_arrow(batches: Iterator) -> Iterator:
-    """Parse + flatten in one Arrow pass: emits EXTRACTED_FLAT_SCHEMA rows
-    directly, skipping the nested ListArray build AND the JVM-side
-    explode.  doc_id repetition is a C-level ``take`` (no Python strings)
-    and ``seq`` is vectorized numpy — the Python work is exactly the
-    parse kernel."""
-    import numpy as np  # noqa: PLC0415 — executor-side import
-    import pyarrow as pa  # noqa: PLC0415
-
-    for batch in batches:
-        offs, kinds, texts, medias, offsets = _span_cols(batch)
-        doc_ids = batch.column(batch.schema.get_field_index("doc_id"))
-        fk: list = []
-        ft: list = []
-        fm: list = []
-        lens = np.empty(batch.num_rows, dtype=np.int64)
-        for i in range(batch.num_rows):
-            a, b = offs[i], offs[i + 1]
-            ok, ot, om, _k, _d, _f = extract_document_cols(
-                kinds[a:b], texts[a:b], medias[a:b], offsets[a:b]
+            kind, text, media = (pa.array(c, pa.string()) for c in (fk, ft, fm))
+            if flat:
+                cols = {
+                    "doc_id": batch.column("doc_id").take(
+                        pa.array(np.repeat(np.arange(n), lens))
+                    ),
+                    "seq": seq,
+                    "kind": kind,
+                    "text": text,
+                    "media_ref": media,
+                }
+            else:
+                cols = {
+                    "spans": pa.ListArray.from_arrays(
+                        pa.array(np.concatenate([[0], ends]), pa.int32()),
+                        pa.StructArray.from_arrays(
+                            [kind, text, media, seq], ["kind", "text", "media_ref", "seq"]
+                        ),
+                    ),
+                    "blocks_kept": pa.array(kept),
+                    "blocks_dropped": pa.array(dropped),
+                    "parse_failures": pa.array(fails),
+                }
+            yield pa.RecordBatch.from_arrays(
+                [cols[c] if c in cols else batch.column(c) for c in names], names
             )
-            fk.extend(ok)
-            ft.extend(ot)
-            fm.extend(om)
-            lens[i] = len(ok)
-        idx = np.repeat(np.arange(batch.num_rows, dtype=np.int64), lens)
-        starts = np.repeat(np.cumsum(lens) - lens, lens)
-        seq = (np.arange(idx.shape[0], dtype=np.int64) - starts).astype(np.int32)
-        yield pa.RecordBatch.from_arrays(
-            [
-                doc_ids.take(pa.array(idx)),
-                pa.array(seq),
-                pa.array(fk, pa.string()),
-                pa.array(ft, pa.string()),
-                pa.array(fm, pa.string()),
-            ],
-            ["doc_id", "seq", "kind", "text", "media_ref"],
-        )
+
+    return parse
 
 
 def _make_slicer_arrow(target: int):
@@ -275,7 +253,7 @@ def _make_slicer_arrow(target: int):
 
         for batch in batches:
             offs, kinds, texts, medias, offsets = _span_cols(batch)
-            doc_ids = batch.column(batch.schema.get_field_index("doc_id")).to_pylist()
+            doc_ids = batch.column("doc_id").to_pylist()
             o_doc: list = []
             o_slice: list = []
             lo = [0]
@@ -317,35 +295,6 @@ def _make_slicer_arrow(target: int):
             )
 
     return _slice
-
-
-def _parse_slice_arrow(batches: Iterator) -> Iterator:
-    import pyarrow as pa  # noqa: PLC0415
-
-    for batch in batches:
-        offs, kinds, texts, medias, offsets = _span_cols(batch)
-        doc_ids = batch.column(batch.schema.get_field_index("doc_id"))
-        slice_ids = batch.column(batch.schema.get_field_index("slice_id"))
-        parsed = []
-        for i in range(batch.num_rows):
-            a, b = offs[i], offs[i + 1]
-            parsed.append(
-                extract_document_cols(
-                    kinds[a:b],
-                    texts[a:b],
-                    medias[a:b],
-                    offsets[a:b],
-                    # the slicer already applied the global (offset | index)
-                    # document order; a slice-local re-sort is not
-                    # idempotent when offsets contain nulls
-                    assume_sorted=True,
-                )
-            )
-        ext = _extracted_batch(pa, doc_ids, parsed)
-        yield pa.RecordBatch.from_arrays(
-            [ext.column(0), slice_ids, ext.column(1), ext.column(2), ext.column(3), ext.column(4)],
-            ["doc_id", "slice_id", "spans", "blocks_kept", "blocks_dropped", "parse_failures"],
-        )
 
 
 def _reassemble(key, pdf):
@@ -404,7 +353,6 @@ def extract_documents(
     docs: DataFrame,
     salt_threshold: int | None = DEFAULT_SALT_THRESHOLD,
     slice_target: int = DEFAULT_SLICE_TARGET,
-    num_partitions: int | None = None,
     doc_counter=None,
 ) -> DataFrame:
     """Full extraction over an interleaved-docs table → EXTRACTED_SCHEMA.
@@ -412,8 +360,7 @@ def extract_documents(
     Two physical paths chosen by per-doc span count (a cheap native
     ``size()`` — no Python involved in routing):
 
-    * normal docs: ``mapInArrow`` parse on the scan's own partitioning
-      (pass ``num_partitions`` to force a doc_id-hash repartition first);
+    * normal docs: ``mapInArrow`` parse on the scan's own partitioning;
     * mega docs: Arrow slicer → ``repartition(doc_id, slice_id)`` →
       ``mapInArrow`` parse per slice → ``groupBy(doc_id).applyInPandas``
       reassembly (slice-order concat, seq renumber, metric sums).
@@ -428,7 +375,7 @@ def extract_documents(
     off its persisted batch) passes it and skips the salted stages'
     fixed Python cost on zero rows.
     """
-    parse_kernel = _parse_whole_arrow
+    parse_kernel = _parse_kernel(EXTRACTED_SCHEMA)
     slicer_kernel = _make_slicer_arrow(slice_target)
     if doc_counter is not None:
         # each doc enters exactly one of the two kernels (the size()
@@ -436,70 +383,67 @@ def extract_documents(
         # parsed — once per plan execution
         parse_kernel = _counting(parse_kernel, doc_counter)
         slicer_kernel = _counting(slicer_kernel, doc_counter)
-    small, big = _route_by_size(docs, salt_threshold, slicer_kernel, num_partitions)
+    small, big = _route_by_size(docs, salt_threshold, slicer_kernel)
     out = small.mapInArrow(parse_kernel, schema=EXTRACTED_SCHEMA)
     return out if big is None else out.unionByName(big)
 
 
 def _route_by_size(
-    docs: DataFrame,
-    salt_threshold: int | None,
-    slicer_kernel,
-    num_partitions: int | None,
+    docs: DataFrame, salt_threshold: int | None, slicer_kernel
 ) -> tuple[DataFrame, DataFrame | None]:
     """Split the input by per-doc span count: ``(small, big)`` — the
-    normal docs as ``(doc_id, spans)`` on the scan's own partitioning
-    (or a doc_id-hash repartition with ``num_partitions``), ready for a
-    whole-doc kernel, and the mega docs already parsed through the
-    salted path (``slicer_kernel`` → ``repartition(doc_id, slice_id)``
-    → per-slice parse → ``groupBy(doc_id).applyInPandas`` reassembly)
-    as EXTRACTED_SCHEMA rows.  ``salt_threshold=None``: every doc is
-    small and ``big`` is None."""
-    shuffle_parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    normal docs as ``(doc_id, spans)`` on the scan's own partitioning,
+    ready for a whole-doc kernel, and the mega docs already parsed
+    through the salted path (``slicer_kernel`` → ``repartition(doc_id,
+    slice_id)`` → per-slice parse → ``groupBy(doc_id).applyInPandas``
+    reassembly) as EXTRACTED_SCHEMA rows.  ``salt_threshold=None``:
+    every doc is small and ``big`` is None."""
     docs = docs.select("doc_id", "spans")
-    n = F.size("spans")
-    small = docs if salt_threshold is None else docs.filter(n <= salt_threshold)
-    if num_partitions:
-        small = small.repartition(num_partitions, "doc_id")
     if salt_threshold is None:
-        return small, None
+        return docs, None
+    n = F.size("spans")
+    shuffle_parts = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     big = (
         docs.filter(n > salt_threshold)
         .mapInArrow(slicer_kernel, schema=_SLICE_SCHEMA)
-        .repartition(num_partitions or shuffle_parts, "doc_id", "slice_id")
-        .mapInArrow(_parse_slice_arrow, schema=_PARSED_SLICE_SCHEMA)
+        .repartition(shuffle_parts, "doc_id", "slice_id")
+        .mapInArrow(
+            _parse_kernel(_PARSED_SLICE_SCHEMA, assume_sorted=True),
+            schema=_PARSED_SLICE_SCHEMA,
+        )
         .groupBy("doc_id")
         .applyInPandas(_reassemble, schema=EXTRACTED_SCHEMA)
     )
-    return small, big
+    return docs.filter(n <= salt_threshold), big
 
 
 def extract_documents_flat(
     docs: DataFrame,
-    salt_threshold: int = DEFAULT_SALT_THRESHOLD,
+    salt_threshold: int | None = DEFAULT_SALT_THRESHOLD,
     slice_target: int = DEFAULT_SLICE_TARGET,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Extraction emitting flat span rows (EXTRACTED_FLAT_SCHEMA) — the
     hot path for pipelines whose next stage is row-oriented anyway.
 
     Row-wise identical to ``explode_extracted(extract_documents(...))``
-    (pinned by tests), but the dominant small-doc branch parses and
-    flattens in ONE Arrow stage: no nested ListArray assembly in Python,
-    no explode in the JVM.  The skewed mega-doc tail still runs the
-    salted nested path (slice → parse → reassemble) and is exploded
-    natively — it is a tiny row fraction by construction.
+    (pinned by tests), but the dominant small-doc branch runs the parse
+    kernel with the flat schema: one Arrow stage that parses and
+    flattens, no nested ListArray and no explode in the JVM.  The skewed
+    mega-doc tail still runs the salted nested path (slice → parse →
+    reassemble) and is exploded natively — it is a tiny row fraction by
+    construction.  ``salt_threshold=None`` routes every doc through the
+    flat kernel and the plan is that one ``mapInArrow`` — the streaming
+    sinks' shape, where a micro-batch is already bounded.
 
     Drops the per-doc metrics columns (as explode does); use
     ``extract_documents`` + ``extraction_metrics`` when lineage metrics
     are required.
     """
-    small, big = _route_by_size(
-        docs, salt_threshold, _make_slicer_arrow(slice_target), num_partitions
+    small, big = _route_by_size(docs, salt_threshold, _make_slicer_arrow(slice_target))
+    out = small.mapInArrow(
+        _parse_kernel(EXTRACTED_FLAT_SCHEMA), schema=EXTRACTED_FLAT_SCHEMA
     )
-    return small.mapInArrow(
-        _parse_whole_flat_arrow, schema=EXTRACTED_FLAT_SCHEMA
-    ).unionByName(explode_extracted(big))
+    return out if big is None else out.unionByName(explode_extracted(big))
 
 
 def explode_extracted(extracted: DataFrame) -> DataFrame:
@@ -537,5 +481,6 @@ __all__ = [
     "extraction_metrics",
     "slice_spans",
     "slice_bounds",
+    "sort_doc_spans",
     "EXTRACTED_FLAT_SCHEMA",
 ]

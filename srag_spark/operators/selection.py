@@ -33,7 +33,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from srag_spark.functions.planning import held, persist, spread_input
+from srag_spark.functions.planning import held, in_threads, persist, spread_input
 from srag_spark.operators.dedup import words_col
 
 
@@ -110,9 +110,8 @@ def dsir_weights(
     # committed intermediate table, plans.pipeline-style); the scores are
     # checkpointed before it is released.  The target pass is an
     # independent job submitted from a thread so its stages overlap the
-    # raw pass's tail (guide §2.6).
-    from concurrent.futures import ThreadPoolExecutor
-
+    # raw pass's tail (guide §2.6); both threads keep the caller's job
+    # group and tags (in_threads).
     with held() as ledger:
         feats = persist(
             spread_input(docs)
@@ -127,18 +126,18 @@ def dsir_weights(
             .withColumn("bucket", dsir_bucket_col(F.col("feat"), hash_chars)),
             ledger,
         )
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            t_fut = pool.submit(
-                lambda: _bucket_counts(target, text_col, hash_chars).collect()
-            )
-            r_fut = pool.submit(
+        t_rows, r_rows = in_threads(
+            docs.sparkSession,
+            [
+                lambda: _bucket_counts(target, text_col, hash_chars).collect(),
                 lambda: feats.filter(F.col("bucket").isNotNull())
                 .groupBy("bucket")
                 .agg(F.count("*").alias("c"))
-                .collect()
-            )
-            t_counts = {r["bucket"]: r["c"] for r in t_fut.result()}
-            r_counts = {r["bucket"]: r["c"] for r in r_fut.result()}
+                .collect(),
+            ],
+        )
+        t_counts = {r["bucket"]: r["c"] for r in t_rows}
+        r_counts = {r["bucket"]: r["c"] for r in r_rows}
 
         b_space = float(16 ** hash_chars)
         t_denom = float(sum(t_counts.values())) + alpha * b_space

@@ -64,6 +64,7 @@ from srag_spark.schema import (
     STATUS_SUCCESS,
 )
 from srag_spark.sources import fsio
+from srag_spark.sources.tables import _key_bucket
 
 
 def _now() -> _dt.datetime:
@@ -111,7 +112,10 @@ def retry_delay_s(attempt: int) -> float:
 
 
 def bucket_col(n_buckets: int):
-    return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+    """A doc's bucket: the manifest tables' key bucket of ``doc_id``, so
+    ``IngestionPipeline`` can prune the engine's tables to a wave's
+    buckets."""
+    return _key_bucket("doc_id", n_buckets)
 
 
 _SUMMED = ("blocks_kept", "blocks_dropped", "parse_failures")

@@ -76,7 +76,11 @@ _COMMIT_RETRIES = 2  # re-derivations after a lost compare-and-publish race
 _MANIFEST_DIR = "_manifests"
 
 
-def _key_bucket(bucket_col: str, n_buckets: int):
+def _key_bucket(bucket_col, n_buckets: int):
+    """A row's physical bucket: ``pmod(xxhash64(bucket_col), n_buckets)``.
+    The one definition — the pipeline's waves
+    (``plans.pipeline.bucket_col``) and the bloom sidecar
+    (``bloom.table_bucket_col``) prune by it too."""
     return F.pmod(F.xxhash64(bucket_col), F.lit(n_buckets)).cast("int")
 
 

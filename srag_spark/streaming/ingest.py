@@ -10,17 +10,22 @@ SAME Arrow parse kernel, with Spark's own streaming checkpointing giving
 exactly-once sink semantics — the streaming twin of ExtractionPipeline's
 bucket checkpoints.
 
-The transformation body is identical to the batch path (mapInArrow over
-DOCUMENTS_SCHEMA), so golden semantics carry over without re-testing the
-kernel: only the source/sink wiring differs.
+The transformation is the batch operator itself,
+``extract_documents_flat(stream, salt_threshold=None)``: one narrow
+``mapInArrow`` that parses and flattens, with no shuffle (so it composes
+with any output mode) and no JVM explode.  Golden semantics carry over
+without re-testing the kernel; only the source/sink wiring differs.
+Mega-doc salting is deliberately off: a micro-batch is already bounded,
+so one oversized doc delays only its own batch; route known mega docs to
+the batch pipeline instead.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from srag_spark.operators.parse import _parse_whole_arrow, explode_extracted
-from srag_spark.schema import DOCUMENTS_SCHEMA, EXTRACTED_SCHEMA
+from srag_spark.operators.parse import extract_documents_flat
+from srag_spark.schema import DOCUMENTS_SCHEMA
 
 
 def read_document_stream(
@@ -39,15 +44,6 @@ def read_document_stream(
     )
 
 
-def extract_stream(docs_stream: DataFrame) -> DataFrame:
-    """Streaming extraction: same Arrow kernel, narrow transformation —
-    no shuffle, so it composes with any output mode.  Mega-doc salting is
-    intentionally absent here: a streaming micro-batch is already bounded,
-    so one oversized doc delays only its own batch; route known mega-docs
-    to the batch pipeline instead."""
-    return docs_stream.mapInArrow(_parse_whole_arrow, schema=EXTRACTED_SCHEMA)
-
-
 def start_extraction_stream(
     spark: SparkSession,
     input_dir: str,
@@ -59,7 +55,9 @@ def start_extraction_stream(
     checkpointing.  ``trigger_once`` processes the backlog and stops —
     the streaming equivalent of one batch pipeline run (useful in tests
     and for catch-up jobs)."""
-    flat = explode_extracted(extract_stream(read_document_stream(spark, input_dir)))
+    flat = extract_documents_flat(
+        read_document_stream(spark, input_dir), salt_threshold=None
+    )
     writer = (
         flat.writeStream.format("parquet")
         .option("path", output_dir)

@@ -23,8 +23,9 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from srag_spark.operators.parse import extract_documents_flat
 from srag_spark.sources.tables import upsert_by_key
-from srag_spark.streaming.ingest import extract_stream, read_document_stream
+from srag_spark.streaming.ingest import read_document_stream
 
 
 def start_upsert_stream(
@@ -46,9 +47,9 @@ def start_upsert_stream(
     rows dropped in the same commit that upserts the batch's rows, so a
     re-ingested document that SHRANK does not leave stale spans behind.
     With False, plain keyed row upsert (rows never deleted)."""
-    from srag_spark.operators.parse import explode_extracted
-
-    flat = explode_extracted(extract_stream(read_document_stream(spark, input_dir)))
+    flat = extract_documents_flat(
+        read_document_stream(spark, input_dir), salt_threshold=None
+    )
 
     def sink(batch_df, epoch_id: int) -> None:
         if batch_df.isEmpty():

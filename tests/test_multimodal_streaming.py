@@ -94,3 +94,31 @@ def test_streaming_extraction_matches_batch_golden(spark, tmp_path):
         for seq, (k, t, m) in enumerate(out):
             exp[(doc_id, seq)] = (k, t, m)
     assert got == exp
+
+
+def _plan_nodes(plan) -> list[str]:
+    kids = plan.children()
+    return [plan.nodeName()] + [
+        n for i in range(kids.size()) for n in _plan_nodes(kids.apply(i))
+    ]
+
+
+def test_extraction_stream_parses_and_flattens_in_one_kernel(spark, tmp_path):
+    """The stream's plan is the flat parse kernel alone: one
+    ``MapInArrow`` emits the span rows, and no ``Generate`` (explode)
+    runs in the JVM."""
+    from srag_spark.schema import DOCUMENTS_SCHEMA
+    from srag_spark.streaming.ingest import start_extraction_stream
+
+    in_dir = str(tmp_path / "in")
+    spark.createDataFrame(
+        synth.generate_rows(3, seed=5, mega_every=0), schema=DOCUMENTS_SCHEMA
+    ).write.parquet(in_dir)
+    q = start_extraction_stream(
+        spark, in_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        trigger_once=True,
+    )
+    q.awaitTermination(120)
+    nodes = _plan_nodes(q._jsq.streamingQuery().lastExecution().analyzed())
+    assert nodes.count("MapInArrow") == 1, nodes
+    assert "Generate" not in nodes, nodes

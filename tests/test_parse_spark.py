@@ -14,6 +14,7 @@ from srag_spark.operators.parse import (
     extract_documents_flat,
     extraction_metrics,
     slice_spans,
+    sort_doc_spans,
 )
 from srag_spark.schema import DOCUMENTS_SCHEMA
 
@@ -68,21 +69,24 @@ def test_flat_operator_equals_nested_plus_explode(spark):
     ]
     df = spark.createDataFrame(rows, schema=DOCUMENTS_SCHEMA)
     key = lambda r: (r["doc_id"], r["seq"])  # noqa: E731
-    nested = {
-        key(r): (r["kind"], r["text"], r["media_ref"])
-        for r in explode_extracted(
-            extract_documents(df, salt_threshold=64, slice_target=16)
-        ).collect()
-    }
-    flat = {
-        key(r): (r["kind"], r["text"], r["media_ref"])
-        for r in extract_documents_flat(
-            df, salt_threshold=64, slice_target=16
-        ).collect()
-    }
-    assert flat == nested
     expected, _ = golden_flat(rows)
-    assert flat == expected
+    # 64: the mega docs take the salted path; None: every doc is parsed
+    # whole (the streaming sinks' shape)
+    for salt_threshold in (64, None):
+        nested = {
+            key(r): (r["kind"], r["text"], r["media_ref"])
+            for r in explode_extracted(
+                extract_documents(df, salt_threshold=salt_threshold, slice_target=16)
+            ).collect()
+        }
+        flat = {
+            key(r): (r["kind"], r["text"], r["media_ref"])
+            for r in extract_documents_flat(
+                df, salt_threshold=salt_threshold, slice_target=16
+            ).collect()
+        }
+        assert flat == nested
+        assert flat == expected
 
 
 def test_spark_pinned_fixture_doc(spark):
@@ -161,8 +165,6 @@ def test_slice_spans_never_splits_audio_runs():
 def test_slice_spans_roundtrip(target):
     rows = synth.generate_rows(5, seed=3, mega_every=0)
     for _, spans in rows:
-        from srag_spark.operators.parse import _sort_doc_spans
-
-        ordered = _sort_doc_spans(spans)
+        ordered = sort_doc_spans(spans)
         flat = [s for sl in slice_spans(ordered, target) for s in sl]
         assert flat == ordered

@@ -107,6 +107,22 @@ def test_partitioning_invariance(spark):
     assert a == b
 
 
+
+def test_every_job_runs_under_the_callers_job_group(spark, jobs_run_by):
+    """The target and raw count passes run on threads of their own, and
+    every job they start still belongs to the caller's job group."""
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    out, jobs = jobs_run_by(
+        lambda: dsir_weights(
+            _df(spark, [(1, "the cat sat"), (2, "stocks rallied")]),
+            _df(spark, [(10, "the cat napped")]),
+        ).collect()
+    )
+    assert len(out) == 2
+    assert jobs
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+
 def test_entry_matches_duckdb_oracle(spark):
     import __spark_entry__ as entrymod
 
