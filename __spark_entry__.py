@@ -2136,7 +2136,7 @@ def q_retrieve_context(spark, sf_dir):
     with a DETERMINISTIC rerank column (score=(doc_id·7919 mod 100)/100,
     the q7 stub) and the query vector = embeddings vec 0 — every stage is
     SQL-expressible, so the WHOLE Q1 path has a DuckDB twin
-    (QueryService.scala:95-133).  The hash-embed + pandas-UDF reranker
+    (QueryService.scala:95-133).  The hash-embed + stub-reranker
     variant is exercised by tests/test_retrieval.py."""
     from srag_spark.operators.retrieval import retrieve_context
 

@@ -10,21 +10,24 @@ Both are pure functions of their inputs (sha256-seeded), so results are
 reproducible across runs, partitionings, and cluster sizes — which is
 what the correctness and resume tests require.
 
-REAL-MODEL INJECTION: :func:`make_embed_udf` / :func:`make_rerank_udf`
-accept an optional batch callable, so a real model drops in WITHOUT
-touching any plan code — pass ``embed_fn`` / ``rerank_fn`` to
-``api.SragEngine`` (or ``retrieval.retrieve_context`` /
-``plans.indexing.build_embeddings`` directly) and every embedding/rerank
-site in the engine batches through it via the same Arrow path the stubs
-use.  Contract:
+REAL-MODEL INJECTION: a real model drops in WITHOUT touching any plan
+code — pass ``embed_fn`` / ``rerank_fn`` to ``api.SragEngine`` (or
+``retrieval.retrieve_context`` / ``plans.indexing.build_embeddings``
+directly).  Contract:
 
     embed_fn(texts: pd.Series[str]) -> iterable of float32[dim] arrays
     rerank_fn(query: str, texts: pd.Series[str]) -> iterable of floats
 
-e.g. an ONNX MiniLM session's ``run`` wrapped in a closure.  The
-callable executes inside executor Python workers on Arrow-sized batches
-(model loads once per worker via lazy init inside the closure — the
-standard pattern).  Defaults remain the deterministic stubs.
+e.g. an ONNX MiniLM session's ``run`` wrapped in a closure.
+``embed_fn`` embeds the chunks through :func:`make_embed_udf`, the same
+Arrow path the stub uses: it executes inside executor Python workers on
+Arrow-sized batches (model loads once per worker via lazy init inside
+the closure — the standard pattern), so it must be picklable.  At query
+time both run on the driver: :func:`embed_query` embeds the one query
+text, and ``rerank_fn`` is called once per query with the
+≤ ``retrieval.RERANKER_POOL_SIZE`` candidate texts, returning one score
+per text (a NaN counts as no score).  Defaults remain the deterministic
+stubs.
 """
 
 from __future__ import annotations
@@ -34,7 +37,7 @@ import hashlib
 import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType, FloatType
+from pyspark.sql.types import ArrayType, FloatType
 
 from srag_spark.schema import EMBEDDING_DIM
 
@@ -89,19 +92,3 @@ def stable_unit_score(query: str, text: str) -> float:
     h = hashlib.md5(f"{query}\x1f{text}".encode("utf-8")).hexdigest()
     return int(h[:8], 16) / float(0xFFFFFFFF)
 
-
-def make_rerank_udf(query: str, rerank_fn=None):
-    """Q6 rerank scorer for a fixed query — pandas UDF over candidate
-    text.  ``rerank_fn`` (see module docstring contract) swaps in a real
-    cross-encoder; default is the deterministic stub."""
-
-    @pandas_udf(DoubleType())
-    def rerank_udf(texts: pd.Series) -> pd.Series:
-        t = texts.map(lambda x: x if x is not None else "")
-        if rerank_fn is not None:
-            return pd.Series(
-                [float(s) for s in rerank_fn(query, t)], index=t.index
-            )
-        return t.map(lambda x: stable_unit_score(query, x))
-
-    return rerank_udf

@@ -520,10 +520,32 @@ def test_lookup_runs_at_most_two_jobs(spark, tmp_path, jobs_run_by):
         assert len(jobs) <= 2, jobs
 
 
+def _executed_plans(spark, fn):
+    """(fn(), physical plan texts of the SQL executions fn ran)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_id() -> int:
+        n = int(store.executionsCount())
+        return int(store.executionsList(n - 1, 1).apply(0).executionId()) if n else -1
+
+    first = last_id() + 1
+    out = fn()
+    plans = []
+    for eid in range(first, last_id() + 1):
+        ex = store.execution(eid)
+        if ex.isDefined():
+            plans.append(str(ex.get().physicalPlanDescription()))
+    return out, plans
+
+
 def test_lookup_and_query_job_counts(spark, tmp_path, jobs_run_by):
     """Over buckets of several files each: a lookup is one job, since
-    ``doc_id`` is unique and the scan needs no ``limit(1)`` pass per file;
-    a query evaluates its BM25 top-k and its rerank scores once each."""
+    ``doc_id`` is unique and the scan needs no ``limit(1)`` pass per file.
+    A query is the cosine top-k (1 job) and the BM25 statistics aggregate
+    (2: its shuffle stage and its result) and scoring top-k (1).  Every
+    chunk here holds a query term, so no candidate needs the text fetch
+    (2 more jobs).  Fusion, rerank and gates run on the driver, so no
+    Python UDF is planned."""
     eng = SragEngine(spark, str(tmp_path / "kb"), n_buckets=2)
     words = TEXT_A.split() + TEXT_B.split()
     docs = [(f"d{i}", " ".join(words[i:] + words[:i])) for i in range(12)]
@@ -532,9 +554,12 @@ def test_lookup_and_query_job_counts(spark, tmp_path, jobs_run_by):
         rows, jobs = jobs_run_by(lambda: eng.get_transcript(doc).collect())
         assert [r["doc_id"] for r in rows] == [doc]
         assert len(jobs) == 1, (doc, jobs)
-    rows, jobs = jobs_run_by(lambda: eng.query("quick fox pasta", limit=3).collect())
+    (rows, jobs), plans = _executed_plans(
+        spark, lambda: jobs_run_by(lambda: eng.query("quick fox pasta", limit=3).collect())
+    )
     assert rows
-    assert len(jobs) <= 22, jobs  # 25 with both relations recomputed
+    assert len(jobs) == 4, jobs
+    assert plans and not [p for p in plans if "ArrowEvalPython" in p], plans
 
 
 def test_engine_time_travel_across_snapshots(spark, tmp_path):

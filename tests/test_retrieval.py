@@ -374,3 +374,171 @@ def test_retrieve_context_scores_each_candidate_once(spark):
     ).collect()
     assert out
     assert scored.value == 6  # the six candidates, each scored once
+
+
+# --- driver-side fusion keeps Spark's NaN / null rules ---
+NAN, INF = float("nan"), float("inf")
+
+
+def _same(got, want) -> bool:
+    """Row lists equal, NaN equal to NaN."""
+    def norm(r):
+        return tuple("NaN" if isinstance(v, float) and math.isnan(v) else v for v in r)
+
+    return [norm(r) for r in got] == [norm(r) for r in want]
+
+
+def test_gates_and_rrf_copy_spark_non_finite_and_null_ordering(spark):
+    """Spark orders NaN above +inf and nulls last under desc, and holds
+    NaN >= every value; the fusion and gates, now driver-side, return
+    what the DataFrame plans returned."""
+    vals = [NAN, 0.9, 0.1, 0.95, INF, -INF]
+    rows = [("t", i, f"x{i}", v) for i, v in enumerate(vals)]
+    # top NaN: the cut top − 0.2·(top − worst) is NaN and only NaN >= NaN
+    got = [tuple(r) for r in filter_reranked(spark.createDataFrame(rows, SCORED_SCHEMA), 10).collect()]
+    assert _same(got, [("t", 0, "x0", NAN)])
+    # top +inf, worst −inf: the cut inf − 0.2·inf is NaN, nothing reaches it
+    assert filter_reranked(spark.createDataFrame(rows[1:], SCORED_SCHEMA), 10).collect() == []
+    # a null score is skipped by the gate stats and never kept
+    with_null = rows + [("t", 9, "x9", None)]
+    got = [tuple(r) for r in filter_reranked(spark.createDataFrame(with_null, SCORED_SCHEMA), 10).collect()]
+    assert _same(got, [("t", 0, "x0", NAN)])
+
+    sem = spark.createDataFrame(
+        [("a", 0, NAN), ("b", 0, 1.0), ("c", 0, INF), ("d", 0, None)], SCORE_SCHEMA
+    )
+    lex = spark.createDataFrame([("b", 0, 2.0), ("c", 0, NAN)], SCORE_SCHEMA)
+    assert [tuple(r) for r in rrf_fuse(sem, lex).collect()] == [
+        ("c", 0, 1 / 62 + 1 / 61),
+        ("b", 0, 1 / 63 + 1 / 62),
+        ("a", 0, 1 / 61),
+        ("d", 0, 1 / 64),
+    ]
+
+
+def test_retrieve_context_rerank_nan_semantics(spark):
+    """A NaN from ``rerank_fn`` counts as no score (null), as the Arrow
+    pandas UDF that once ran the reranker made it; a NaN from a
+    ``rerank_col`` stays NaN and tops the gate."""
+    chunks, emb = _corpus_dfs(spark)
+    stub = [tuple(r) for r in retrieve_context(chunks, emb, "spark documents", limit=3).collect()]
+    assert [(d, s) for d, s, _, _ in stub] == [("d3", 1), ("d1", 1), ("d3", 0)]
+
+    def nan_for_spark(query, texts):
+        return [NAN if t.startswith("spark") else stable_unit_score(query, t) for t in texts]
+
+    got = retrieve_context(chunks, emb, "spark documents", limit=3, rerank_fn=nan_for_spark)
+    assert [tuple(r) for r in got.collect()] == stub
+
+    def all_nan(query, texts):
+        return [NAN] * len(texts)
+
+    def nan_and_inf(query, texts):
+        return [NAN if t.startswith("spark") else INF if t.startswith("the") else 0.5 for t in texts]
+
+    for fn in (all_nan, nan_and_inf):
+        assert retrieve_context(chunks, emb, "spark documents", limit=3, rerank_fn=fn).count() == 0
+
+    col = F.when(F.col("segment_index") == 0, F.lit(NAN)).otherwise(F.lit(0.5))
+    got = [tuple(r) for r in retrieve_context(
+        chunks, emb, "spark documents", limit=3, rerank_col=col).collect()]
+    assert _same(got, [
+        ("d1", 0, "spark engine parses documents into spans", NAN),
+        ("d2", 0, "arrow batches move columns between workers", NAN),
+        ("d3", 0, "the quick brown fox", NAN),
+    ])
+
+
+# --- two-pass BM25 equals the single-plan groupBy form bit for bit ---
+def _bm25_groupby_reference(chunks, query_text, k=10, k1=1.2, b=0.75, flt=None):
+    """The single-plan BM25 the two passes replaced: a (key, dl, hits)
+    relation, a df groupBy, a broadcast idf join, a score groupBy and a
+    text join-back of the top-k."""
+    key = ["doc_id", "segment_index"]
+    terms = sorted(set(tokenize_lex(query_text)))
+    if not terms:
+        return (
+            apply_metadata_filter(chunks, flt)
+            .select(*key, "text", F.lit(0.0).alias("score"))
+            .orderBy(*key)
+            .limit(k)
+        )
+    pat = f"(?<![a-z0-9])({'|'.join(terms)})(?![a-z0-9])"
+    docs = chunks.select(
+        *key,
+        F.expr("CAST(regexp_count(lower(text), '[a-z0-9]+') AS INT)").alias("dl"),
+        F.expr(f"regexp_extract_all(lower(text), '{pat}', 1)").alias("_hits"),
+    )
+    stats = docs.agg(F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"))
+
+    def tf(t):
+        return F.size(F.filter(F.col("_hits"), lambda h: h == F.lit(t))).cast("double")
+
+    tf_full = docs.select(
+        *key, "dl",
+        F.explode(F.filter(
+            F.array(*[F.struct(F.lit(t).alias("term"), tf(t).alias("tf")) for t in terms]),
+            lambda s: s["tf"] > 0,
+        )).alias("_tc"),
+    ).select(*key, "dl", F.col("_tc.term").alias("term"), F.col("_tc.tf").alias("tf"))
+    df_t = tf_full.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))
+    tf_rel = tf_full
+    if flt:
+        tf_rel = tf_full.join(apply_metadata_filter(chunks, flt).select(*key), key, "left_semi")
+    idf = df_t.crossJoin(F.broadcast(stats)).select(
+        "term",
+        F.log(F.lit(1.0) + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
+              ).alias("idf"),
+        "avgdl",
+    )
+    scored = (
+        tf_rel.join(F.broadcast(idf), "term")
+        .withColumn(
+            "term_score",
+            F.col("idf") * (F.col("tf") * (k1 + 1.0))
+            / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))),
+        )
+        .groupBy(*key)
+        .agg(F.sum("term_score").alias("score"))
+    )
+    topk = scored.orderBy(F.desc("score"), *key).limit(k)
+    return (
+        chunks.select(*key, "text")
+        .join(F.broadcast(topk), key)
+        .select(*key, "text", "score")
+        .orderBy(F.desc("score"), *key)
+    )
+
+
+def test_bm25_two_pass_equals_groupby_plan_bit_for_bit(spark):
+    corpus = [
+        ("d1", 0, "the quick brown fox jumps over the lazy dog", "a"),
+        ("d1", 1, "a quick brown dog outpaces a quick fox", "a"),
+        ("d2", 0, "lorem ipsum dolor sit amet", "b"),
+        ("d2", 1, "the dog sleeps, the Fox runs! fox fox", "b"),
+        ("d3", 0, None, "a"),
+        ("d3", 1, "quick quick quick", "b"),
+        ("d4", 0, "", "a"),
+    ]
+    chunks = spark.createDataFrame(
+        [(d, s, t, {"grp": g}) for d, s, t, g in corpus], CHUNK_SCHEMA
+    )
+    empty = spark.createDataFrame([], CHUNK_SCHEMA)
+    cases = [
+        (chunks, "quick fox", None),
+        (chunks, "quick fox zebra", None),       # a term absent from the corpus
+        (chunks, "zebra", None),                 # no term in the corpus
+        (chunks, "fox FOX quick fox", None),     # repeated terms
+        (chunks, "quick fox", {"grp": "a"}),
+        (chunks, "quick fox", {"grp": "none"}),  # the filter leaves no chunk
+        (empty, "quick fox", None),              # empty chunks table
+        (chunks, "", None),                      # empty query
+        (chunks, "!! ..", {"grp": "b"}),         # no tokens, filtered
+    ]
+    for table, query, flt in cases:
+        got = [tuple(r) for r in bm25_topk(table, query, k=10, flt=flt).collect()]
+        want = [tuple(r) for r in _bm25_groupby_reference(table, query, k=10, flt=flt).collect()]
+        assert got == want, (query, flt)
+    # the cut keeps exactly the top-k matching chunks when k < #matches
+    top2 = [tuple(r) for r in bm25_topk(chunks, "quick fox", k=2).collect()]
+    assert top2 == [tuple(r) for r in _bm25_groupby_reference(chunks, "quick fox", k=2).collect()]
