@@ -110,10 +110,7 @@ def q_s5_range_scan(spark, sf_dir):
         F.date_format("ts", "yyyy-MM-dd").alias("day"),
         "event_id", "ts", "user_id", "value",
     )
-    upsert_by_key(
-        spark, path, ev, ["day", "event_id"],
-        n_buckets=16, persist_incoming=False,
-    )
+    upsert_by_key(spark, path, ev, ["day", "event_id"], n_buckets=16)
     rewrite_table(spark, path, sort_by=["ts"])
     return (
         scan_range(
@@ -154,10 +151,7 @@ def q_s5_zorder_scan(spark, sf_dir):
         F.date_format("ts", "yyyy-MM-dd").alias("day"),
         "event_id", "ts", "user_id", "value",
     )
-    upsert_by_key(
-        spark, path, ev, ["day", "event_id"],
-        n_buckets=16, persist_incoming=False,
-    )
+    upsert_by_key(spark, path, ev, ["day", "event_id"], n_buckets=16)
     rewrite_table(spark, path, zorder_by=["ts", "value"])
     return (
         scan_range(

@@ -305,10 +305,10 @@ class SragEngine:
                 doc_counter=doc_counter,
             )
             # the Python parse kernel is the most expensive stage and its
-            # output feeds transcripts AND chunks AND embeddings — persist it
-            # for the duration of the call so it executes exactly once
-            # (upsert_by_key persists each table's own incoming plan for its
-            # three actions; this covers the stage they all share)
+            # output feeds transcripts AND chunks AND embeddings AND
+            # metrics — persist it for the duration of the call so it
+            # executes exactly once (each merge reads its own incoming plan
+            # in one job, so the four merges share this one persist)
             extracted = persist(extracted, ledger, StorageLevel.MEMORY_AND_DISK)
             doc_meta = self._doc_meta(docs, metadata)
             transcripts = build_transcripts(extracted, source_docs=docs)
@@ -332,51 +332,51 @@ class SragEngine:
                 *[f.name for f in TRANSCRIPTS_SCHEMA.fields]
             )
             chunks = build_chunks(extracted, doc_meta=doc_meta)
-            # chunks feed their own upsert, the embeddings build, and the
-            # returned count — persist so the chunk UDF runs once
+            # chunks feed their own upsert and the embeddings build —
+            # persist so the chunk UDF runs once
             chunks = persist(chunks, ledger, StorageLevel.MEMORY_AND_DISK)
             embeddings = build_embeddings(chunks, embed_fn=self.embed_fn)
 
             doc_ids = docs.select("doc_id").distinct()
-            # per table: (rows, key, entity deletes, persist the rows)
+            # per table: (rows, key, entity deletes)
             merges = {
-                "transcripts": (transcripts, ["doc_id"], None, True),
+                "transcripts": (transcripts, ["doc_id"], None),
                 # replace-entity: a re-ingested doc drops ALL its previous
                 # chunk and embedding rows in the same commit that lands
                 # the new ones, so shrunk docs leave nothing stale
-                "chunks": (chunks, _CHUNK_KEY, doc_ids, True),
-                "embeddings": (embeddings, _CHUNK_KEY, doc_ids, True),
+                "chunks": (chunks, _CHUNK_KEY, doc_ids),
+                "embeddings": (embeddings, _CHUNK_KEY, doc_ids),
                 # per-doc extraction lineage metrics (north rule; the batch
                 # pipeline records the same per bucket, plans/pipeline.py)
-                # — a cheap projection of the persisted extraction, so its
-                # rows are not persisted again
+                # — a cheap projection of the persisted extraction
                 "metrics": (
                     extraction_metrics(extracted).withColumn(
                         "ingested_at", F.current_timestamp()
                     ),
                     ["doc_id"],
                     None,
-                    False,
                 ),
             }
 
-            def merge(name: str, path: str) -> None:
-                rows, key, deletes, persist_rows = merges[name]
-                upsert_by_key(
+            def merge(name: str, path: str) -> int:
+                rows, key, deletes = merges[name]
+                return upsert_by_key(
                     self.spark, path, rows, key, n_buckets=self.n_buckets,
-                    persist_incoming=persist_rows, deletes=deletes,
+                    deletes=deletes,
                 )
 
             # the four merges overlap; concurrent readers of the persisted
             # ``extracted`` and ``chunks`` wait on Spark's block locks
             # instead of recomputing them
-            self._each_table(merge)
+            merged = self._each_table(merge)
             # atomic visibility point: readers switch from the old to the
             # new four-table state HERE, never between the commits above
             # (skipped by stage_ingest, whose publish IS this publish)
             if _publish:
                 self._publish_engine_snapshot()
-            n_chunks = chunks.count()
+            # the chunks merge counted its incoming rows (chunk keys are
+            # unique, so no row was collapsed)
+            n_chunks = merged["chunks"]
             return {
                 "documents": batch["documents"],
                 "chunks": n_chunks,

@@ -389,19 +389,26 @@ def _resolve_texts(
 ) -> list[tuple]:
     """(key, fused_score) → (key, fused_score, text): the lexical hit's
     text if non-empty, else the chunk table's; rows with neither are
-    dropped.  The chunk texts come from one join of the chunks against
-    the broadcast keys that need them, and only when some do."""
+    dropped.  The chunk texts come from one scan of the chunks filtered
+    to the keys that need them (one job), and only when some do.  A key
+    with a null part matches nothing, as in a join."""
 
     def usable(t) -> bool:
         return t is not None and len(t) > 0
 
-    need = [key for key, _ in fused if not usable(lex_text.get(key))]
+    need = [
+        key for key, _ in fused if not usable(lex_text.get(key)) and None not in key
+    ]
     fetched = {}
     if need:
-        keys = _local(chunks.sparkSession, chunks.select(*_KEY).schema, need)
+        types = [chunks.schema[c].dataType for c in _KEY]
+        keys = [
+            F.struct(*[F.lit(v).cast(t).alias(c) for v, t, c in zip(key, types, _KEY)])
+            for key in need
+        ]
         fetched = {
             (r[0], r[1]): r[2]
-            for r in chunks.join(F.broadcast(keys), list(_KEY)).select(*_KEY, "text").collect()
+            for r in chunks.filter(F.struct(*_KEY).isin(keys)).select(*_KEY, "text").collect()
         }
     out = []
     for key, s in fused:

@@ -14,10 +14,9 @@ plus a tiny manifest layer:
   so full-key upserts and entity-level deletes (S10: delete-all-segments-
   of-transcript) prune to the same buckets;
 * each write commit lands its rows under a fresh, uniquely named data
-  directory (``data/<commit>/_kb=<b>/``) — **existing files are never
-  rewritten, moved, or deleted by a commit**, which is exactly the
-  object-store-safe discipline (no read-modify-write of live objects, no
-  directory renames);
+  directory — **existing files are never rewritten, moved, or deleted
+  by a commit**, which is exactly the object-store-safe discipline (no
+  read-modify-write of live objects, no directory renames);
 * the current snapshot is a JSON **manifest** (``_manifests/v<N>.json``)
   mapping every live bucket to its one data directory, plus the layout
   (n_buckets, bucket column) and the table schema.  A commit writes the
@@ -28,11 +27,20 @@ plus a tiny manifest layer:
 * every keyed write — ``upsert_by_key``, ``delete_by_key``, and the
   entity replace (``upsert_by_key(deletes=...)``: drop every row of the
   batch's entities, then insert the batch) — is ONE merge commit per
-  table (``_merge_once``): it reads ONLY the manifest dirs of buckets
-  containing incoming or deleted keys and writes ONLY those buckets' new
-  dirs, so a 1-row upsert into a 10k-bucket 100 TB table reads and
-  rewrites ~1/10k of it.  All are idempotent — replaying a batch
-  converges (J7);
+  table (``_merge_once``) and ONE Spark job (``_merge_buckets``): the
+  batch and the delete keys are grouped by bucket (only the batch is
+  shuffled), and one Arrow kernel per touched bucket reads that
+  bucket's live files, applies the batch and writes ONE parquet file,
+  ``data/c<commit>/_kb=<b>/<attempt>/part-00000.parquet``, in a
+  directory no other task attempt picks.  Untouched buckets are neither
+  read nor written, so a 1-row upsert into a 10k-bucket 100 TB table
+  reads and rewrites ~1/10k of it, and a lookup opens one file.  All
+  are idempotent — replaying a batch converges (J7).  A bucket must fit
+  in one task's memory; the bucket count
+  (``rewrite_table(n_buckets=...)``) bounds its size;
+* ``delete_where`` (a predicate is a Spark ``Column``) and
+  ``rewrite_table`` keep Spark's ``partitionBy`` writer:
+  ``data/c<commit>/_kb=<b>/part-*.parquet``, one file per writing task;
 * layout metadata lives INSIDE the manifest (not a sidecar), so it is
   committed atomically with the first data write — a table can never
   exist with data but no layout record;
@@ -49,25 +57,29 @@ retries against the fresh snapshot (``_with_commit_retries``, bounded by
 On S3 proper the rename becomes a conditional PUT (see
 fsio.rename_atomic).
 
-All filesystem access goes through :mod:`srag_spark.sources.fsio`
-(Hadoop FileSystem API) — no ``os`` / ``shutil`` / ``open()`` anywhere,
-so the sink runs unchanged on HDFS / S3A / GCS.
+Manifests, tags and listings go through :mod:`srag_spark.sources.fsio`
+(Hadoop FileSystem API); the bucket merge kernel reads and writes data
+files through ``pyarrow.fs``, which resolves local paths, ``file://``,
+``s3://``, ``gs://`` and ``hdfs://`` (with libhdfs).  A keyed write to
+any other URI (``s3a://``, say) raises a ValueError before it starts a
+job.  No ``os`` / ``shutil`` / ``open()`` anywhere.
 """
 
 from __future__ import annotations
 
 import json
 import uuid
-from functools import reduce
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from srag_spark.functions.planning import held, persist
 from srag_spark.sources import fsio
 
 BUCKET_COL = "_kb"
@@ -320,15 +332,15 @@ def upsert_by_key(
     incoming: DataFrame,
     key_cols: list[str],
     n_buckets: int = DEFAULT_KEY_BUCKETS,
-    persist_incoming: bool = True,
     deletes: DataFrame | None = None,
-) -> None:
+) -> int:
     """MERGE-INTO-equivalent: replace rows matching incoming keys, insert
     the rest (right-biased upsert, S4 semantics).  Reads and rewrites ONLY
     the key-hash buckets touched by ``incoming``; publishes atomically via
     the manifest.  Because merged buckets are written to a NEW directory
     (never the one being read), no lineage break / checkpoint is needed
-    and a mid-write crash leaves the old snapshot intact.
+    and a mid-write crash leaves the old snapshot intact.  Returns the
+    number of incoming rows merged (after the in-batch key dedup).
 
     ``deletes`` (optional) replaces whole ENTITIES in the same commit:
     every existing row whose ``deletes.columns`` values appear in
@@ -352,27 +364,21 @@ def upsert_by_key(
     (PostgresTranscriptRepository.scala:39-58).  Which duplicate survives
     is unspecified (SQL statement order does not exist on an unordered
     DataFrame); it is deterministic when the duplicates are identical
-    rows — the replay case.
+    rows — the replay case.  Keys compare as in a SQL join: a null key
+    matches nothing, so it never replaces a stored row.
 
-    The (deduplicated) incoming plan is consumed by up to three actions
-    (touched-bucket scan, anti-join key distinct, merged write), so it is
-    persisted MEMORY_AND_DISK for the duration of the call and released
-    after — without this, an expensive upstream (the Python parse kernel,
-    the embedding UDF) re-executes per action.  ``persist_incoming=False``
-    opts out for trivially cheap plans (e.g. a bare parquet scan).
+    The incoming plan is consumed by ONE action, the bucket merge job
+    (:func:`_merge_buckets`), so it needs no persist: an expensive
+    upstream (the Python parse kernel, the embedding UDF) runs once.
 
     Optimistic concurrency: if another writer commits between this
     batch's manifest read and its commit, the commit is rejected (never a
     lost update) and the whole batch retries against the fresh snapshot
     (:func:`_with_commit_retries`) — the reference's Postgres row locks
     replaced by compare-and-publish."""
-    incoming = incoming.dropDuplicates(key_cols)
-    with held() as ledger:
-        if persist_incoming:
-            incoming = persist(incoming, ledger, StorageLevel.MEMORY_AND_DISK)
-        _with_commit_retries(
-            lambda: _merge_once(spark, path, incoming, key_cols, deletes, n_buckets)
-        )
+    return _with_commit_retries(
+        lambda: _merge_once(spark, path, incoming, key_cols, deletes, n_buckets)
+    )
 
 
 def delete_by_key(
@@ -422,12 +428,15 @@ def _next_body(manifest: dict, touched=(), **changes) -> dict:
     return {**body, **changes}
 
 
-def _merge_once(spark, path, incoming, key_cols, deletes, n_buckets) -> None:
+def _merge_once(spark, path, incoming, key_cols, deletes, n_buckets) -> int:
     """One keyed merge commit: :func:`_prepare_merge`, then publish
-    pinned to the snapshot it was derived from."""
+    pinned to the snapshot it was derived from.  Returns the incoming
+    rows merged."""
     prep = _prepare_merge(spark, path, incoming, key_cols, deletes, n_buckets)
-    if prep is not None:
-        commit_manifest(spark, path, prep["body"], expected_prev=prep["expected_prev"])
+    if prep is None:
+        return 0
+    commit_manifest(spark, path, prep["body"], expected_prev=prep["expected_prev"])
+    return prep["rows_in"]
 
 
 def _prepare_merge(
@@ -438,62 +447,41 @@ def _prepare_merge(
     deletes: DataFrame | None,
     n_buckets: int,
 ) -> dict | None:
-    """The write half of every keyed commit: merge ``incoming`` (unique
-    keys, or None) and ``deletes`` (entity keys, or None) against the
-    current snapshot and land the touched buckets under a fresh commit
-    dir, WITHOUT publishing.  Returns everything a publisher (direct
-    commit or WAP staging) needs, or None when a delete finds nothing
-    to commit (no table, or no live bucket holds a key)::
+    """The write half of every keyed commit: merge ``incoming`` (or None)
+    and ``deletes`` (entity keys, or None) against the current snapshot
+    in one bucket merge job (:func:`_merge_buckets`), WITHOUT publishing.
+    A missing table merges as an empty snapshot with ``key_cols[0]`` as
+    its bucket column.  Returns everything a publisher (direct commit or
+    WAP staging) needs, or None when a delete finds nothing to commit
+    (no table, or no live bucket holds a key)::
 
         {"body": <manifest body>, "expected_prev": <base version>,
-         "touched": [bucket ids], "base_touched_dirs": {bucket: dir|None}}
+         "touched": [bucket ids], "base_touched_dirs": {bucket: dir|None},
+         "rows_in": <incoming rows merged>}
 
     The data dirs are invisible to readers until some manifest references
     them — this is exactly the property write–audit–publish exploits."""
+    _arrow_fs(path)  # an unsupported URI fails here, before any job
     manifest = read_manifest(spark, path)
     if manifest is None:
         if incoming is None:
             return None
-        # initial load: write once, derive the bucket set from the
-        # committed directories (no second execution of the incoming plan)
         n_buckets, bcol = _layout(None, key_cols, n_buckets)
-        buckets = _write_touched(
-            spark, path, incoming.withColumn(BUCKET_COL, _key_bucket(bcol, n_buckets))
-        )
-        touched = sorted(int(b) for b in buckets)
-        return {
-            "body": _next_body({
-                "n_buckets": n_buckets,
-                "bucket_col": bcol,
-                "key_cols": list(key_cols),
-                "schema": incoming.schema.json(),
-                "buckets": buckets,
-            }),
-            "expected_prev": 0,
-            "touched": touched,
-            "base_touched_dirs": {str(b): None for b in touched},
+        manifest = {
+            "version": 0,
+            "n_buckets": n_buckets,
+            "bucket_col": bcol,
+            "key_cols": list(key_cols),
+            "schema": incoming.schema.json(),
+            "buckets": {},
         }
     n_buckets, bcol = _layout(manifest, key_cols, n_buckets)
+    live = manifest["buckets"]
     if deletes is not None:  # entity keys must carry the bucket column too
         _layout(manifest, deletes.columns, n_buckets)
-    bucket = _key_bucket(bcol, n_buckets)
-
-    # the touched-bucket set drives manifest-level pruning of the read
-    # side, so it must be known BEFORE the merge: ONE collect over the
-    # bucket ids of the incoming and delete keys (tiny projection).
-    # Incoming buckets are always rewritten; delete-only buckets only if
-    # they are live.
-    rows = reduce(
-        DataFrame.unionByName,
-        [
-            df.select(bucket.alias(BUCKET_COL), F.lit(df is incoming).alias("inc"))
-            for df in (incoming, deletes)
-            if df is not None
-        ],
-    ).distinct().collect()
-    live = {int(b) for b in manifest["buckets"]}
-    touched = sorted({b for b, inc in rows if inc} | ({b for b, _ in rows} & live))
-    if incoming is None and not touched:
+        if not live:  # nothing stored, nothing to delete
+            deletes = None
+    if incoming is None and deletes is None:
         return None
 
     # schema evolution (Iceberg add-column semantics): new incoming
@@ -503,20 +491,22 @@ def _prepare_merge(
     # simply lack the new columns — Spark's explicit-schema parquet read
     # returns null for them, so no rewrite of untouched data is needed.
     schema = StructType.fromJson(json.loads(manifest["schema"]))
-    # manifest-level pruning: read only touched buckets' live dirs
-    merged = scan_manifest(spark, path, manifest, touched)
-    if deletes is not None:
-        merged = merged.join(deletes, deletes.columns, "left_anti")
     if incoming is not None:
         schema = _merge_schemas(schema, incoming.schema)
-        # incoming keys are unique (dropDuplicates in upsert_by_key), so
-        # the anti-join side needs no extra distinct aggregation
-        merged = _align(
-            merged.join(incoming.select(*key_cols), key_cols, "left_anti"), schema
-        ).unionByName(_align(incoming, schema))
-    buckets = _write_touched(
-        spark, path, merged.withColumn(BUCKET_COL, bucket), manifest["buckets"], touched
+    results = _merge_buckets(
+        path, live, schema, _key_bucket(bcol, n_buckets), key_cols, incoming, deletes
     )
+    # incoming buckets are always rewritten; delete-only buckets only if
+    # they are live
+    touched = sorted(b for b, _, _, added in results if added or str(b) in live)
+    if incoming is None and not touched:
+        return None
+    buckets = dict(live)
+    for b, rel, rows, _ in results:
+        if rows:
+            buckets[str(b)] = rel
+        else:  # every row died: the emptied bucket leaves the snapshot
+            buckets.pop(str(b), None)
     return {
         "body": _next_body(
             manifest,
@@ -529,8 +519,184 @@ def _prepare_merge(
         ),
         "expected_prev": manifest["version"],
         "touched": touched,
-        "base_touched_dirs": {str(b): manifest["buckets"].get(str(b)) for b in touched},
+        "base_touched_dirs": {str(b): live.get(str(b)) for b in touched},
+        "rows_in": sum(added for _, _, _, added in results),
     }
+
+
+# ---------------------------------------------------------------------------
+# the bucket merge kernel
+# ---------------------------------------------------------------------------
+_MERGE_RESULT = f"{BUCKET_COL} int, dir string, rows long, added long"
+
+
+def _arrow_fs(path: str):
+    """``(filesystem, path)`` for a table root as ``pyarrow.fs`` resolves
+    it — the bucket merge kernel reads and writes data files through it.
+    Raises a ValueError naming the path when pyarrow cannot resolve the
+    URI (an unknown scheme such as ``s3a://``, or ``hdfs://`` without
+    libhdfs)."""
+    try:
+        return pafs.FileSystem.from_uri(path)
+    except (pa.ArrowException, OSError) as exc:
+        raise ValueError(
+            f"keyed merges read and write {path!r} through pyarrow.fs, which "
+            f"cannot resolve it ({exc}); use a local path, file://, s3://, "
+            "gs:// or hdfs:// (with libhdfs)"
+        ) from exc
+
+
+def _merge_buckets(path, live, schema, bucket, key_cols, incoming, deletes) -> list:
+    """The ONE Spark job of a keyed merge: the incoming rows and the
+    delete keys are grouped by ``bucket`` (only the batch is shuffled,
+    never table rows) and each touched bucket is merged by
+    :func:`_bucket_merge_kernel` in one task, which writes its one file
+    under a fresh commit dir.  Returns the collected ``(bucket, dir,
+    rows, added)`` tuples — ``dir`` relative to ``path``, None for a
+    bucket left with no rows."""
+    kernel = _bucket_merge_kernel(
+        path,
+        f"data/c{uuid.uuid4().hex}",
+        live,
+        pa.schema([(f.name, _nullable(f.type)) for f in to_arrow_schema(schema)]),
+        list(key_cols),
+        None if deletes is None else list(deletes.columns),
+    )
+
+    def grouped(df):
+        return df.withColumn(BUCKET_COL, bucket).groupBy(BUCKET_COL)
+
+    if incoming is None:
+        out = grouped(deletes).applyInArrow(lambda key, t: kernel(key, None, t), _MERGE_RESULT)
+    elif deletes is None:
+        out = grouped(incoming).applyInArrow(lambda key, t: kernel(key, t, None), _MERGE_RESULT)
+    else:
+        out = grouped(incoming).cogroup(grouped(deletes)).applyInArrow(kernel, _MERGE_RESULT)
+    return [tuple(r) for r in out.collect()]
+
+
+def _bucket_merge_kernel(root, commit_dir, live, target, key_cols, delete_cols):
+    """The per-bucket merge ``(key, incoming, deletes) -> result row``:
+
+    * read the bucket's live files (``live``: bucket → dir relative to
+      ``root``) with pyarrow and align every file to ``target``, the
+      merged schema (old files lack columns added since; Spark-written
+      INT96 timestamps read as microseconds);
+    * collapse in-batch duplicate keys of ``incoming`` to their first row;
+    * drop stored rows whose ``delete_cols`` match a delete key, then
+      those whose ``key_cols`` match an incoming row — an index
+      anti-join (:func:`_unmatched`) that joins only the key columns,
+      because Acero cannot carry list or map payloads through a join;
+    * append the incoming rows and write ONE parquet file into
+      ``<commit_dir>/_kb=<b>/<uuid>``, a directory no other task
+      attempt can pick, so a retried attempt never adds rows to the one
+      the driver commits.
+
+    All I/O goes through ``pyarrow.fs``.  The closure holds only plain
+    values — no session — so it serializes in a session that has run an
+    ``Observation``.  A bucket must fit in one task's memory; the bucket
+    count (``rewrite_table(n_buckets=...)``) bounds its size."""
+
+    def kernel(key, incoming, deletes):
+        b = key[0].as_py()
+        fs, base = _arrow_fs(root)
+        parts = _read_dir(fs, f"{base}/{live[str(b)]}", target) if str(b) in live else []
+        stored = pa.concat_tables([target.empty_table(), *parts])
+        if deletes is not None and deletes.num_rows:
+            stored = _unmatched(stored, deletes, delete_cols, target)
+        added = 0
+        if incoming is not None and incoming.num_rows:
+            incoming = _conform(incoming, target)
+            first = (
+                incoming.select(key_cols)
+                .append_column("__row", pa.array(np.arange(incoming.num_rows)))
+                .group_by(key_cols, use_threads=False)
+                .aggregate([("__row", "min")])["__row_min"]
+            )
+            incoming = incoming.take(first.sort())
+            stored = pa.concat_tables([
+                _unmatched(stored, incoming, key_cols, target), incoming
+            ])
+            added = incoming.num_rows
+        rel = None
+        if stored.num_rows:
+            rel = f"{commit_dir}/{BUCKET_COL}={b}/{uuid.uuid4().hex}"
+            fs.create_dir(f"{base}/{rel}", recursive=True)
+            pq.write_table(stored, f"{base}/{rel}/part-00000.parquet", filesystem=fs)
+        return pa.table(
+            {
+                BUCKET_COL: pa.array([b], pa.int32()),
+                "dir": pa.array([rel], pa.string()),
+                "rows": pa.array([stored.num_rows], pa.int64()),
+                "added": pa.array([added], pa.int64()),
+            }
+        )
+
+    return kernel
+
+
+def _read_dir(fs, d: str, target: pa.Schema) -> list:
+    """Every parquet data file directly under ``d`` — Spark's or the
+    kernel's; names starting ``_`` or ``.`` are sidecars, as Spark's file
+    index treats them — read and aligned to ``target``."""
+    names = sorted(
+        i.path for i in fs.get_file_info(pafs.FileSelector(d))
+        if i.is_file and i.base_name.endswith(".parquet") and i.base_name[0] not in "_."
+    )
+    return [
+        _conform(
+            pq.read_table(
+                f, filesystem=fs, partitioning=None, coerce_int96_timestamp_unit="us"
+            ),
+            target,
+        )
+        for f in names
+    ]
+
+
+def _nullable(t: pa.DataType) -> pa.DataType:
+    """``t`` with every nested field nullable (map keys stay required, as
+    Arrow demands).  Spark reads every parquet field as nullable, and
+    pyarrow will not cast a nullable field to a required one, so the
+    kernel aligns to and writes this relaxed form."""
+    if pa.types.is_struct(t):
+        return pa.struct([(t.field(i).name, _nullable(t.field(i).type)) for i in range(t.num_fields)])
+    if pa.types.is_map(t):
+        return pa.map_(t.key_type, _nullable(t.item_type))
+    if pa.types.is_list(t):
+        return pa.list_(_nullable(t.value_type))
+    if pa.types.is_large_list(t):
+        return pa.large_list(_nullable(t.value_type))
+    return t
+
+
+def _conform(table: pa.Table, target: pa.Schema) -> pa.Table:
+    """``table`` projected onto ``target``: its columns cast to the
+    target types, columns it lacks as typed nulls, others dropped."""
+    have = set(table.column_names)
+    return pa.table(
+        [
+            table[f.name].cast(f.type) if f.name in have
+            else pa.nulls(table.num_rows, f.type)
+            for f in target
+        ],
+        schema=target,
+    )
+
+
+def _unmatched(stored: pa.Table, drop: pa.Table, cols: list[str], target: pa.Schema):
+    """The rows of ``stored`` whose ``cols`` match no row of ``drop``, in
+    stored order — SQL left-anti semantics (a null never matches).  Only
+    the key columns and a row index enter the join; the payload is
+    gathered by index afterwards."""
+    if not stored.num_rows:
+        return stored
+    keys = pa.table(
+        {c: stored[c] for c in cols} | {"__row": np.arange(stored.num_rows)}
+    )
+    right = pa.table({c: drop[c].cast(target.field(c).type) for c in cols})
+    kept = keys.join(right, cols, join_type="left anti", use_threads=False)["__row"]
+    return stored.take(kept.sort())
 
 
 def delete_where(spark: SparkSession, path: str, condition) -> int:
@@ -589,17 +755,17 @@ def _delete_where_once(spark: SparkSession, path: str, cond) -> int:
 
 
 def _write_touched(
-    spark: SparkSession, path: str, rows: DataFrame, live=None, touched=None
+    spark: SparkSession, path: str, rows: DataFrame, live: dict, touched: list
 ) -> dict:
     """Write ``rows`` (already carrying BUCKET_COL) under a fresh commit
-    dir and return the live-bucket map ``live`` (bucket → dir) with every
-    ``touched`` bucket pointed at its new dir — or dropped when none of
-    its rows survived (an emptied bucket leaves the snapshot).
-    ``touched=None`` means every bucket the commit wrote."""
+    dir with Spark's writer and return the live-bucket map ``live``
+    (bucket → dir) with every ``touched`` bucket pointed at its new dir —
+    or dropped when none of its rows survived (an emptied bucket leaves
+    the snapshot)."""
     commit_id = f"c{uuid.uuid4().hex}"
     written = set(_buckets_in_commit(spark, _write_buckets(rows, path, commit_id)))
-    buckets = dict(live or {})
-    for b in written if touched is None else touched:
+    buckets = dict(live)
+    for b in touched:
         if b in written:
             buckets[str(b)] = f"data/{commit_id}/{BUCKET_COL}={b}"
         else:
@@ -1166,7 +1332,6 @@ def stage_upsert(
     incoming: DataFrame,
     key_cols: list[str],
     n_buckets: int = DEFAULT_KEY_BUCKETS,
-    persist_incoming: bool = True,
 ) -> str:
     """Write–audit–publish, step 1 (Iceberg's WAP workflow): run the full
     :func:`upsert_by_key` merge and land the merged bucket dirs, but
@@ -1186,11 +1351,7 @@ def stage_upsert(
     upsert write); staging adds one small JSON object.  Staged data dirs
     are protected from :func:`vacuum` until the stage is published or
     abandoned."""
-    incoming = incoming.dropDuplicates(key_cols)
-    with held() as ledger:
-        if persist_incoming:
-            incoming = persist(incoming, ledger, StorageLevel.MEMORY_AND_DISK)
-        prep = _prepare_merge(spark, path, incoming, key_cols, None, n_buckets)
+    prep = _prepare_merge(spark, path, incoming, key_cols, None, n_buckets)
     staging_id = uuid.uuid4().hex
     staged = {
         "base_version": prep["expected_prev"],

@@ -539,13 +539,14 @@ def _executed_plans(spark, fn):
 
 
 def test_lookup_and_query_job_counts(spark, tmp_path, jobs_run_by):
-    """Over buckets of several files each: a lookup is one job, since
-    ``doc_id`` is unique and the scan needs no ``limit(1)`` pass per file.
-    A query is the cosine top-k (1 job) and the BM25 statistics aggregate
-    (2: its shuffle stage and its result) and scoring top-k (1).  Every
-    chunk here holds a query term, so no candidate needs the text fetch
-    (2 more jobs).  Fusion, rerank and gates run on the driver, so no
-    Python UDF is planned."""
+    """A lookup is one job, since ``doc_id`` is unique and the scan
+    needs no ``limit(1)`` pass.  A query is the cosine top-k (1 job) and
+    the BM25 statistics aggregate (2: its shuffle stage and its result)
+    and scoring top-k (1).  Every chunk of the first 12 docs holds a
+    query term, so no candidate needs the text fetch; once a doc without
+    one is ingested, its cosine hit does, and the fetch is one more job.
+    Fusion, rerank and gates run on the driver, so no Python UDF is
+    planned."""
     eng = SragEngine(spark, str(tmp_path / "kb"), n_buckets=2)
     words = TEXT_A.split() + TEXT_B.split()
     docs = [(f"d{i}", " ".join(words[i:] + words[:i])) for i in range(12)]
@@ -560,6 +561,10 @@ def test_lookup_and_query_job_counts(spark, tmp_path, jobs_run_by):
     assert rows
     assert len(jobs) == 4, jobs
     assert plans and not [p for p in plans if "ArrowEvalPython" in p], plans
+    eng.ingest(_docs(spark, [("z", "nothing here matches those three words")]))
+    rows, jobs = jobs_run_by(lambda: eng.query("quick fox pasta", limit=20).collect())
+    assert rows
+    assert len(jobs) == 5, jobs
 
 
 def test_engine_time_travel_across_snapshots(spark, tmp_path):

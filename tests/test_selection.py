@@ -121,7 +121,9 @@ def test_every_job_runs_under_the_callers_job_group(spark, jobs_run_by):
     )
     assert len(out) == 2
     assert jobs
-    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    # no new ungrouped job (a subset, not equality: the status store
+    # evicts its oldest jobs past spark.ui.retainedJobs)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
 
 def test_entry_matches_duckdb_oracle(spark):
     import __spark_entry__ as entrymod

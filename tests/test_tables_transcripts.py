@@ -430,11 +430,13 @@ def test_concurrent_writer_race_retries_without_lost_update(spark, tmp_path, mon
         ["doc_id", "segment_index"], n_buckets=4,
     )
 
-    real_write = T._write_buckets
+    # the seam between the bucket merge job's data write and the
+    # manifest publish
+    real_prepare = T._prepare_merge
     state = {"injected": False}
 
-    def hooked(df, path_, commit_id):
-        out = real_write(df, path_, commit_id)
+    def hooked(*args):
+        out = real_prepare(*args)
         if not state["injected"]:
             state["injected"] = True
             # interloper sneaks a commit in after the victim wrote its
@@ -448,7 +450,7 @@ def test_concurrent_writer_race_retries_without_lost_update(spark, tmp_path, mon
             )
         return out
 
-    monkeypatch.setattr(T, "_write_buckets", hooked)
+    monkeypatch.setattr(T, "_prepare_merge", hooked)
     upsert_by_key(
         spark, path,
         spark.createDataFrame(

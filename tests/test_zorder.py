@@ -76,7 +76,7 @@ def _grid_table(spark, path, n=2048):
         (F.pmod(F.xxhash64("id"), F.lit(64))).cast("int").alias("y"),
         F.col("id").cast("double").alias("v"),
     )
-    upsert_by_key(spark, path, df, ["k"], n_buckets=1, persist_incoming=False)
+    upsert_by_key(spark, path, df, ["k"], n_buckets=1)
     return df
 
 
@@ -169,7 +169,7 @@ def test_zorder_rewrite_with_non_finite_values(spark, tmp_path):
         for i in range(300)
     ]
     df = spark.createDataFrame(rows, "k string, x double")
-    upsert_by_key(spark, path, df, ["k"], n_buckets=1, persist_incoming=False)
+    upsert_by_key(spark, path, df, ["k"], n_buckets=1)
 
     bnds = Z.compute_boundaries(df, ["x"])
     assert float("inf") in bnds["x"]
