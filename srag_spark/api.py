@@ -76,7 +76,6 @@ from srag_spark.schema import TRANSCRIPTS_SCHEMA
 from srag_spark.sources import fsio
 from srag_spark.sources.tables import (
     _MANIFEST_DIR,
-    StagedConflict,
     _with_commit_retries,
     commit_manifest,
     delete_by_key,
@@ -92,6 +91,14 @@ from srag_spark.sources.tables import (
 )
 
 _CHUNK_KEY = ["doc_id", "segment_index"]
+
+
+class StagedConflict(RuntimeError):
+    """A staged ingest cannot be published or abandoned: one of its
+    tables moved past the version the stage recorded (another engine
+    mutation ran while it was staged, against the single-writer
+    contract).  Nothing is published or unwound; the stage record stays
+    for inspection."""
 
 
 class SragEngine:
@@ -527,9 +534,9 @@ class SragEngine:
     def publish_ingest(self, staging_id: str) -> None:
         """Write–audit–publish, step 3: atomically make the staged
         ingest visible by publishing the engine snapshot.  Raises
-        :class:`~srag_spark.sources.tables.StagedConflict` if any table
-        moved past its staged version (a concurrent mutation violated
-        the single-writer contract) — nothing is published then."""
+        :class:`StagedConflict` if any table moved past its staged
+        version (a concurrent mutation violated the single-writer
+        contract) — nothing is published then."""
         rec = self._wap_record(staging_id)
         current = self._table_versions()
         for name, v in rec["staged"].items():
@@ -549,7 +556,8 @@ class SragEngine:
         manifest-only rollbacks (instant at any table size — nothing on
         the data path moves; a table the stage CREATED rolls to an empty
         snapshot).  The staged commit dirs become vacuumable garbage.
-        Raises StagedConflict if a table moved past its staged version."""
+        Raises :class:`StagedConflict` if a table moved past its staged
+        version."""
         rec = self._wap_record(staging_id)
         current = self._table_versions()
         for name, v in rec["staged"].items():

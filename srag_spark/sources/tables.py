@@ -45,8 +45,13 @@ plus a tiny manifest layer:
   committed atomically with the first data write — a table can never
   exist with data but no layout record;
 * superseded data dirs stay on storage as older snapshots (time travel
-  for free); ``vacuum`` drops everything unreferenced by the latest
-  manifest.
+  for free); ``vacuum`` drops every data dir the kept manifests do not
+  reference — whole commits, superseded bucket dirs, and the dead
+  attempt dirs a retried merge task leaves;
+* there is no staging here: write–audit–publish lives one level up, in
+  ``api.SragEngine.stage_ingest`` / ``publish_ingest`` /
+  ``abandon_ingest``, whose engine manifest pins the table versions
+  readers see.
 
 Concurrency: optimistic compare-and-publish.  Each commit pins the
 snapshot version it was derived from; if another writer published in
@@ -335,12 +340,13 @@ def upsert_by_key(
     deletes: DataFrame | None = None,
 ) -> int:
     """MERGE-INTO-equivalent: replace rows matching incoming keys, insert
-    the rest (right-biased upsert, S4 semantics).  Reads and rewrites ONLY
-    the key-hash buckets touched by ``incoming``; publishes atomically via
-    the manifest.  Because merged buckets are written to a NEW directory
-    (never the one being read), no lineage break / checkpoint is needed
-    and a mid-write crash leaves the old snapshot intact.  Returns the
-    number of incoming rows merged (after the in-batch key dedup).
+    the rest (right-biased upsert, S4 semantics).  ONE commit
+    (:func:`_merge_once`): the bucket merge job reads and rewrites ONLY
+    the key-hash buckets touched by ``incoming``, then the next manifest
+    publishes them atomically.  Merged buckets land in NEW directories
+    (never the ones being read), so a mid-write crash leaves the old
+    snapshot intact.  Returns the number of incoming rows merged (after
+    the in-batch key dedup).
 
     ``deletes`` (optional) replaces whole ENTITIES in the same commit:
     every existing row whose ``deletes.columns`` values appear in
@@ -428,44 +434,28 @@ def _next_body(manifest: dict, touched=(), **changes) -> dict:
     return {**body, **changes}
 
 
-def _merge_once(spark, path, incoming, key_cols, deletes, n_buckets) -> int:
-    """One keyed merge commit: :func:`_prepare_merge`, then publish
-    pinned to the snapshot it was derived from.  Returns the incoming
-    rows merged."""
-    prep = _prepare_merge(spark, path, incoming, key_cols, deletes, n_buckets)
-    if prep is None:
-        return 0
-    commit_manifest(spark, path, prep["body"], expected_prev=prep["expected_prev"])
-    return prep["rows_in"]
-
-
-def _prepare_merge(
+def _merge_once(
     spark: SparkSession,
     path: str,
     incoming: DataFrame | None,
     key_cols: list[str],
     deletes: DataFrame | None,
     n_buckets: int,
-) -> dict | None:
-    """The write half of every keyed commit: merge ``incoming`` (or None)
-    and ``deletes`` (entity keys, or None) against the current snapshot
-    in one bucket merge job (:func:`_merge_buckets`), WITHOUT publishing.
-    A missing table merges as an empty snapshot with ``key_cols[0]`` as
-    its bucket column.  Returns everything a publisher (direct commit or
-    WAP staging) needs, or None when a delete finds nothing to commit
-    (no table, or no live bucket holds a key)::
-
-        {"body": <manifest body>, "expected_prev": <base version>,
-         "touched": [bucket ids], "base_touched_dirs": {bucket: dir|None},
-         "rows_in": <incoming rows merged>}
-
-    The data dirs are invisible to readers until some manifest references
-    them — this is exactly the property write–audit–publish exploits."""
+) -> int:
+    """One keyed merge commit: merge ``incoming`` (or None) and
+    ``deletes`` (entity keys, or None) against the current snapshot in
+    one bucket merge job (:func:`_merge_buckets`), then publish the next
+    manifest pinned to the snapshot it was derived from.  A missing
+    table merges as an empty snapshot with ``key_cols[0]`` as its bucket
+    column.  Returns the incoming rows merged; 0, with nothing
+    committed, when a delete finds nothing to do (no table, or no live
+    bucket holds a key).  The new data dirs stay invisible to readers
+    until the publish."""
     _arrow_fs(path)  # an unsupported URI fails here, before any job
     manifest = read_manifest(spark, path)
     if manifest is None:
         if incoming is None:
-            return None
+            return 0
         n_buckets, bcol = _layout(None, key_cols, n_buckets)
         manifest = {
             "version": 0,
@@ -482,7 +472,7 @@ def _prepare_merge(
         if not live:  # nothing stored, nothing to delete
             deletes = None
     if incoming is None and deletes is None:
-        return None
+        return 0
 
     # schema evolution (Iceberg add-column semantics): new incoming
     # columns widen the table schema as nullable; incoming batches may
@@ -498,30 +488,26 @@ def _prepare_merge(
     )
     # incoming buckets are always rewritten; delete-only buckets only if
     # they are live
-    touched = sorted(b for b, _, _, added in results if added or str(b) in live)
+    touched = [b for b, _, _, added in results if added or str(b) in live]
     if incoming is None and not touched:
-        return None
+        return 0
     buckets = dict(live)
     for b, rel, rows, _ in results:
         if rows:
             buckets[str(b)] = rel
         else:  # every row died: the emptied bucket leaves the snapshot
             buckets.pop(str(b), None)
-    return {
-        "body": _next_body(
-            manifest,
-            touched,
-            # tables created before key recording learn their key here
-            key_cols=manifest.get("key_cols")
-            or (list(key_cols) if incoming is not None else None),
-            schema=schema.json(),
-            buckets=buckets,
-        ),
-        "expected_prev": manifest["version"],
-        "touched": touched,
-        "base_touched_dirs": {str(b): live.get(str(b)) for b in touched},
-        "rows_in": sum(added for _, _, _, added in results),
-    }
+    body = _next_body(
+        manifest,
+        touched,
+        # tables created before key recording learn their key here
+        key_cols=manifest.get("key_cols")
+        or (list(key_cols) if incoming is not None else None),
+        schema=schema.json(),
+        buckets=buckets,
+    )
+    commit_manifest(spark, path, body, expected_prev=manifest["version"])
+    return sum(added for _, _, _, added in results)
 
 
 # ---------------------------------------------------------------------------
@@ -1309,192 +1295,6 @@ def rollback(spark: SparkSession, path: str, to_version: int) -> int:
     return _with_commit_retries(once)
 
 
-# ---------------------------------------------------------------------------
-# write–audit–publish (WAP): staged commits
-# ---------------------------------------------------------------------------
-class StagedConflict(RuntimeError):
-    """The table changed since this snapshot was staged in a way that
-    cannot be rebased: a concurrent commit rewrote one of the staged
-    buckets, changed the bucket layout, or evolved a column type.  The
-    staged snapshot stays intact — re-stage the batch against the fresh
-    table (the audit must rerun anyway: its subject changed)."""
-
-
-def _staged_path(path: str, staging_id: str) -> str:
-    if not staging_id or "/" in staging_id:
-        raise ValueError(f"invalid staging id {staging_id!r}")
-    return f"{path}/{_MANIFEST_DIR}/staged-{staging_id}.json"
-
-
-def stage_upsert(
-    spark: SparkSession,
-    path: str,
-    incoming: DataFrame,
-    key_cols: list[str],
-    n_buckets: int = DEFAULT_KEY_BUCKETS,
-) -> str:
-    """Write–audit–publish, step 1 (Iceberg's WAP workflow): run the full
-    :func:`upsert_by_key` merge and land the merged bucket dirs, but
-    record the would-be manifest as a STAGED snapshot
-    (``_manifests/staged-<id>.json``) instead of publishing it.  Readers
-    of the table see nothing; auditors read the candidate state via
-    :func:`read_staged`, then either :func:`publish_staged` (atomic, with
-    disjoint-bucket rebase) or :func:`abandon_staged`.  Returns the
-    staging id.
-
-    This is the training-data ingest gate: land a 10 TB batch, run
-    contamination / quality / volume audits against exactly the bytes
-    that would go live, and only then flip the snapshot — a failed audit
-    costs one vacuum, never a rollback of live data.
-
-    Scale shape: identical to ``upsert_by_key`` (the data write IS the
-    upsert write); staging adds one small JSON object.  Staged data dirs
-    are protected from :func:`vacuum` until the stage is published or
-    abandoned."""
-    prep = _prepare_merge(spark, path, incoming, key_cols, None, n_buckets)
-    staging_id = uuid.uuid4().hex
-    staged = {
-        "base_version": prep["expected_prev"],
-        "touched": [int(b) for b in prep["touched"]],
-        "base_touched_dirs": prep["base_touched_dirs"],
-        "body": prep["body"],
-    }
-    tmp = f"{path}/{_MANIFEST_DIR}/.tmp-{uuid.uuid4().hex}.json"
-    fsio.write_text(spark, tmp, json.dumps(staged, sort_keys=True))
-    if not fsio.rename_atomic(spark, tmp, _staged_path(path, staging_id)):
-        fsio.delete(spark, tmp, recursive=False)
-        raise RuntimeError(f"could not record staged snapshot at {path}")
-    return staging_id
-
-
-def _read_staged_record(spark: SparkSession, path: str, staging_id: str) -> dict:
-    txt = fsio.read_text_or_none(spark, _staged_path(path, staging_id))
-    if txt is None:
-        raise FileNotFoundError(
-            f"no staged snapshot {staging_id!r} at {path} (published, "
-            "abandoned, or never staged)"
-        )
-    return json.loads(txt)
-
-
-def list_staged(spark: SparkSession, path: str) -> dict[str, dict]:
-    """Pending staged snapshots: ``{staging_id: {"base_version": int,
-    "touched": [bucket ids]}}``."""
-    out = {}
-    for n in fsio.list_names(spark, f"{path}/{_MANIFEST_DIR}"):
-        if n.startswith("staged-") and n.endswith(".json"):
-            txt = fsio.read_text_or_none(spark, f"{path}/{_MANIFEST_DIR}/{n}")
-            if txt is not None:
-                st = json.loads(txt)
-                out[n[7:-5]] = {
-                    "base_version": st["base_version"],
-                    "touched": st["touched"],
-                }
-    return out
-
-
-def read_staged(
-    spark: SparkSession,
-    path: str,
-    staging_id: str,
-    buckets: list[int] | None = None,
-) -> DataFrame:
-    """The AUDIT read: the table exactly as it would look if the staged
-    snapshot were published now (as of its base version).  Pass
-    ``buckets=touched`` (from :func:`list_staged`) to audit only the
-    buckets the staged batch rewrote — the usual shape for per-batch
-    quality gates on a table far larger than any one batch."""
-    return scan_manifest(
-        spark, path, _read_staged_record(spark, path, staging_id)["body"], buckets
-    )
-
-
-def publish_staged(
-    spark: SparkSession,
-    path: str,
-    staging_id: str,
-) -> int:
-    """Write–audit–publish, step 3: atomically make the staged snapshot
-    the table's latest.  If the table has not moved since staging, the
-    recorded manifest body publishes as-is.  If concurrent commits landed
-    in DISJOINT buckets, the stage is REBASED onto the latest snapshot
-    (Iceberg cherry-pick validation): the staged buckets' dirs overlay
-    the latest manifest, schemas merge additively, and both writers'
-    rows survive.  A concurrent rewrite of a staged bucket, a layout
-    change, or a column-type conflict raises :class:`StagedConflict` —
-    the staged data is untouched and the batch must be re-staged.
-    Returns the published version; the staged record is removed."""
-    st = _read_staged_record(spark, path, staging_id)
-
-    def once() -> int:
-        latest = read_manifest(spark, path)
-        latest_v = latest["version"] if latest is not None else 0
-        if latest_v == st["base_version"]:
-            body = st["body"]
-        else:
-            body = _rebase_staged(latest, st, path)
-        commit_manifest(spark, path, body, expected_prev=latest_v)
-        return latest_v + 1
-
-    version = _with_commit_retries(once)
-    fsio.delete(spark, _staged_path(path, staging_id), recursive=False)
-    return version
-
-
-def _rebase_staged(latest: dict | None, st: dict, path: str) -> dict:
-    """Overlay a staged snapshot onto a manifest newer than its base.
-    Sound exactly when no concurrent commit touched a staged bucket:
-    the staged dirs were merged from base-version bucket contents, so if
-    those buckets are byte-identical in ``latest`` (same dirs — dirs are
-    immutable once written), overlaying reproduces what staging against
-    ``latest`` would have produced, bucket by bucket."""
-    staged_body = st["body"]
-    if latest is None:
-        raise StagedConflict(
-            f"staged snapshot was derived from v{st['base_version']} of "
-            f"{path}, but the table no longer exists"
-        )
-    if (
-        latest["n_buckets"] != staged_body["n_buckets"]
-        or latest["bucket_col"] != staged_body["bucket_col"]
-    ):
-        raise StagedConflict(
-            f"bucket layout of {path} changed since staging "
-            f"(v{st['base_version']} → v{latest['version']}) — re-stage"
-        )
-    base_dirs = st["base_touched_dirs"]
-    for b in st["touched"]:
-        if latest["buckets"].get(str(b)) != base_dirs.get(str(b)):
-            raise StagedConflict(
-                f"bucket {b} of {path} was rewritten since staging "
-                f"(v{st['base_version']} → v{latest['version']}) — re-stage"
-            )
-    try:
-        merged = _merge_schemas(
-            StructType.fromJson(json.loads(latest["schema"])),
-            StructType.fromJson(json.loads(staged_body["schema"])),
-        )
-    except ValueError as exc:
-        raise StagedConflict(f"schema conflict rebasing onto {path}: {exc}")
-    buckets = dict(latest["buckets"])
-    for b in st["touched"]:
-        buckets[str(b)] = staged_body["buckets"][str(b)]
-    return _next_body(
-        latest,
-        st["touched"],
-        key_cols=latest.get("key_cols") or staged_body.get("key_cols"),
-        schema=merged.json(),
-        buckets=buckets,
-    )
-
-
-def abandon_staged(spark: SparkSession, path: str, staging_id: str) -> None:
-    """Write–audit–publish, the failed-audit exit: drop the staged
-    record.  The table never saw the batch; the staged data dirs become
-    ordinary vacuumable garbage."""
-    fsio.delete(spark, _staged_path(path, staging_id), recursive=False)
-
-
 def vacuum(
     spark: SparkSession,
     path: str,
@@ -1502,9 +1302,13 @@ def vacuum(
     min_age_seconds: float = 3600.0,
 ) -> int:
     """Drop data directories unreferenced by the ``keep_manifests`` most
-    recent snapshots, plus older manifest files.  Returns the number of
-    data dirs removed.  Run out-of-band (never required for correctness —
-    superseded dirs are invisible to readers).
+    recent snapshots, plus older manifest files.  Liveness is per
+    directory, not per commit: inside a commit that still holds a live
+    bucket, the bucket dirs a later commit superseded and the attempt
+    dirs no manifest references (a retried merge task's first write) go
+    too.  Returns the number of data dirs removed.  Run out-of-band
+    (never required for correctness — superseded dirs are invisible to
+    readers).
 
     ``min_age_seconds`` is the ORPHAN RETENTION guard (the same reason
     Iceberg's remove_orphan_files defaults to a 3-day cutoff): a
@@ -1521,30 +1325,32 @@ def vacuum(
         return 0
     tagged = set(list_tags(spark, path).values())
     keep = sorted(set(versions[-keep_manifests:]) | (tagged & set(versions)))
-    live_commits: set[str] = set()
+    live: set[str] = set()
     for v in keep:
-        m = read_manifest(spark, path, v)
         # engine-level manifests (api.SragEngine) reuse this protocol but
         # carry no data dirs — only their manifest files age out
-        for d in m.get("buckets", {}).values():
-            live_commits.add(d.split("/")[1])  # data/<commit>/_kb=N
-    # pending WAP stages (stage_upsert) pin every dir their candidate
-    # snapshot references — the staged commit itself plus the base dirs
-    # their audit read still needs — until published or abandoned
-    for sid in list_staged(spark, path):
-        st = _read_staged_record(spark, path, sid)
-        for d in st["body"].get("buckets", {}).values():
-            live_commits.add(d.split("/")[1])
+        live.update(read_manifest(spark, path, v).get("buckets", {}).values())
+    # the dirs above a live dir: data/<commit> and, for the bucket merge
+    # kernel's data/<commit>/_kb=N/<attempt>, data/<commit>/_kb=N
+    holds = {
+        "/".join(parts[:i])
+        for parts in (d.split("/") for d in live)
+        for i in range(2, len(parts))
+    }
     cutoff = fsio.current_time_ms(spark) - int(min_age_seconds * 1000)
     removed = 0
-    for name in fsio.list_names(spark, f"{path}/data"):
-        if name in live_commits:
-            continue
-        mtime = fsio.modification_time_ms(spark, f"{path}/data/{name}")
-        if mtime is not None and mtime > cutoff:
-            continue  # possibly a concurrent writer's unpublished commit
-        fsio.delete(spark, f"{path}/data/{name}")
-        removed += 1
+    pending = ["data"]
+    while pending:
+        rel = pending.pop()
+        for e in fsio.list_status(spark, f"{path}/{rel}"):
+            child = f"{rel}/{e['name']}"
+            if not e["is_dir"] or child in live:
+                continue  # a commit's _SUCCESS marker, or a live dir
+            if child in holds:
+                pending.append(child)  # holds a live dir: look inside
+            elif e["mtime_ms"] <= cutoff:  # a younger one may be mid-commit
+                fsio.delete(spark, f"{path}/{child}")
+                removed += 1
     for v in versions[:-keep_manifests]:
         if v in tagged:
             continue  # tagged snapshots never age out

@@ -177,12 +177,10 @@ def test_upsert_leaves_one_file_per_touched_bucket(spark, tmp_path):
     assert len(changed) == 1
 
 
-def test_retried_bucket_attempts_land_in_distinct_dirs(spark, tmp_path, monkeypatch):
-    """Every bucket runs twice, as when a task attempt fails after its
-    write and Spark retries it: each attempt writes its own directory,
-    and the manifest commits the rows of the attempt whose result the
-    job returned, once."""
-    path = str(tmp_path / "t")
+def _upsert_with_retried_buckets(spark, path, monkeypatch):
+    """Seed a 2-bucket table, then upsert a batch whose every bucket
+    kernel runs twice, as when a task attempt fails after its write and
+    Spark retries it.  Returns the live buckets before the upsert."""
     rows = [("a", 0, "a0"), ("b", 0, "b0"), ("c", 1, "c1")]
     upsert_by_key(
         spark, path, spark.createDataFrame(rows, "doc_id string, seg int, text string"),
@@ -207,6 +205,22 @@ def test_retried_bucket_attempts_land_in_distinct_dirs(spark, tmp_path, monkeypa
         KEY,
     )
     monkeypatch.undo()
+    return before
+
+
+MERGED = [("a", 0, "a0-new"), ("b", 0, "b0"), ("c", 1, "c1"), ("d", 2, "d2")]
+
+
+def _merged_rows(spark, path):
+    return sorted((r["doc_id"], r["seg"], r["text"]) for r in read_table(spark, path).collect())
+
+
+def test_retried_bucket_attempts_land_in_distinct_dirs(spark, tmp_path, monkeypatch):
+    """Each attempt of a retried bucket writes its own directory, and
+    the manifest commits the rows of the attempt whose result the job
+    returned, once."""
+    path = str(tmp_path / "t")
+    before = _upsert_with_retried_buckets(spark, path, monkeypatch)
     m = read_manifest(spark, path)
     touched = {b: d for b, d in m["buckets"].items() if before.get(b) != d}
     (commit,) = {d.split("/")[1] for d in touched.values()}
@@ -215,8 +229,42 @@ def test_retried_bucket_attempts_land_in_distinct_dirs(spark, tmp_path, monkeypa
         assert len(attempts) == 2, attempts
         assert len({f.rsplit("/", 2)[1] for f in attempts}) == 2
         assert f"{path}/{d}/part-00000.parquet" in attempts
-    got = sorted((r["doc_id"], r["seg"], r["text"]) for r in read_table(spark, path).collect())
-    assert got == [("a", 0, "a0-new"), ("b", 0, "b0"), ("c", 1, "c1"), ("d", 2, "d2")]
+    assert _merged_rows(spark, path) == MERGED
+
+
+def test_vacuum_reclaims_dead_attempts_of_a_live_commit(spark, tmp_path, monkeypatch):
+    """The failed attempts' dirs sit under a commit the manifest still
+    references; vacuum judges liveness per dir, so it removes them and
+    leaves exactly the committed attempt of each live bucket."""
+    path = str(tmp_path / "t")
+    before = _upsert_with_retried_buckets(spark, path, monkeypatch)
+    live = read_manifest(spark, path)["buckets"]
+    touched = [b for b, d in live.items() if before.get(b) != d]
+    assert T.vacuum(spark, path, min_age_seconds=0) >= len(touched)
+    on_disk = glob.glob(f"{path}/data/*/{T.BUCKET_COL}=*/*")
+    assert sorted(on_disk) == sorted(f"{path}/{d}" for d in live.values())
+    assert _merged_rows(spark, path) == MERGED
+
+
+def test_vacuum_reclaims_superseded_buckets_of_a_spark_commit(spark, tmp_path):
+    """A Spark-written commit (``rewrite_table``) references its
+    ``_kb=N`` dirs directly; once a merge supersedes one of them, vacuum
+    removes that dir while the commit's other buckets stay live."""
+    path = str(tmp_path / "t")
+    schema = "doc_id string, seg int, text string"
+    rows = [("a", 0, "a0"), ("b", 0, "b0"), ("c", 1, "c1")]
+    upsert_by_key(spark, path, spark.createDataFrame(rows, schema), KEY, n_buckets=2)
+    rewrite_table(spark, path)
+    spark_written = read_manifest(spark, path)["buckets"]
+    upsert_by_key(spark, path, spark.createDataFrame([("a", 0, "a0-new")], schema), KEY)
+    live = read_manifest(spark, path)["buckets"]
+    assert 0 < sum(spark_written[b] == d for b, d in live.items()) < len(live)
+    assert T.vacuum(spark, path, min_age_seconds=0) >= 2
+    bucket_dirs = glob.glob(f"{path}/data/*/{T.BUCKET_COL}=*")
+    assert sorted(bucket_dirs) == sorted(
+        f"{path}/" + "/".join(d.split("/")[:3]) for d in live.values()
+    )
+    assert _merged_rows(spark, path) == [("a", 0, "a0-new"), ("b", 0, "b0"), ("c", 1, "c1")]
 
 
 def test_merge_after_an_observation(spark, tmp_path):

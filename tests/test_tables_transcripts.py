@@ -336,17 +336,11 @@ def test_sink_model_based_random_op_sequences(spark, tmp_path):
     """Property test: any sequence of upsert/delete/rewrite batches must
     leave the table equal to a dict model with right-biased upsert
     semantics (rewrite_table — compaction or bucket-count evolution —
-    is a logical no-op anywhere in the sequence; a staged upsert equals
-    a plain upsert when published and a no-op when abandoned)."""
+    is a logical no-op anywhere in the sequence)."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from srag_spark.sources.tables import (
-        abandon_staged,
-        publish_staged,
-        rewrite_table,
-        stage_upsert,
-    )
+    from srag_spark.sources.tables import rewrite_table
 
     schema = "doc_id string, segment_index int, text string"
     keys = st.sampled_from([f"k{i}" for i in range(6)])
@@ -357,13 +351,12 @@ def test_sink_model_based_random_op_sequences(spark, tmp_path):
     upsert_op = st.tuples(st.just("upsert"), batch)
     delete_op = st.tuples(st.just("delete"), st.lists(keys, min_size=1, max_size=3))
     rewrite_op = st.tuples(st.just("rewrite"), st.sampled_from([None, 2, 8]))
-    wap_op = st.tuples(st.just("wap"), st.tuples(st.booleans(), batch))
 
     counter = [0]
 
     @settings(max_examples=6, deadline=None,
               suppress_health_check=list(HealthCheck))
-    @given(ops=st.lists(st.one_of(upsert_op, delete_op, rewrite_op, wap_op),
+    @given(ops=st.lists(st.one_of(upsert_op, delete_op, rewrite_op),
                         min_size=1, max_size=5))
     def run(ops):
         counter[0] += 1
@@ -382,22 +375,6 @@ def test_sink_model_based_random_op_sequences(spark, tmp_path):
                 )
                 model.update(dedup)
                 wrote = True
-            elif kind == "wap":
-                publish, rows = payload
-                dedup = {(k, s): t for k, s, t in rows}
-                sid = stage_upsert(
-                    spark, path,
-                    spark.createDataFrame(
-                        [(k, s, t) for (k, s), t in dedup.items()], schema
-                    ),
-                    ["doc_id", "segment_index"], n_buckets=4,
-                )
-                if publish:
-                    publish_staged(spark, path, sid)
-                    model.update(dedup)
-                    wrote = True
-                else:
-                    abandon_staged(spark, path, sid)
             elif kind == "rewrite":
                 if wrote:  # rewrite of a never-written table is undefined
                     rewrite_table(spark, path, n_buckets=payload)
@@ -432,11 +409,11 @@ def test_concurrent_writer_race_retries_without_lost_update(spark, tmp_path, mon
 
     # the seam between the bucket merge job's data write and the
     # manifest publish
-    real_prepare = T._prepare_merge
+    real_merge = T._merge_buckets
     state = {"injected": False}
 
     def hooked(*args):
-        out = real_prepare(*args)
+        out = real_merge(*args)
         if not state["injected"]:
             state["injected"] = True
             # interloper sneaks a commit in after the victim wrote its
@@ -450,7 +427,7 @@ def test_concurrent_writer_race_retries_without_lost_update(spark, tmp_path, mon
             )
         return out
 
-    monkeypatch.setattr(T, "_prepare_merge", hooked)
+    monkeypatch.setattr(T, "_merge_buckets", hooked)
     upsert_by_key(
         spark, path,
         spark.createDataFrame(

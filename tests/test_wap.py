@@ -1,11 +1,12 @@
-"""Write–audit–publish staged commits (Iceberg WAP workflow).
+"""Write–audit–publish at engine scope (Iceberg's WAP workflow over the
+engine manifest): ``SragEngine.stage_ingest`` lands a whole four-table
+ingest without publishing it, the audit reads the candidate through
+``staged_tables`` / ``staged_changelog``, then ``publish_ingest`` flips
+the engine snapshot or ``abandon_ingest`` unwinds it.
 
-The training-data ingest gate: land a batch as a staged snapshot, audit
-exactly the bytes that would go live, then publish atomically or abandon.
-Covers: invisibility until publish, audit reads (full + touched-bucket),
-abandon + vacuum of abandoned data, vacuum protection of pending stages,
-disjoint-bucket rebase over concurrent commits, conflict detection on
-overlapping buckets, initial-load staging, and schema-evolution rebase.
+Covers: invisibility until publish, abandon + vacuum of the abandoned
+batch, vacuum while a stage is pending, staging into a virgin engine,
+and the conflict raised when the engine moved under a stage.
 """
 
 from __future__ import annotations
@@ -13,176 +14,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from srag_spark.sources.tables import (
-    StagedConflict,
-    abandon_staged,
-    list_staged,
-    publish_staged,
-    read_manifest,
-    read_staged,
-    read_table,
-    stage_upsert,
-    upsert_by_key,
-    vacuum,
-)
-
-SCHEMA = "doc_id string, text string"
-KEYS = ["doc_id"]
+from srag_spark.api import StagedConflict
 
 
-def rows_of(spark, path):
-    return {r["doc_id"]: r["text"] for r in read_table(spark, path).collect()}
-
-
-def bucket_of(spark, key: str, n_buckets: int) -> int:
-    return (
-        spark.range(1)
-        .select(F.pmod(F.xxhash64(F.lit(key)), F.lit(n_buckets)).cast("int"))
-        .first()[0]
-    )
-
-
-def keys_in_buckets(spark, n_buckets: int, same: bool, base: str = "d"):
-    """Two fresh keys landing in the same (or different) hash bucket."""
-    first = f"{base}0"
-    b0 = bucket_of(spark, first, n_buckets)
-    for i in range(1, 10_000):
-        k = f"{base}{i}"
-        if (bucket_of(spark, k, n_buckets) == b0) == same:
-            return first, k
-    raise AssertionError("no key pair found")
-
-
-def test_stage_audit_publish_roundtrip(spark, tmp_path):
-    path = str(tmp_path / "t")
-    upsert_by_key(
-        spark, path,
-        spark.createDataFrame([("a", "1"), ("b", "2")], SCHEMA),
-        KEYS, n_buckets=4,
-    )
-    v1 = read_manifest(spark, path)["version"]
-
-    sid = stage_upsert(
-        spark, path,
-        spark.createDataFrame([("b", "2x"), ("c", "3")], SCHEMA),
-        KEYS,
-    )
-    # invisible to readers until published
-    assert rows_of(spark, path) == {"a": "1", "b": "2"}
-    assert read_manifest(spark, path)["version"] == v1
-
-    # the audit sees the candidate state; touched-bucket audit is a subset
-    staged = {r["doc_id"]: r["text"] for r in read_staged(spark, path, sid).collect()}
-    assert staged == {"a": "1", "b": "2x", "c": "3"}
-    info = list_staged(spark, path)[sid]
-    assert info["base_version"] == v1
-    touched_rows = {
-        r["doc_id"]
-        for r in read_staged(spark, path, sid, buckets=info["touched"]).collect()
-    }
-    assert {"b", "c"} <= touched_rows
-
-    v2 = publish_staged(spark, path, sid)
-    assert v2 == v1 + 1
-    assert rows_of(spark, path) == {"a": "1", "b": "2x", "c": "3"}
-    assert list_staged(spark, path) == {}
-    # publish is terminal: the record is gone
-    with pytest.raises(FileNotFoundError):
-        read_staged(spark, path, sid)
-
-
-def test_abandon_then_vacuum_reclaims(spark, tmp_path):
-    path = str(tmp_path / "t")
-    upsert_by_key(
-        spark, path, spark.createDataFrame([("a", "1")], SCHEMA), KEYS, n_buckets=4
-    )
-    sid = stage_upsert(
-        spark, path, spark.createDataFrame([("z", "9")], SCHEMA), KEYS
-    )
-    abandon_staged(spark, path, sid)
-    assert rows_of(spark, path) == {"a": "1"}
-    assert list_staged(spark, path) == {}
-    # the abandoned stage's data dir is garbage now
-    assert vacuum(spark, path, min_age_seconds=0) >= 1
-    assert rows_of(spark, path) == {"a": "1"}
-
-
-def test_vacuum_protects_pending_stage(spark, tmp_path):
-    path = str(tmp_path / "t")
-    upsert_by_key(
-        spark, path, spark.createDataFrame([("a", "1")], SCHEMA), KEYS, n_buckets=4
-    )
-    sid = stage_upsert(
-        spark, path, spark.createDataFrame([("z", "9")], SCHEMA), KEYS
-    )
-    # aggressive vacuum while the stage is pending must not eat its dirs
-    vacuum(spark, path, min_age_seconds=0)
-    staged = {r["doc_id"]: r["text"] for r in read_staged(spark, path, sid).collect()}
-    assert staged == {"a": "1", "z": "9"}
-    publish_staged(spark, path, sid)
-    assert rows_of(spark, path) == {"a": "1", "z": "9"}
-
-
-def test_publish_rebases_over_disjoint_commit(spark, tmp_path):
-    path = str(tmp_path / "t")
-    n = 8
-    k_stage, k_live = keys_in_buckets(spark, n, same=False)
-    upsert_by_key(
-        spark, path,
-        spark.createDataFrame([(k_stage, "s0"), (k_live, "l0")], SCHEMA),
-        KEYS, n_buckets=n,
-    )
-    sid = stage_upsert(
-        spark, path, spark.createDataFrame([(k_stage, "s1")], SCHEMA), KEYS
-    )
-    # concurrent writer lands in a bucket the stage did not touch
-    upsert_by_key(
-        spark, path, spark.createDataFrame([(k_live, "l1")], SCHEMA), KEYS
-    )
-    publish_staged(spark, path, sid)
-    # both writers' rows survive the rebase
-    assert rows_of(spark, path) == {k_stage: "s1", k_live: "l1"}
-
-
-def test_publish_conflicts_on_overlapping_bucket(spark, tmp_path):
-    path = str(tmp_path / "t")
-    n = 8
-    k1, k2 = keys_in_buckets(spark, n, same=True)
-    upsert_by_key(
-        spark, path, spark.createDataFrame([(k1, "a")], SCHEMA), KEYS, n_buckets=n
-    )
-    sid = stage_upsert(
-        spark, path, spark.createDataFrame([(k1, "staged")], SCHEMA), KEYS
-    )
-    # concurrent writer rewrites the SAME bucket (same key's bucket)
-    upsert_by_key(
-        spark, path, spark.createDataFrame([(k2, "live")], SCHEMA), KEYS
-    )
-    with pytest.raises(StagedConflict):
-        publish_staged(spark, path, sid)
-    # conflict is non-destructive: live table intact, stage re-readable
-    assert rows_of(spark, path) == {k1: "a", k2: "live"}
-    assert sid in list_staged(spark, path)
-    abandon_staged(spark, path, sid)
-
-
-def test_initial_load_staging(spark, tmp_path):
-    path = str(tmp_path / "t")
-    sid = stage_upsert(
-        spark, path,
-        spark.createDataFrame([("a", "1"), ("b", "2")], SCHEMA),
-        KEYS, n_buckets=4,
-    )
-    # table does not exist yet for readers
-    with pytest.raises(FileNotFoundError):
-        read_table(spark, path)
-    assert publish_staged(spark, path, sid) == 1
-    assert rows_of(spark, path) == {"a": "1", "b": "2"}
-
-
-# ---------------------------------------------------------------------------
-# engine-scope WAP (SragEngine.stage_ingest / publish_ingest / abandon_ingest)
-# ---------------------------------------------------------------------------
 def _engine_docs(spark, rows):
     from srag_spark.schema import DOCUMENTS_SCHEMA
 
@@ -234,11 +68,37 @@ def test_engine_abandon_unwinds_and_reclaims(spark, tmp_path):
     assert {r["doc_id"] for r in eng.transcripts().collect()} == before
     assert eng.chunks().filter(F.col("doc_id") == "b").count() == 0
     # the abandoned batch's dirs are garbage; the live state survives vacuum
-    eng.vacuum(min_age_seconds=0)
+    assert eng.vacuum(min_age_seconds=0) >= 1
     assert {r["doc_id"] for r in eng.transcripts().collect()} == before
     # the engine keeps working after the unwind
     eng.ingest(_engine_docs(spark, [("c", TEXT_2)]))
     assert {r["doc_id"] for r in eng.transcripts().collect()} == before | {"c"}
+
+
+def test_engine_vacuum_keeps_pending_stage(spark, tmp_path):
+    """An aggressive vacuum while a stage is pending keeps both sides of
+    it: the candidate the audit reads and publishes, and the base an
+    abandon unwinds to."""
+    from srag_spark.api import SragEngine
+
+    eng = SragEngine(spark, str(tmp_path / "kb"), n_buckets=4)
+    eng.ingest(_engine_docs(spark, [("a", TEXT_1)]))
+    sid = eng.stage_ingest(_engine_docs(spark, [("b", TEXT_2)]))["staging_id"]
+    eng.vacuum(keep_manifests=1, min_age_seconds=0)
+    staged = eng.staged_tables(sid)
+    assert {r["doc_id"] for r in staged["transcripts"].collect()} == {"a", "b"}
+    assert staged["chunks"].filter(F.col("doc_id") == "b").count() >= 1
+    eng.publish_ingest(sid)
+    assert {r["doc_id"] for r in eng.transcripts().collect()} == {"a", "b"}
+
+    other = SragEngine(spark, str(tmp_path / "kb2"), n_buckets=4)
+    other.ingest(_engine_docs(spark, [("a", TEXT_1)]))
+    sid = other.stage_ingest(_engine_docs(spark, [("b", TEXT_2)]))["staging_id"]
+    other.vacuum(keep_manifests=1, min_age_seconds=0)
+    other.abandon_ingest(sid)
+    assert {r["doc_id"] for r in other.transcripts().collect()} == {"a"}
+    assert other.chunks().filter(F.col("doc_id") == "b").count() == 0
+    assert other.chunks().filter(F.col("doc_id") == "a").count() >= 1
 
 
 def test_engine_staged_initial_ingest_invisible(spark, tmp_path):
@@ -278,34 +138,3 @@ def test_engine_publish_conflicts_after_concurrent_mutation(spark, tmp_path):
         eng.publish_ingest(sid)
     with pytest.raises(StagedConflict):
         eng.abandon_ingest(sid)
-
-
-def test_rebase_merges_schema_evolution(spark, tmp_path):
-    path = str(tmp_path / "t")
-    n = 8
-    k_stage, k_live = keys_in_buckets(spark, n, same=False)
-    upsert_by_key(
-        spark, path,
-        spark.createDataFrame([(k_stage, "s0"), (k_live, "l0")], SCHEMA),
-        KEYS, n_buckets=n,
-    )
-    # stage adds column `lang`; concurrent commit adds column `score`
-    sid = stage_upsert(
-        spark, path,
-        spark.createDataFrame(
-            [(k_stage, "s1", "en")], "doc_id string, text string, lang string"
-        ),
-        KEYS,
-    )
-    upsert_by_key(
-        spark, path,
-        spark.createDataFrame(
-            [(k_live, "l1", 0.5)], "doc_id string, text string, score double"
-        ),
-        KEYS,
-    )
-    publish_staged(spark, path, sid)
-    got = {r["doc_id"]: r for r in read_table(spark, path).collect()}
-    assert set(got[k_stage].asDict()) == {"doc_id", "text", "lang", "score"}
-    assert (got[k_stage]["lang"], got[k_stage]["score"]) == ("en", None)
-    assert (got[k_live]["lang"], got[k_live]["score"]) == (None, 0.5)
